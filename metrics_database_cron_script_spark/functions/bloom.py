@@ -184,9 +184,12 @@ def bloom_pruned_anti_join(
     unpersisted before returning, so a build-once/probe-every-batch cron
     loop does not accumulate cached partitions across batches; the
     checkpointed blocks live only as long as the returned DataFrame.
-    Pass `eager=False` to keep the plan lazy — the caller then owns the
-    cache lifetime and should unpersist via `df.sparkSession.catalog`
-    (or a fresh session) between batches.
+    Pass `eager=False` to keep the result plan lazy — the caller then
+    owns the cache lifetime and should unpersist via
+    `df.sparkSession.catalog` (or a fresh session) between batches. Even
+    lazy, the call still runs the sketch build and the backstop-size
+    probe (`candidates.limit(...).count()`, which picks the broadcast or
+    shuffle backstop) as Spark jobs at call time.
     """
     # Both relations feed two consumers each (sketch build + backstop
     # join; negative + candidate branches) — persist so the batch is

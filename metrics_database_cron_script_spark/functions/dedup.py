@@ -12,6 +12,7 @@ by construction.
 
 from __future__ import annotations
 
+import functools
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Window
@@ -102,6 +103,7 @@ def choose_minhash_params(
 #: CTEs in plans/queries_llm.py derive their banding from this constant, so
 #: the tuner is the single source of truth.
 MINHASH_DEFAULTS = choose_minhash_params()
+_BAND = ["band", "band_sig"]  # the text modality's LSH bucket key
 
 
 def normalized_text() -> F.Column:
@@ -586,9 +588,13 @@ def connected_components(
        residual that phase 2's driver union-find absorbs regardless. The
        DIRECTED edge set is then CONTRACTED through the labels
        (self-loops dropped, deduped). Duplicate cliques collapse onto
-       their hubs here, so the residual is the tiny inter-cluster link
-       structure (measured at the 12.8 M-doc decade corpus: 13.0 M pairs
-       contract to a residual in the tens-to-hundreds of rows).
+       their hubs here, so on clique-heavy dedup graphs the residual is
+       the tiny inter-cluster link structure (measured at the 12.8 M-doc
+       decade corpus: 13.0 M pairs contract to a residual in the
+       tens-to-hundreds of rows). High-diameter (chain-like) graphs
+       barely contract: a path's residual is ~|E| rows, so past
+       _DRIVER_RESIDUAL_MAX the distributed loop below iterates on
+       nearly the whole edge set.
     2. SOLVE the residual. A residual at or under _DRIVER_RESIDUAL_MAX
        rows (it is already counted) is solved exactly with a driver-side
        union-find — the same bounded-collect budget a broadcast join
@@ -983,10 +989,8 @@ def minhash_components_star(
     `choose_minhash_params` when precision matters more than cost)."""
     if shingles is None:
         shingles = word_shingles(docs, hashed=False)
-    banded = lsh_bands_portable(
-        minhash_signatures_portable(shingles, num_hashes), num_hashes, band_size
-    )
-    return connected_components(star_edges(banded, ["band", "band_sig"]))
+    banded = _minhash_bands(shingles, True, num_hashes, band_size)[0]
+    return connected_components(star_edges(banded, _BAND))
 
 
 def minhash_components_star_refresh(
@@ -1006,17 +1010,13 @@ def minhash_components_star_refresh(
     `x_minhash_components_incremental` checks). At the 12.8 M-doc decade
     corpus the signature compute is ~90% of the 734 s full-recompute wall
     — this is the path that makes daily cluster maintenance viable."""
-    batch_bands = lsh_bands_portable(
-        minhash_signatures_portable(
-            word_shingles(batch_docs, hashed=False), num_hashes
-        ),
-        num_hashes,
-        band_size,
-    )
+    batch_bands = _minhash_bands(
+        word_shingles(batch_docs, hashed=False), True, num_hashes, band_size
+    )[0]
     all_bands = index_bands.select("doc_id", "band", "band_sig").unionByName(
         batch_bands
     )
-    return connected_components(star_edges(all_bands, ["band", "band_sig"]))
+    return connected_components(star_edges(all_bands, _BAND))
 
 
 def minhash_components_verified(
@@ -1047,12 +1047,8 @@ def minhash_components_verified(
     if own_persist:
         shingles = word_shingles(docs, hashed=False).persist()
     try:
-        banded = lsh_bands_portable(
-            minhash_signatures_portable(shingles, num_hashes),
-            num_hashes,
-            band_size,
-        )
-        edges = star_edges(banded, ["band", "band_sig"])
+        banded = _minhash_bands(shingles, True, num_hashes, band_size)[0]
+        edges = star_edges(banded, _BAND)
         scored = verified_jaccard(shingles, edges)
         good = scored.filter(F.col("jaccard") >= min_jaccard).select(
             "doc_a", "doc_b"
@@ -1065,6 +1061,31 @@ def minhash_components_verified(
     finally:
         if own_persist:
             shingles.unpersist()
+
+
+def _hub_edges(
+    postings: DataFrame, bucket: list[str]
+) -> tuple[DataFrame, DataFrame]:
+    """The bucket-hub step shared by the full star-edge builders: per
+    bucket the hub is min(doc_id), and every other member contributes one
+    (bucket, doc_a=hub, doc_b=member) edge. Returns (hubs, edges)."""
+    hubs = postings.groupBy(*bucket).agg(F.min("doc_id").alias("doc_a"))
+    edges = (
+        postings.join(hubs, bucket)
+        .filter(F.col("doc_id") != F.col("doc_a"))
+        .select(*bucket, "doc_a", F.col("doc_id").alias("doc_b"))
+    )
+    return hubs, edges
+
+
+def _endpoint_ids(edges: DataFrame) -> DataFrame:
+    """Distinct doc_ids at either end of an edge relation: the keys a
+    scorer semi-restricts its store to."""
+    return (
+        edges.select(F.col("doc_a").alias("doc_id"))
+        .unionByName(edges.select(F.col("doc_b").alias("doc_id")))
+        .distinct()
+    )
 
 
 def scored_star_edges(
@@ -1081,8 +1102,9 @@ def scored_star_edges(
         (band, band_sig, doc_a, doc_b, jaccard)
 
     Keeping the bucket key on every edge is what makes the daily refresh
-    O(touched buckets): untouched buckets' edges carry forward verbatim
-    (anti-join on the bucket key), touched buckets are recomputed here.
+    O(batch): edges carry forward verbatim unless their bucket's hub is
+    displaced (`_refresh_star_edges`); displaced buckets are recomputed
+    here.
     Row count equals the band-index posting count minus one hub row per
     bucket — the state grows linearly with the index, never with pairs.
 
@@ -1111,13 +1133,8 @@ def scored_star_edges(
     can attribute wall time per stage (noop-materialize each). Never
     changes the plan — the frames are the same lazy objects the result
     is built from."""
-    hubs = bands.groupBy("band", "band_sig").agg(F.min("doc_id").alias("doc_a"))
-    edges = (
-        bands.join(hubs, ["band", "band_sig"])
-        .filter(F.col("doc_id") != F.col("doc_a"))
-        .select("band", "band_sig", "doc_a", F.col("doc_id").alias("doc_b"))
-    )
-    cols = ["band", "band_sig", "doc_a", "doc_b", "jaccard"]
+    hubs, edges = _hub_edges(bands, _BAND)
+    cols = [*_BAND, "doc_a", "doc_b", "jaccard"]
     if reuse_scores is not None:
         known = reuse_scores.select("doc_a", "doc_b", "jaccard").distinct()
         edges = edges.join(known, ["doc_a", "doc_b"], "left")
@@ -1133,11 +1150,7 @@ def scored_star_edges(
         # into the verification shuffle. In the full build (no reuse)
         # nearly every doc is an endpoint and the restriction would only
         # add a full-store shuffle — skip it there.
-        ids = (
-            pairs.select(F.col("doc_a").alias("doc_id"))
-            .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
+        ids = _endpoint_ids(pairs)
         # NO broadcast hint here (round-12, ADVICE r11): the only caller
         # of this reuse branch is refresh_verified_star_edges' DISPLACED-
         # bucket path, whose `misses` are ALL candidate edges of the
@@ -1183,30 +1196,57 @@ def lsh_bands(
     at the 12.8 M-doc decade corpus the 51 M-row index shrinks ~3× and
     every banding join shuffles longs. The portable (md5) path stays the
     oracle-checkable pipeline; this one is for scale runs."""
-    if num_hashes is None:
-        num_hashes = MINHASH_DEFAULTS.num_hashes
-    if band_size is None:
-        band_size = MINHASH_DEFAULTS.band_size
-    if num_hashes % band_size:
+    return _explode_bands(sigs, "minhash_", F.xxhash64, num_hashes, band_size)
+
+
+def _minhash_bands(
+    shingles: DataFrame,
+    portable: bool,
+    num_hashes: int | None = None,
+    band_size: int | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The hash-mode decision of the verified star path, made once: band
+    `shingles` in one mode's keyspace and return `(bands, store)`, the
+    store being the 8-byte xxhash64 shingle relation verification joins on.
+
+    - portable: md5-prefix signatures over RAW string shingles, hex
+      band_sigs; the store is the shingles' xxhash64 image.
+    - fast: `min(xxhash64(shingle, seed))` over pre-hashed bigint
+      shingles, 8-byte band_sigs; the store IS the input relation.
+
+    Shingles of the other mode's dtype would band into a keyspace the
+    persisted index never collides with — every cross-batch near-dup
+    silently missed — so they are rejected here."""
+    shingle_t = dict(shingles.dtypes).get("shingle")
+    if portable:
+        if shingle_t != "string":
+            raise ValueError(
+                "portable index (string band_sig) needs RAW batch shingles "
+                f"(word_shingles(hashed=False)); got {shingle_t} — md5 over "
+                "hash values would band into a disjoint keyspace"
+            )
+        bands = lsh_bands_portable(
+            minhash_signatures_portable(shingles, num_hashes),
+            num_hashes,
+            band_size,
+        )
+        return bands, shingles.select(
+            "doc_id", F.xxhash64("shingle").alias("shingle")
+        )
+    if shingle_t != "bigint":
         raise ValueError(
-            f"num_hashes={num_hashes} not divisible by band_size={band_size}"
+            "fast-path index (bigint band_sig) needs hashed batch shingles "
+            f"(word_shingles(hashed=True)); got {shingle_t}"
         )
-    n_bands = num_hashes // band_size
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                *[
-                    F.col(f"minhash_{b * band_size + j}")
-                    for j in range(band_size)
-                ]
-            ).alias("band_sig"),
-        )
-        for b in range(n_bands)
-    ]
-    return sigs.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bs")
-    ).select("doc_id", "bs.band", "bs.band_sig")
+    nh = num_hashes if num_hashes is not None else MINHASH_DEFAULTS.num_hashes
+    return lsh_bands(minhash_signatures(shingles, nh), nh, band_size), shingles
+
+
+def _index_is_portable(index_bands: DataFrame) -> bool:
+    """The hash mode a persisted band index was built in: a hex (string)
+    band_sig means the portable md5 pipeline, an 8-byte (bigint) one the
+    xxhash64 fast path."""
+    return dict(index_bands.dtypes).get("band_sig") == "string"
 
 
 def verified_star_state(
@@ -1248,26 +1288,154 @@ def verified_star_state(
       candidate sets differ slightly; the Jaccard guard makes both modes'
       precision equivalent, and refresh ≡ full holds per mode.
 
-    Callers writing all three outputs should persist/round-trip the
-    shingle relation first (two consumers in portable mode, signature +
-    verification consumers in both)."""
-    if portable:
-        if shingles is None:
-            shingles = word_shingles(docs, hashed=False)
-        bands = lsh_bands_portable(
-            minhash_signatures_portable(shingles, num_hashes),
-            num_hashes,
-            band_size,
-        )
-        store = shingles.select(
-            "doc_id", F.xxhash64("shingle").alias("shingle")
-        )
-        return bands, store, scored_star_edges(bands, store)
+    `shingles` of the other mode's dtype raise ValueError. Callers writing
+    all three outputs should persist/round-trip the shingle relation first
+    (two consumers in portable mode, signature + verification consumers in
+    both)."""
     if shingles is None:
-        shingles = word_shingles(docs, hashed=True)
-    nh = num_hashes if num_hashes is not None else MINHASH_DEFAULTS.num_hashes
-    bands = lsh_bands(minhash_signatures(shingles, nh), nh, band_size)
-    return bands, shingles, scored_star_edges(bands, shingles)
+        shingles = word_shingles(docs, hashed=not portable)
+    bands, store = _minhash_bands(shingles, portable, num_hashes, band_size)
+    return bands, store, scored_star_edges(bands, store)
+
+
+def _refresh_star_edges(
+    bucket: list[str],
+    index_postings: DataFrame,
+    index_edges: DataFrame,
+    batch_postings: DataFrame,
+    store: DataFrame,
+    score_col: str,
+    score,
+    rebuild,
+    _stages: dict | None = None,
+    _parts: dict | None = None,
+) -> DataFrame:
+    """The carry-forward refresh of a bucket-attributed star-edge state,
+    shared by the text (`bucket` = band, band_sig) and image (chunk_id,
+    chunk) modalities. `index_postings` / `batch_postings` are
+    (doc_id, *bucket) rows, `index_edges` is (*bucket, doc_a, doc_b,
+    score_col), `store` is the corpus ∪ batch relation the scorers read.
+    Returns the refreshed edge state; EXACTLY equals the full builder over
+    corpus ∪ batch for any batch ids.
+
+    A persisted edge row (bucket b: hub→member) stays valid unless the
+    batch changes b's hub — hub = min(member ids), so only a batch doc
+    with id < old hub (non-monotone ingest) displaces it. Therefore:
+
+      carried    every old edge outside DISPLACED buckets (broadcast
+                 anti-join on the bucket key — a scan, no shuffle);
+      new edges  (old hub, m) for each genuinely new batch member m of an
+                 existing bucket, plus (min, m) within brand-new buckets;
+                 only these are passed to `score(new_edges, store)`;
+      displaced  the rare buckets whose hub moved are recomputed over
+                 their full membership by `rebuild(members, store,
+                 known_edges)`, known_edges being their old scored edges.
+
+    Re-ingested (bucket, doc) postings are filtered out by the posting
+    check, so they cannot duplicate rows. Every broadcast is bounded by
+    O(batch × buckets per doc) rows, the daily-batch contract; the index
+    is only SCANNED, never shuffled. Each scorer keeps its own
+    materialization policy.
+
+    Eager at call: `nm` (the batch-placement decision) and `new_edges` are
+    localCheckpoint leaves. Every downstream leg re-nests their subtrees
+    (index probe + batch pipeline); left lazy, the duplicated subtrees
+    exploded the composed plan to 130 parquet scans / 206
+    BroadcastExchange nodes at the decade corpus and OOMed a 1 GiB driver
+    at sf0.01. Two trivial probe jobs over those leaves then skip the
+    scoring (empty on a crash replay) and the displaced rebuild (empty on
+    the monotone production contract) together with their store scans.
+
+    `_parts` (base+delta write support): `displaced_empty` and the
+    O(batch) `new_scored` delta. With no displaced bucket, carried ≡
+    index_edges, so the refreshed state is EXACTLY index_edges ∪
+    new_scored and a writer may append the delta instead of rewriting the
+    O(state) snapshot; otherwise it must fall back to the full rewrite."""
+    member = [*bucket, "doc_id"]
+    touched = batch_postings.select(*bucket).distinct()
+    touched_postings = index_postings.select("doc_id", *bucket).join(
+        F.broadcast(touched), bucket, "leftsemi"
+    )
+    # min() combines map-side: the shuffle carries one partial row per
+    # (task, touched bucket), never the posting stream itself
+    old_hubs = touched_postings.groupBy(*bucket).agg(
+        F.min("doc_id").alias("__old_hub")
+    )
+    batch_members = batch_postings.select("doc_id", *bucket).distinct()
+    already = touched_postings.join(
+        F.broadcast(batch_members), member, "leftsemi"
+    )
+    # no hints below this line unless the LEFT side is index-sized: every
+    # F.broadcast adds a driver-collected build whose subtree nests the
+    # ones above — plan depth connected_components' collapse re-executes
+    new_members = batch_members.join(already, member, "left_anti")
+    nm = new_members.join(old_hubs, bucket, "left").localCheckpoint(eager=True)
+    displaced = (
+        nm.filter(F.col("doc_id") < F.col("__old_hub")).select(*bucket).distinct()
+    )
+    bd = F.broadcast(displaced)
+    unchanged_new = (
+        nm.filter(
+            F.col("__old_hub").isNotNull() & (F.col("doc_id") > F.col("__old_hub"))
+        )
+        .join(bd, bucket, "left_anti")
+        .select(
+            *bucket, F.col("__old_hub").alias("doc_a"), F.col("doc_id").alias("doc_b")
+        )
+    )
+    newb_edges = (
+        nm.filter(F.col("__old_hub").isNull())
+        .withColumn("doc_a", F.min("doc_id").over(Window.partitionBy(*bucket)))
+        .filter(F.col("doc_id") != F.col("doc_a"))
+        .select(*bucket, "doc_a", F.col("doc_id").alias("doc_b"))
+    )
+    new_edges = unchanged_new.unionByName(newb_edges)
+    # crash-replay idempotency: the state commit protocol writes the EDGE
+    # state before appending the batch's postings, so a replay sees the
+    # refreshed edges but the PRE-batch index — a replayed member is
+    # invisible to the posting check yet its edge exists. Suppress any new
+    # edge whose (bucket, member) is already an edge row; empty on a
+    # healthy run.
+    edge_member = [*bucket, "doc_b"]
+    already_edges = index_edges.select(*edge_member).join(
+        F.broadcast(new_edges.select(*edge_member)), edge_member, "leftsemi"
+    )
+    new_edges = new_edges.join(
+        already_edges, edge_member, "left_anti"
+    ).localCheckpoint(eager=True)
+    if new_edges.limit(1).count() == 0:
+        zero = F.lit(0).cast(dict(index_edges.dtypes)[score_col])
+        new_scored = new_edges.withColumn(score_col, zero)
+    else:
+        new_scored = score(new_edges, store)
+    cols = [*bucket, "doc_a", "doc_b", score_col]
+    displaced_empty = displaced.limit(1).count() == 0
+    if displaced_empty:
+        recomputed = index_edges.select(*cols).limit(0)
+    else:
+        members_d = (
+            touched_postings.join(bd, bucket, "leftsemi")
+            .unionByName(batch_members.join(bd, bucket, "leftsemi"))
+            .distinct()
+        )
+        known_d = index_edges.join(bd, bucket, "leftsemi")
+        recomputed = rebuild(members_d, store, known_d)
+    carried = index_edges.select(*cols).join(bd, bucket, "left_anti")
+    if _stages is not None:
+        _stages.update(
+            touched=touched,
+            old_hubs=old_hubs,
+            new_members=new_members,
+            displaced=displaced,
+            new_edges=new_edges,
+            carried=carried,
+        )
+    if _parts is not None:
+        _parts["displaced_empty"] = bool(displaced_empty)
+        _parts["new_scored"] = new_scored.select(*cols)
+    return carried.unionByName(new_scored.select(*cols)).unionByName(
+        recomputed.select(*cols)
+    )
 
 
 def refresh_verified_star_edges(
@@ -1283,338 +1451,100 @@ def refresh_verified_star_edges(
 ) -> DataFrame:
     """Daily refresh of the verified edge state: the batch pays its own
     shingle + signature compute; every persisted edge row carries forward
-    verbatim unless its bucket's HUB was displaced (hub = min doc_id, so
-    only a batch id below the old hub — non-monotone ingest — invalidates
-    a row); genuinely NEW (bucket, member) postings attach to their
-    bucket's hub as new edges and are Jaccard-verified against the
-    shingle store; the rare displaced buckets are recomputed over their
-    full membership. Cost is O(batch) edges verified + index SCANS only
-    (the round-11 optimization — the previous bucket-level recompute
-    re-derived full touched-bucket membership and pushed it through a
-    pair-level reuse join against the whole edge state, which at the
-    decade corpus meant 46 M membership rows and two full 48.6 M-row
-    state shuffles for 5,324 genuinely new pairs; see
-    BENCH_EDGE_REFRESH_DECOMP.json and OPTIMIZATION_r11.md). Returns the
-    refreshed edge state — same schema, ready to persist as the next
-    day's `index_edges` (the new band/shingle state rows are the batch's
-    own, appended by the caller).
+    verbatim unless its bucket's HUB was displaced; genuinely NEW
+    (bucket, member) postings attach to their bucket's hub and only those
+    pairs are Jaccard-verified against the shingle store; the rare
+    displaced buckets are recomputed over their full membership with the
+    reuse side bucket-filtered (a lost cross-bucket reuse hit re-verifies
+    to the identical score — Jaccard is intrinsic to the pair). Cost is
+    O(batch) edges verified + index SCANS only (the carry-forward engine,
+    `_refresh_star_edges`; the previous bucket-level recompute did ~8,600×
+    more candidate work at the decade corpus — BENCH_EDGE_REFRESH_DECOMP.
+    json, OPTIMIZATION_r11.md). Returns the refreshed edge state — same
+    schema, ready to persist as the next day's `index_edges` (the new
+    band/shingle rows are the batch's own, appended by the caller).
 
     EXACTLY equals `verified_star_state(corpus ∪ batch)[2]` for any batch
     ids (oracled by x_minhash_components_verified_incremental against the
-    full-recompute recursive CTE): hub displacement by an out-of-order id
-    is recomputed, not assumed away — and a reuse hit the bucket-filtered
-    displaced path no longer sees re-verifies to the identical score
-    (Jaccard is intrinsic to the pair; docs are immutable). With monotone
-    ids (the production append contract) verification touches O(batch)
-    pairs only — BENCH_NEARDUP_SFXL.json measures the decade-scale wall
-    both ways.
+    full-recompute recursive CTE). A batch doc already present in the
+    index cannot double edge rows. `_parts` exposes the base+delta write
+    contract (see `_refresh_star_edges`); `_stages` (bench-only) records
+    the intermediate frames for per-stage attribution.
 
-    A batch doc already present in the index contributes duplicate
-    posting rows; membership is `distinct()`-ed so re-ingest cannot
-    double edge rows.
-
-    The hash MODE is inferred from the persisted index itself — a hex
-    (string) band_sig means the portable md5 pipeline built it, an 8-byte
-    (bigint) band_sig means the xxhash64 fast path did — so the batch's
-    signatures are always computed in the keyspace the index lives in and
-    the two modes cannot be silently mixed."""
-    portable = dict(index_bands.dtypes).get("band_sig") == "string"
+    The hash MODE is inferred from the persisted index itself, so the
+    batch's signatures are always computed in the keyspace the index
+    lives in and the two modes cannot be silently mixed (ValueError)."""
+    portable = _index_is_portable(index_bands)
     if batch_shingles is None:
         batch_shingles = word_shingles(batch_docs, hashed=not portable)
-    if portable:
-        if dict(batch_shingles.dtypes).get("shingle") != "string":
-            # Symmetric twin of the fast-path guard below: md5 band_sigs
-            # must be computed over RAW string shingles. A pre-hashed
-            # (bigint) batch relation would band into a keyspace the
-            # string index never collides with — every cross-batch
-            # near-dup silently missed.
-            raise ValueError(
-                "portable index (string band_sig) needs RAW batch shingles "
-                "(word_shingles(hashed=False)); got bigint — md5 over hash "
-                "values would band into a disjoint keyspace"
-            )
-        batch_bands = lsh_bands_portable(
-            minhash_signatures_portable(batch_shingles, num_hashes),
-            num_hashes,
-            band_size,
-        )
-    else:
-        if dict(batch_shingles.dtypes).get("shingle") != "bigint":
-            raise ValueError(
-                "fast-path index (bigint band_sig) needs hashed batch "
-                "shingles (word_shingles(hashed=True)); got strings"
-            )
-        nh = (
-            num_hashes
-            if num_hashes is not None
-            else MINHASH_DEFAULTS.num_hashes
-        )
-        batch_bands = lsh_bands(
-            minhash_signatures(batch_shingles, nh), nh, band_size
-        )
     # batch_bands feeds several plan legs and is deliberately NOT
     # materialized: recomputing the batch signature pipeline per leg costs
-    # seconds (the batch is daily-sized by contract), while a
-    # localCheckpoint's accurate tiny stats cascade into downstream joins
-    # with surprising strategy flips. Measured on the decade corpus in
-    # round 10 (same session, warm cache): plain 96 s, checkpoint-only
-    # 336 s, checkpoint + reuse-filter 484 s.
-    #
-    # Round 11 (optimization): EDGE-LEVEL carry-forward replaces the
-    # bucket-level recompute. The old shape re-derived the FULL membership
-    # of every touched bucket (index semi-join ∪ batch, distinct), rebuilt
-    # all (hub, member) candidate edges and pushed them through a
-    # pair-level reuse join against the whole edge state. Measured at the
-    # decade corpus (BENCH_EDGE_REFRESH_DECOMP.json, 12.8 M docs / 5 k
-    # batch): touched buckets covered 46.0 M of the 51.2 M-row band index
-    # (the corpus is clique-heavy by construction), 45.95 M of 45.97 M
-    # candidate edges were reuse HITS and only 5,324 pairs were new — the
-    # recompute did ~8,600× more candidate work than the new information
-    # content, and the reuse leg shuffled the 48.6 M-row edge state twice
-    # (3-column distinct, then a re-shuffle + sort on the pair key).
-    #
-    # The carry-forward observation: a persisted edge row (bucket b:
-    # hub→member) stays EXACTLY valid unless the batch changes b's hub —
-    # hub = min(member ids), so only a batch doc with id < old hub
-    # (non-monotone ingest) can displace it. Therefore:
-    #   carried    = every old edge except those of DISPLACED buckets
-    #                (broadcast anti-join on the bucket key — scan, no
-    #                shuffle; displaced is empty under the monotone
-    #                production contract);
-    #   new edges  = (old hub, m) for each genuinely new batch member m
-    #                of an existing bucket, plus (min, m) within
-    #                brand-new buckets — verified against the shingle
-    #                store exactly like any new pair (a new pair cannot
-    #                have a stored score: its batch endpoint is not in
-    #                the old state, and re-ingested members are filtered
-    #                out by the posting check);
-    #   displaced  = the rare buckets whose hub moved are recomputed with
-    #                the old machinery over their full membership, with
-    #                the reuse side bucket-filtered (a lost cross-bucket
-    #                reuse hit re-verifies to the identical Jaccard —
-    #                scores are intrinsic to the pair).
-    # Every broadcast below is bounded by O(batch × bands) rows (the
-    # daily-batch contract this function already leans on); the index is
-    # only ever SCANNED (3× bands, 2× edges, 1× store), never shuffled.
-    # Refresh ≡ full recompute is pinned by
-    # tests/test_verified_incremental.py (monotone, interleaved/hub-
-    # displacement, re-ingest, both hash modes) and the
-    # x_minhash_components_verified_incremental oracle.
-    touched = batch_bands.select("band", "band_sig").distinct()
-    bt = F.broadcast(touched)
-    postings = index_bands.select("doc_id", "band", "band_sig")
-    touched_postings = postings.join(bt, ["band", "band_sig"], "leftsemi")
-    # min() combines map-side: the shuffle carries one partial row per
-    # (task, touched bucket), never the posting stream itself
-    old_hubs = touched_postings.groupBy("band", "band_sig").agg(
-        F.min("doc_id").alias("__old_hub")
+    # seconds, while a localCheckpoint's accurate tiny stats cascade into
+    # downstream joins with surprising strategy flips (decade corpus,
+    # round 10: plain 96 s, checkpoint-only 336 s)
+    batch_bands, batch_store = _minhash_bands(
+        batch_shingles, portable, num_hashes, band_size
     )
-    batch_members = batch_bands.select("doc_id", "band", "band_sig").distinct()
-    # re-ingested (bucket, doc) postings already in the index: their edges
-    # are already in the carried state — emitting them again would
-    # duplicate rows (the invariant test_refresh_tolerates_reingested_
-    # batch_docs pins)
-    already = touched_postings.join(
-        F.broadcast(batch_members), ["band", "band_sig", "doc_id"], "leftsemi"
-    )
-    # no hints below this line unless the LEFT side is index-sized: a
-    # small⋈small join is cheap under any strategy, and every F.broadcast
-    # adds a driver-collected build whose subtree nests the ones above —
-    # plan depth the connected-components collapse pass then re-executes
-    new_members = batch_members.join(
-        already, ["band", "band_sig", "doc_id"], "left_anti"
-    )
-    # EAGER plan truncation: `nm` is the whole batch-placement decision —
-    # O(batch × bands) rows — and EVERY downstream leg (new edges,
-    # displaced keys, the carried anti-join's broadcast, the verification
-    # endpoints) re-nests its subtree (band index agg + membership probe
-    # + batch signature pipeline). Left lazy, the duplicated subtrees
-    # exploded the composed plan to 130 parquet scans / 206
-    # BroadcastExchange nodes at the decade corpus (measured via
-    # explain("formatted")) and OOMed the driver-contract 1 GiB session
-    # at sf0.01; checkpointed, each is computed once and every consumer
-    # is a shallow plan over a cached O(batch)-row leaf. Eager-at-call is
-    # the established pattern for in-plan state builds (the
-    # x_phash_components_incremental builder, connected_components'
-    # collapse phase); benches time the refresh CALL + write together so
-    # this work stays inside the measured wall.
-    nm = new_members.join(old_hubs, ["band", "band_sig"], "left").localCheckpoint(
-        eager=True
-    )
-    displaced = (
-        nm.filter(F.col("doc_id") < F.col("__old_hub"))
-        .select("band", "band_sig")
-        .distinct()
-    )
-    bd = F.broadcast(displaced)
-    # unchanged-hub existing buckets: the new member attaches to the old hub
-    unchanged_new = (
-        nm.filter(F.col("__old_hub").isNotNull() & (F.col("doc_id") > F.col("__old_hub")))
-        .join(bd, ["band", "band_sig"], "left_anti")
-        .select(
-            "band",
-            "band_sig",
-            F.col("__old_hub").alias("doc_a"),
-            F.col("doc_id").alias("doc_b"),
-        )
-    )
-    # brand-new buckets (no old postings): hub = min batch member
-    w_bucket = Window.partitionBy("band", "band_sig")
-    newb_edges = (
-        nm.filter(F.col("__old_hub").isNull())
-        .withColumn("doc_a", F.min("doc_id").over(w_bucket))
-        .filter(F.col("doc_id") != F.col("doc_a"))
-        .select("band", "band_sig", "doc_a", F.col("doc_id").alias("doc_b"))
-    )
-    new_edges = unchanged_new.unionByName(newb_edges)
-    # crash-replay idempotency: the state commit protocol overwrites the
-    # EDGE state before appending the batch's postings (pipelines P7 and
-    # the daily-bench replay re-run the refresh with the refreshed edges
-    # but the PRE-batch band index), so a replayed batch member is
-    # invisible to the posting check above yet its edge already exists.
-    # Suppress any new edge whose (bucket, member) is already an edge row
-    # — the edges-side twin of the `already` posting check. One extra
-    # edge-state SCAN (broadcast semi both ways, O(batch) build sides),
-    # no shuffle; on a healthy run the suppression set is empty.
-    already_edges = index_edges.select("band", "band_sig", "doc_b").join(
-        F.broadcast(new_edges.select("band", "band_sig", "doc_b")),
-        ["band", "band_sig", "doc_b"],
-        "leftsemi",
-    )
-    new_edges = new_edges.join(
-        already_edges, ["band", "band_sig", "doc_b"], "left_anti"
-    ).localCheckpoint(eager=True)  # leaf for pairs/ids/scoring (see nm)
-    # align the batch's verification keys with the store's keyspace: the
-    # store holds 8-byte xxhash64 shingles (the decade-scale join shape);
-    # a raw-string batch relation is hashed to match
+    # verification joins in the STORE's keyspace (normally the 8-byte
+    # xxhash64 image — the decade-scale join shape)
     store_t = dict(index_shingles.dtypes).get("shingle")
-    batch_t = dict(batch_shingles.dtypes).get("shingle")
-    b_sh = batch_shingles.select("doc_id", "shingle")
-    if store_t == "bigint" and batch_t == "string":
-        b_sh = batch_shingles.select(
-            "doc_id", F.xxhash64("shingle").alias("shingle")
-        )
-    elif store_t != batch_t:
+    b_sh = (batch_store if store_t == "bigint" else batch_shingles).select(
+        "doc_id", "shingle"
+    )
+    if dict(b_sh.dtypes)["shingle"] != store_t:
         raise ValueError(
             f"shingle keyspace mismatch: index store is {store_t}, batch is "
-            f"{batch_t} — verification joins would silently find nothing"
+            f"{dict(b_sh.dtypes)['shingle']} — verification joins would "
+            "silently find nothing"
         )
-    all_sh = index_shingles.select("doc_id", "shingle").unionByName(b_sh)
-    # exact-Jaccard verification of the NEW pairs only (endpoints semi-
-    # restrict the store scan, same as the old reuse-miss path); a pair
-    # with zero surviving intersection (hash collision) scores 0.0, the
-    # state-totality rule scored_star_edges documents. A crash replay
-    # suppresses every new edge above — the probe (one trivial job over
-    # the checkpointed leaf) then skips the store scan entirely.
-    pairs = new_edges.select("doc_a", "doc_b").distinct()
-    if new_edges.limit(1).count() == 0:
-        needed = all_sh.limit(0)
-        new_scored = new_edges.withColumn("jaccard", F.lit(0.0))
-        scored = new_scored.select("doc_a", "doc_b", "jaccard")
-    else:
-        ids = (
-            pairs.select(F.col("doc_a").alias("doc_id"))
-            .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
+
+    def score(new_edges: DataFrame, store: DataFrame) -> DataFrame:
+        pairs = new_edges.select("doc_a", "doc_b").distinct()
         # broadcast: O(batch)-bounded endpoints; un-hinted, the store semi
-        # planned as a full 679 M-row sort-merge shuffle. distinct()
-        # (round-12, ADVICE r11): all_sh = index store ∪ batch shingles,
-        # so a re-ingested batch doc that is the HUB of a bucket gaining
-        # a new member has its shingle rows duplicated — doubling both
-        # its size and its intersections in verified_jaccard and
-        # inflating the new pair's score (2i/(2sa+sb-2i) vs i/(sa+sb-i)).
-        # Shingles are set-semantic per word_shingles, so distinct on the
-        # O(batch)-row restricted frame restores exact full-recompute
-        # equivalence (test_refresh_scores_reingested_hub_with_new_member).
-        # persist: verified_jaccard references this frame THREE times
-        # (doc_a side, doc_b side, per-doc sizes) and each un-persisted
-        # reference re-scans the full shingle store — at the decade
-        # corpus that is 3 × 4.5 s of scan for an O(batch)-row (~8 MB)
-        # frame. Released below once the verified scores are pinned.
+        # planned as a full 679 M-row sort-merge shuffle. distinct(): the
+        # store is index ∪ batch shingles, so a re-ingested hub's rows
+        # appear twice and would inflate its Jaccard
+        # (test_refresh_scores_reingested_hub_with_new_member). persist:
+        # verified_jaccard references the slice three times, each a full
+        # store scan otherwise; a serial cache fill measured WORSE cold
+        # (70.1 s vs 57.9 s) — the racing scans share page-cache IO.
         needed = (
-            all_sh.join(F.broadcast(ids), "doc_id", "leftsemi")
+            store.join(F.broadcast(_endpoint_ids(pairs)), "doc_id", "leftsemi")
             .distinct()
             .persist()
         )
-        # NO eager cache-fill before the verification plan (measured,
-        # round 12): verified_jaccard's three references are independent
-        # leaf stages of one job and do race the unfilled cache, but the
-        # racing scans share page-cache IO on the store bytes — a serial
-        # fill count measured WORSE cold (70.1 s vs 57.9 s refresh call,
-        # clean canaries both runs), because it strips the IO/compute
-        # overlap without saving bytes.
         scored = verified_jaccard(needed, pairs)
+        # zero surviving intersection (hash collision) scores 0.0, the
+        # state-totality rule of scored_star_edges. The eager pin lets
+        # `needed` unpersist at the function boundary (no cached frame
+        # leaked per call) and keeps the state write off the store scan.
         new_scored = (
             new_edges.join(scored, ["doc_a", "doc_b"], "left")
             .withColumn("jaccard", F.coalesce("jaccard", F.lit(0.0)))
-            # EAGER pin of the O(batch) verified scores: the function is
-            # already eager-at-call (see nm above), and truncating here
-            # lets `needed` unpersist at the function boundary instead of
-            # leaking one cached frame per refresh call into the session
-            # (round-11 verdict item 3) — and the final state write no
-            # longer re-runs the store scan + verification join.
             .localCheckpoint(eager=True)
         )
         needed.unpersist()
-    # displaced buckets (non-monotone ingest only): full old-style
-    # recompute over their membership, reuse side bucket-filtered. The
-    # branch is decided HERE (displaced derives from the checkpointed
-    # decision leaf, so the probe is one trivial job): on the monotone
-    # production contract it is empty, and skipping the sub-DAG removes
-    # its whole plan weight — scored_star_edges references the shingle
-    # store three times and the posting/edge states once each, all of
-    # which would otherwise scan per execution just to produce 0 rows.
-    cols = ["band", "band_sig", "doc_a", "doc_b", "jaccard"]
+        if _stages is not None:
+            _stages.update(new_pairs=pairs, store_needed=needed, verified=scored)
+        return new_scored
+
     d_stages: dict | None = {} if _stages is not None else None
-    displaced_empty = displaced.limit(1).count() == 0
-    if displaced_empty:
-        recomputed_d = index_edges.select(*cols).limit(0)
-    else:
-        members_d = (
-            touched_postings.join(bd, ["band", "band_sig"], "leftsemi")
-            .unionByName(
-                batch_members.join(bd, ["band", "band_sig"], "leftsemi")
-            )
-            .distinct()
-        )
-        known_d = index_edges.join(bd, ["band", "band_sig"], "leftsemi")
-        recomputed_d = scored_star_edges(
-            members_d, all_sh, reuse_scores=known_d, _stages=d_stages
-        )
-    carried = index_edges.select(*cols).join(
-        bd, ["band", "band_sig"], "left_anti"
+    out = _refresh_star_edges(
+        _BAND,
+        index_bands,
+        index_edges,
+        batch_bands,
+        index_shingles.select("doc_id", "shingle").unionByName(b_sh),
+        "jaccard",
+        score,
+        functools.partial(scored_star_edges, _stages=d_stages),
+        _stages,
+        _parts,
     )
     if _stages is not None:
-        _stages.update(
-            {f"displaced_{k}": v for k, v in (d_stages or {}).items()}
-        )
-        _stages.update(
-            batch_bands=batch_bands,
-            touched=touched,
-            old_hubs=old_hubs,
-            new_members=new_members,
-            displaced=displaced,
-            new_edges=new_edges,
-            new_pairs=pairs,
-            store_needed=needed,
-            verified=scored,
-            carried=carried,
-        )
-    if _parts is not None:
-        # Base+delta write support (round 12, VERDICT item 4): when no
-        # bucket hub was displaced, `carried` ≡ index_edges verbatim, so
-        # the refreshed state is EXACTLY index_edges ∪ new_scored and a
-        # state writer may persist the O(batch) `new_scored` delta instead
-        # of rewriting the O(state) snapshot. `displaced_empty` is decided
-        # from the same probe that skips the displaced sub-DAG (already
-        # paid), so exposing it costs nothing. Non-monotone batches
-        # (displaced non-empty) must fall back to the full rewrite.
-        _parts["displaced_empty"] = bool(displaced_empty)
-        _parts["new_scored"] = new_scored.select(*cols)
-    return carried.unionByName(new_scored.select(*cols)).unionByName(
-        recomputed_d.select(*cols)
-    )
+        _stages.update({f"displaced_{k}": v for k, v in d_stages.items()})
+        _stages["batch_bands"] = batch_bands
+    return out
 
 
 def minhash_components_verified_refresh(
@@ -1638,8 +1568,9 @@ def minhash_components_verified_refresh(
     verification side), so it is persisted here and released after
     `connected_components` materializes its loop state eagerly. Hash mode
     follows the persisted index (see refresh_verified_star_edges)."""
-    portable = dict(index_bands.dtypes).get("band_sig") == "string"
-    batch_sh = word_shingles(batch_docs, hashed=not portable).persist()
+    batch_sh = word_shingles(
+        batch_docs, hashed=not _index_is_portable(index_bands)
+    ).persist()
     try:
         edges = refresh_verified_star_edges(
             index_bands,
@@ -1729,6 +1660,28 @@ def lsh_bands_portable(
     threads extra signature columns (e.g. `sz`) onto the band rows for
     callers that consume them in-plan; the persisted-index schema stays
     (doc_id, band, band_sig) when unset."""
+    return _explode_bands(
+        sigs,
+        "mh_",
+        lambda *mh: F.concat_ws("", *mh),
+        num_hashes,
+        band_size,
+        carry,
+    )
+
+
+def _explode_bands(
+    sigs: DataFrame,
+    prefix: str,
+    combine,
+    num_hashes: int | None,
+    band_size: int | None,
+    carry: tuple = (),
+) -> DataFrame:
+    """The banding step of both hash modes: split the `<prefix><i>`
+    signature columns into num_hashes/band_size bands and explode one
+    (doc_id, *carry, band, band_sig) row per band, band_sig being
+    `combine` over the band's columns."""
     if num_hashes is None:
         num_hashes = MINHASH_DEFAULTS.num_hashes
     if band_size is None:
@@ -1737,15 +1690,14 @@ def lsh_bands_portable(
         raise ValueError(
             f"num_hashes={num_hashes} not divisible by band_size={band_size}"
         )
-    n_bands = num_hashes // band_size
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
-            F.concat_ws(
-                "", *[F.col(f"mh_{b * band_size + j}") for j in range(band_size)]
+            combine(
+                *[F.col(f"{prefix}{b * band_size + j}") for j in range(band_size)]
             ).alias("band_sig"),
         )
-        for b in range(n_bands)
+        for b in range(num_hashes // band_size)
     ]
     return sigs.select(
         "doc_id", *carry, F.explode(F.array(*band_structs)).alias("bs")

@@ -18,8 +18,14 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from metrics_database_cron_script_spark.functions.dedup import (
+    _endpoint_ids,
+    _hub_edges,
+    _refresh_star_edges,
+)
 
 FEATURE_SCHEMA = (
     "doc_id long, n_bytes long, byte_mean double, byte_min long, byte_max long"
@@ -1196,26 +1202,33 @@ def ahash_with_dead_letter(blobs: DataFrame) -> DataFrame:
     )
 
 
+_CHUNK = ["chunk_id", "chunk"]  # the image modality's LSH bucket key
+
+
 def phash_chunks(hashes: DataFrame) -> DataFrame:
     """(doc_id, phash) → (doc_id, chunk_id, chunk): the 64-bit aHash split
     into 4 × 16-bit chunks — the hamming-LSH index relation the
     incremental image-dedup state persists (phash column deliberately
     excluded: the hash store is its own relation, mirroring the text
     path's band-index/shingle-store separation)."""
-    return hashes.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("chunk_id"),
-                        F.substring("phash", j * 16 + 1, 16).alias("chunk"),
-                    )
-                    for j in range(4)
-                ]
-            )
-        ).alias("c"),
-    ).select("doc_id", "c.chunk_id", "c.chunk")
+    return hashes.select("doc_id", _chunk_structs()).select(
+        "doc_id", "c.chunk_id", "c.chunk"
+    )
+
+
+def _chunk_structs() -> F.Column:
+    """`c`: one (chunk_id, chunk) struct row per 16-bit chunk of `phash`."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(j).alias("chunk_id"),
+                    F.substring("phash", j * 16 + 1, 16).alias("chunk"),
+                )
+                for j in range(4)
+            ]
+        )
+    ).alias("c")
 
 
 def _phash_hamming(ph_a: str = "ph_a", ph_b: str = "ph_b") -> F.Column:
@@ -1235,6 +1248,21 @@ def _phash_hamming(ph_a: str = "ph_a", ph_b: str = "ph_b") -> F.Column:
     return ham.cast("long")
 
 
+def _hamming_scored(edges: DataFrame, hashes: DataFrame) -> DataFrame:
+    """(chunk_id, chunk, doc_a, doc_b) edges → the same edges with the
+    exact Hamming distance of their endpoints' hashes."""
+    ha = hashes.select(F.col("doc_id").alias("doc_a"), F.col("phash").alias("ph_a"))
+    hb = hashes.select(F.col("doc_id").alias("doc_b"), F.col("phash").alias("ph_b"))
+    return (
+        edges.join(ha, "doc_a")
+        .join(hb, "doc_b")
+        .select(
+            "chunk_id", "chunk", "doc_a", "doc_b",
+            _phash_hamming().alias("hamming"),
+        )
+    )
+
+
 def phash_star_edges(chunks: DataFrame, hashes: DataFrame) -> DataFrame:
     """STAR edges per hamming-LSH bucket, scored with exact Hamming —
     the image twin of dedup.scored_star_edges: per (chunk_id, chunk)
@@ -1248,24 +1276,7 @@ def phash_star_edges(chunks: DataFrame, hashes: DataFrame) -> DataFrame:
     Unlike the text path there is no score-reuse join: Hamming is one
     codegen'd xor/bit_count per edge, cheaper than the join that would
     dedupe it."""
-    hubs = chunks.groupBy("chunk_id", "chunk").agg(
-        F.min("doc_id").alias("doc_a")
-    )
-    members = (
-        chunks.join(hubs, ["chunk_id", "chunk"])
-        .filter(F.col("doc_id") != F.col("doc_a"))
-        .select("chunk_id", "chunk", "doc_a", F.col("doc_id").alias("doc_b"))
-    )
-    ha = hashes.select(F.col("doc_id").alias("doc_a"), F.col("phash").alias("ph_a"))
-    hb = hashes.select(F.col("doc_id").alias("doc_b"), F.col("phash").alias("ph_b"))
-    return (
-        members.join(ha, "doc_a")
-        .join(hb, "doc_b")
-        .select(
-            "chunk_id", "chunk", "doc_a", "doc_b",
-            _phash_hamming().alias("hamming"),
-        )
-    )
+    return _hamming_scored(_hub_edges(chunks, _CHUNK)[1], hashes)
 
 
 def phash_star_state(
@@ -1294,159 +1305,55 @@ def refresh_phash_star_edges(
     batch_hashes: DataFrame,
     _parts: dict | None = None,
 ) -> DataFrame:
-    """Daily refresh of the image edge state, O(batch) — the image twin
-    of dedup.refresh_verified_star_edges (round-11 carry-forward shape):
-    the batch pays its own decode+aHash (it arrives here as hashes); a
-    persisted edge row (bucket: hub→member) stays exactly valid unless
-    the batch DISPLACES its bucket's hub (a batch id below the old hub —
-    non-monotone ingest), so every old edge outside the displaced
-    buckets carries forward by one broadcast anti-join; genuinely new
-    (bucket, member) postings attach to their bucket's hub (or form new
-    buckets around their own min) and only THOSE pairs are Hamming-
-    scored, against a hash store semi-restricted to the new-edge
-    endpoints; displaced buckets recompute over their full membership
-    with the old machinery. The previous shape re-derived full
-    touched-bucket membership and re-scored every touched edge — at the
-    2.56 M-image SFXL corpus that recomputation was 0.185× a full
-    rebuild; this one does O(batch) scoring work and index SCANS only.
+    """Daily refresh of the image edge state, O(batch) — the shared
+    carry-forward engine (dedup._refresh_star_edges) over the (chunk_id,
+    chunk) buckets: the batch pays its own decode+aHash (it arrives here
+    as hashes); every old edge outside buckets whose hub the batch
+    DISPLACED (a batch id below the old hub — non-monotone ingest)
+    carries forward verbatim; genuinely new (bucket, member) postings
+    attach to their bucket's hub (or form new buckets around their own
+    min) and only THOSE pairs are Hamming-scored, against a hash store
+    semi-restricted to the new-edge endpoints; displaced buckets
+    recompute over their full membership with phash_star_edges. The
+    previous shape re-derived full touched-bucket membership and
+    re-scored every touched edge — at the 2.56 M-image SFXL corpus that
+    recomputation was 0.185× a full rebuild.
+
     EXACTLY equals phash_star_state(corpus ∪ batch)[2] for any batch ids
     (oracled by x_phash_components_incremental against the
     full-recompute recursive CTE over an interleaved hub-displacing
-    split). Re-ingested batch docs are filtered out by the posting
-    membership check, so replay cannot double edge rows. Broadcasts are
-    bounded by O(batch × chunks) rows (the daily-batch contract)."""
-    batch_chunks = phash_chunks(batch_hashes)
-    touched = batch_chunks.select("chunk_id", "chunk").distinct()
-    bt = F.broadcast(touched)
-    touched_postings = index_chunks.select("doc_id", "chunk_id", "chunk").join(
-        bt, ["chunk_id", "chunk"], "leftsemi"
-    )
-    old_hubs = touched_postings.groupBy("chunk_id", "chunk").agg(
-        F.min("doc_id").alias("__old_hub")
-    )
-    batch_members = batch_chunks.select("doc_id", "chunk_id", "chunk").distinct()
-    already = touched_postings.join(
-        F.broadcast(batch_members), ["chunk_id", "chunk", "doc_id"], "leftsemi"
-    )
-    new_members = batch_members.join(
-        already, ["chunk_id", "chunk", "doc_id"], "left_anti"
-    )
-    # EAGER plan truncation at the O(batch) decision relation — same
-    # rationale and same plan-explosion/1 GiB-driver failure mode as the
-    # text twin (dedup.refresh_verified_star_edges): every downstream leg
-    # re-nests the index-probe subtree without it
-    nm = new_members.join(old_hubs, ["chunk_id", "chunk"], "left").localCheckpoint(
-        eager=True
-    )
-    displaced = (
-        nm.filter(F.col("doc_id") < F.col("__old_hub"))
-        .select("chunk_id", "chunk")
-        .distinct()
-    )
-    bd = F.broadcast(displaced)
-    unchanged_new = (
-        nm.filter(
-            F.col("__old_hub").isNotNull() & (F.col("doc_id") > F.col("__old_hub"))
+    split). Re-ingested batch docs cannot double edge rows, and a crash
+    replay's new edges are suppressed. `_parts` exposes the base+delta
+    write contract (displaced_empty, new_scored). Scoring is lazy: no
+    materialization beyond the engine's own."""
+
+    def score(new_edges: DataFrame, store: DataFrame) -> DataFrame:
+        # semi restriction (broadcast — O(batch) ids) keeps the store at
+        # scan cost; distinct() dedupes a re-ingested endpoint that is in
+        # both the index store and the batch
+        ids = F.broadcast(_endpoint_ids(new_edges))
+        return _hamming_scored(
+            new_edges, store.join(ids, "doc_id", "leftsemi").distinct()
         )
-        .join(bd, ["chunk_id", "chunk"], "left_anti")
-        .select(
-            "chunk_id",
-            "chunk",
-            F.col("__old_hub").alias("doc_a"),
-            F.col("doc_id").alias("doc_b"),
+
+    def rebuild(members: DataFrame, store: DataFrame, _known: DataFrame):
+        ids = F.broadcast(members.select("doc_id").distinct())
+        return phash_star_edges(
+            members, store.join(ids, "doc_id", "leftsemi").distinct()
         )
-    )
-    w_bucket = Window.partitionBy("chunk_id", "chunk")
-    newb_edges = (
-        nm.filter(F.col("__old_hub").isNull())
-        .withColumn("doc_a", F.min("doc_id").over(w_bucket))
-        .filter(F.col("doc_id") != F.col("doc_a"))
-        .select("chunk_id", "chunk", "doc_a", F.col("doc_id").alias("doc_b"))
-    )
-    new_edges = unchanged_new.unionByName(newb_edges)
-    # crash-replay idempotency (the P7 commit order overwrites EDGES before
-    # appending chunk postings, so a replayed batch member is invisible to
-    # the posting check but its edge already exists): suppress new edges
-    # whose (bucket, member) is already an edge row — empty on healthy runs
-    already_edges = index_edges.select("chunk_id", "chunk", "doc_b").join(
-        F.broadcast(new_edges.select("chunk_id", "chunk", "doc_b")),
-        ["chunk_id", "chunk", "doc_b"],
-        "leftsemi",
-    )
-    new_edges = new_edges.join(
-        already_edges, ["chunk_id", "chunk", "doc_b"], "left_anti"
-    ).localCheckpoint(eager=True)  # leaf for endpoint ids + scoring joins
-    all_hashes = index_hashes.select("doc_id", "phash").unionByName(
-        batch_hashes.select("doc_id", "phash")
-    )
-    # hash lookups for scoring touch ONLY new-edge endpoints: the semi
-    # restriction (broadcast — O(batch) ids) keeps the store at scan cost,
-    # and the distinct() dedupes a re-ingested endpoint that appears in
-    # both the index store and the batch. On a crash replay every new
-    # edge is suppressed above — the probe (one trivial job over the
-    # checkpointed leaf) then skips the store scan entirely.
-    if new_edges.limit(1).count() == 0:
-        new_scored = new_edges.withColumn("hamming", F.lit(0).cast("long"))
-    else:
-        ids = (
-            new_edges.select(F.col("doc_a").alias("doc_id"))
-            .unionByName(new_edges.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
-        needed_hashes = all_hashes.join(
-            F.broadcast(ids), "doc_id", "leftsemi"
-        ).distinct()
-        ha = needed_hashes.select(
-            F.col("doc_id").alias("doc_a"), F.col("phash").alias("ph_a")
-        )
-        hb = needed_hashes.select(
-            F.col("doc_id").alias("doc_b"), F.col("phash").alias("ph_b")
-        )
-        new_scored = (
-            new_edges.join(ha, "doc_a")
-            .join(hb, "doc_b")
-            .select(
-                "chunk_id", "chunk", "doc_a", "doc_b",
-                _phash_hamming().alias("hamming"),
-            )
-        )
-    # displaced buckets (non-monotone ingest only): old-style recompute
-    # over their full membership, hash store semi-restricted to it. The
-    # branch is decided here (displaced derives from the checkpointed
-    # decision leaf — one trivial probe job); empty on the monotone
-    # production contract, where skipping the sub-DAG drops its plan
-    # weight and its per-execution index/store scans
-    cols = ["chunk_id", "chunk", "doc_a", "doc_b", "hamming"]
-    displaced_empty = displaced.limit(1).count() == 0
-    if displaced_empty:
-        recomputed_d = index_edges.select(*cols).limit(0)
-    else:
-        members_d = (
-            touched_postings.join(bd, ["chunk_id", "chunk"], "leftsemi")
-            .unionByName(
-                batch_members.join(bd, ["chunk_id", "chunk"], "leftsemi")
-            )
-            .distinct()
-        )
-        hashes_d = all_hashes.join(
-            F.broadcast(members_d.select("doc_id").distinct()),
-            "doc_id",
-            "leftsemi",
-        ).distinct()
-        recomputed_d = phash_star_edges(members_d, hashes_d)
-    carried = index_edges.select(*cols).join(
-        bd, ["chunk_id", "chunk"], "left_anti"
-    )
-    if _parts is not None:
-        # Base+delta write support (round 12, VERDICT item 4) — the text
-        # twin's contract verbatim: with no displaced bucket, carried ≡
-        # index_edges, so the refreshed state is EXACTLY index_edges ∪
-        # new_scored and the writer may append the O(batch) delta instead
-        # of rewriting the O(state) snapshot.
-        _parts["displaced_empty"] = bool(displaced_empty)
-        _parts["new_scored"] = new_scored.select(*cols)
-    return carried.unionByName(new_scored.select(*cols)).unionByName(
-        recomputed_d.select(*cols)
+
+    return _refresh_star_edges(
+        _CHUNK,
+        index_chunks,
+        index_edges,
+        phash_chunks(batch_hashes),
+        index_hashes.select("doc_id", "phash").unionByName(
+            batch_hashes.select("doc_id", "phash")
+        ),
+        "hamming",
+        score,
+        rebuild,
+        _parts=_parts,
     )
 
 
@@ -1498,21 +1405,9 @@ def phash_near_dups(hashes: DataFrame, max_hamming: int = 6) -> DataFrame:
     chunk) keys; bucket growth is bounded by image-corpus near-dup
     structure the same way LSH bands are for text (SCALE.md §images).
     Returns (doc_a, doc_b, hamming ≤ max_hamming)."""
-    chunks = hashes.select(
-        "doc_id",
-        "phash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("chunk_id"),
-                        F.substring("phash", j * 16 + 1, 16).alias("chunk"),
-                    )
-                    for j in range(4)
-                ]
-            )
-        ).alias("c"),
-    ).select("doc_id", "phash", "c.chunk_id", "c.chunk")
+    chunks = hashes.select("doc_id", "phash", _chunk_structs()).select(
+        "doc_id", "phash", "c.chunk_id", "c.chunk"
+    )
     a = chunks.select(
         F.col("doc_id").alias("doc_a"), F.col("phash").alias("ph_a"),
         "chunk_id", "chunk",
@@ -1527,17 +1422,7 @@ def phash_near_dups(hashes: DataFrame, max_hamming: int = 6) -> DataFrame:
         .select("doc_a", "doc_b", "ph_a", "ph_b")
         .distinct()
     )
-    ham = None
-    for j in range(4):
-        term = F.bit_count(
-            F.conv(F.substring("ph_a", j * 16 + 1, 16), 2, 10)
-            .cast("long")
-            .bitwiseXOR(
-                F.conv(F.substring("ph_b", j * 16 + 1, 16), 2, 10).cast("long")
-            )
-        )
-        ham = term if ham is None else ham + term
     return (
-        pairs.select("doc_a", "doc_b", ham.cast("long").alias("hamming"))
+        pairs.select("doc_a", "doc_b", _phash_hamming().alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )

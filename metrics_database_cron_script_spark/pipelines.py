@@ -189,7 +189,10 @@ def update_stats(
         ),
         ledger_p,
         key="__k",
-        fence=F.col("through_ts") > F.lit(watermark),
+        # >=: a replay after the watermark commit has run_ts == watermark
+        # and regenerates the rows it keyed then; run_ts >= watermark, so
+        # rows below the fence can never share a key with this batch
+        fence=F.col("through_ts") >= F.lit(watermark),
     )
     stats = totals.withColumn(
         "percentMarketCaptured",
@@ -436,10 +439,11 @@ def update_image_dedup(
     hub was displaced — then chunks, then the hash store, then the
     marker LAST.
 
-    Cost per day is O(batch decode+hash + touched-bucket membership),
-    never a corpus rescan — measured 0.185× a full rebuild at 2.56 M
-    images (BENCH_IMAGE_SFXL.json). Skips (with a note) when the source
-    has no documents table (events-only state dirs)."""
+    Cost per day is O(batch decode+hash) plus the O(batch) carry-forward
+    refresh (only new edges are scored; the chunk index and hash store
+    are scanned, never rebuilt) — never a corpus rescan. Skips (with a
+    note) when the source has no documents table (events-only state
+    dirs)."""
     from metrics_database_cron_script_spark.functions import multimodal as M
     from metrics_database_cron_script_spark.sources.tables import table_path
 
@@ -701,12 +705,11 @@ def run_batch(
     return report
 
 
-# Append sinks whose file count grows with every cron run. The overwrite
-# snapshots (stats, daily_rollup, watermark, frontier markers, and the
-# phash EDGE state — atomic_overwrite every batch, update_image_dedup)
-# rewrite themselves each run and stay at a bounded file count — never
-# listed here: compacting a snapshot buys nothing the next overwrite
-# doesn't reset.
+# Append sinks whose file count grows with every cron run, compacted by
+# P9. The overwrite snapshots (stats, daily_rollup, watermark, frontier
+# markers) rewrite themselves each run and stay at a bounded file count —
+# never listed here: compacting a snapshot buys nothing the next
+# overwrite doesn't reset.
 APPEND_SINKS = (
     "prices",
     "tx_enriched",

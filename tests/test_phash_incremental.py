@@ -89,6 +89,39 @@ def test_reingested_batch_docs_are_noop(spark, hashes):
     assert _edge_set(refreshed) == _edge_set(edges)
 
 
+def test_refresh_delta_parts_reconstruct_snapshot(spark, hashes):
+    """The base+delta write contract P7 relies on: on a monotone batch
+    the refresh reports displaced_empty=True and old edges ∪ the
+    `new_scored` delta EXACTLY equals the refreshed edge set; a
+    hub-displacing split reports displaced_empty=False (the writer then
+    falls back to the full rewrite)."""
+    n_max = hashes.agg(F.max("doc_id")).collect()[0][0]
+    is_batch = F.col("doc_id") > n_max * 0.9
+    chunks, store, edges = (
+        df.localCheckpoint(eager=True)
+        for df in M.phash_star_state(hashes.filter(~is_batch))
+    )
+    parts: dict = {}
+    refreshed = M.refresh_phash_star_edges(
+        chunks, store, edges, hashes.filter(is_batch), _parts=parts
+    )
+    assert parts["displaced_empty"] is True
+    assert parts["new_scored"].count() > 0
+    view = edges.unionByName(parts["new_scored"])
+    assert _edge_set(view) == _edge_set(refreshed)
+
+    is_batch_i = F.pmod("doc_id", F.lit(10)) == 0
+    chunks_i, store_i, edges_i = (
+        df.localCheckpoint(eager=True)
+        for df in M.phash_star_state(hashes.filter(~is_batch_i))
+    )
+    parts_i: dict = {}
+    M.refresh_phash_star_edges(
+        chunks_i, store_i, edges_i, hashes.filter(is_batch_i), _parts=parts_i
+    )
+    assert parts_i["displaced_empty"] is False
+
+
 def test_star_edges_are_linear_in_bucket_size(spark):
     """A degenerate bucket (every doc the same hash — the flat/banner
     image class) must emit |bucket| - 1 star edges per chunk, never the

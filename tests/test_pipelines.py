@@ -16,19 +16,37 @@ def state_dir(tmp_path):
 
 
 def test_run_batch_then_rerun_is_noop(spark, state_dir):
-    from metrics_database_cron_script_spark.pipelines import run_batch
+    import os
+
+    from metrics_database_cron_script_spark.pipelines import APPEND_SINKS, run_batch
+
+    def sink_rows():
+        # a sink missing after a run reads as None, so one appearing in
+        # the replay counts as a change too
+        out = {}
+        for name in APPEND_SINKS:
+            path = os.path.join(state_dir, f"{name}.parquet")
+            out[name] = (
+                sorted(map(repr, spark.read.parquet(path).collect()))
+                if os.path.isdir(path)
+                else None
+            )
+        return out
 
     r1 = run_batch(spark, SF_SMOKE, state_dir)
     assert r1["prices_appended"] > 0
     assert r1["tx_appended"] > 0
     routing1 = r1["routing_appended"]
     assert routing1["nominations"] > 0 and routing1["aum"] > 0
+    before = sink_rows()
 
     # Idempotency: identical input, watermark now advanced → nothing new.
     r2 = run_batch(spark, SF_SMOKE, state_dir)
     assert r2["prices_appended"] == 0
     assert r2["tx_appended"] == 0
     assert all(v == 0 for v in r2["routing_appended"].values())
+    after = sink_rows()
+    assert {n for n in APPEND_SINKS if after[n] != before[n]} == set()
 
 
 def test_watermark_commits_last_and_advances(spark, state_dir):
