@@ -79,8 +79,7 @@ def count_jobs_tasks(spark, group: str) -> tuple[int, int]:
     already-executed stages too, and counting them once per referencing
     job would inflate the floor ~2×. Returns (-1, -1) when the status
     tracker is unavailable (callers must treat that as 'no floor claim',
-    never a negative bound). Shared by run_query and bench_drift_ab so
-    the counting rules cannot drift between artifacts."""
+    never a negative bound). Called by run_query once per timed run."""
     try:
         tracker = spark.sparkContext.statusTracker()
         job_ids = tracker.getJobIdsForGroup(group)

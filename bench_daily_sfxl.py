@@ -7,9 +7,10 @@ the joins/aggs were calibrated at:
 
 - `run_batch` (pipelines.py: P1 prices, P2 tx-enrich, P3 stats, P5 routing,
   P6 rollup, watermark committed LAST) over the 4.6 GiB SFXL events table
-  (256× sf0.1, ~15.5 M events), instrumented per step through run_batch's
-  own `step_timer` hook — the bench drives the REAL driver, it does not
-  re-implement the sequence;
+  (256× sf0.1, ~15.5 M events), traced per step from outside by
+  perfbench's span tracer (each step's wall, plus its Spark jobs, tasks,
+  shuffle and executor time read back from the status store) — the bench
+  drives the REAL driver, it does not re-implement the sequence;
 - the LLM-data half of a daily run against the 12.8 M-doc decade corpus:
   incremental EXACT dedup (bloom-pruned anti-join of the batch against the
   persisted seen-hash set) and the verified near-dup CLUSTER REFRESH from
@@ -43,6 +44,10 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.append(os.path.join(os.path.dirname(os.path.abspath(__file__)), "perfbench"))
+
+import layers  # noqa: E402  (perfbench's span-to-metric rules)
+from spans import Tracer, spark_counters  # noqa: E402
 
 DOC_STRIDE = 10_000
 
@@ -51,6 +56,25 @@ def _timed(fn):
     t0 = time.perf_counter()
     out = fn()
     return out, round(time.perf_counter() - t0, 3)
+
+
+def _traced(spark, tracer, fn):
+    """Run `fn` (a run_batch call) once under the tracer: its result, its
+    wall, each step's wall (`steps`) and each step's Spark counters
+    (`spark`, steps that ran jobs only), derived by perfbench's
+    `span_metrics` from the spans and the status store's job records."""
+    tracer.spans.clear()
+    jobs_before = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    first_job = jobs_before.last().jobId() + 1 if jobs_before.size() else 0
+    out, wall = _timed(fn)
+    m = layers.span_metrics(tracer.spans, spark_counters(spark, first_job))
+    steps = {s: round(m[f"pipelines.{s}_s"], 3) for s in layers.PIPELINE_STEPS.values()}
+    counters = {
+        s: {k: round(m[f"spark.{s}.{k}"], 3) for k in layers.STEP_COUNTERS}
+        for s in layers.STEP_KEYS
+        if m[f"spark.{s}.jobs"]
+    }
+    return out, wall, {"steps": steps, "spark": counters}
 
 
 def _tree_digest(root: str) -> str:
@@ -234,6 +258,10 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
     from pyspark.sql import functions as F
 
+    # wrap the program's modules BEFORE anything binds their functions
+    tracer = Tracer()
+    layers.install(tracer)
+
     from bench_neardup_sfxl import build_fastpath_state
     from metrics_database_cron_script_spark import get_spark
     from metrics_database_cron_script_spark.functions import bloom as B
@@ -320,16 +348,12 @@ def main() -> None:
     })
 
     # ---- day 0: bootstrap the pipeline state (one-time) -------------------
-    steps0: dict[str, float] = {}
-    rep0, wall_day0 = _timed(
-        lambda: run_batch(
-            spark, day0_dir, state_dir, run_ts=cutoff,
-            step_timer=lambda s, t: steps0.__setitem__(s, t),
-        )
+    rep0, wall_day0, steps0 = _traced(
+        spark, tracer, lambda: run_batch(spark, day0_dir, state_dir, run_ts=cutoff)
     )
     phase("day0_bootstrap", {
         "wall_s": wall_day0,
-        "steps": steps0,
+        **steps0,
         "tx_appended": rep0["tx_appended"],
         "routing_appended": rep0["routing_appended"],
         "image_bootstrap_docs": rep0["image_dedup"].get("bootstrap_docs"),
@@ -337,12 +361,8 @@ def main() -> None:
     })
 
     # ---- THE daily job, pipelines half: run_batch over the grown source ---
-    steps: dict[str, float] = {}
-    rep, wall_daily = _timed(
-        lambda: run_batch(
-            spark, sfxl, state_dir, run_ts=max_ts,
-            step_timer=lambda s, t: steps.__setitem__(s, t),
-        )
+    rep, wall_daily, steps = _traced(
+        spark, tracer, lambda: run_batch(spark, sfxl, state_dir, run_ts=max_ts)
     )
     sink_digests = {
         name: _tree_digest(os.path.join(state_dir, f"{name}.parquet"))
@@ -359,7 +379,7 @@ def main() -> None:
     )
     phase("daily_pipelines", {
         "wall_s": wall_daily,
-        "steps": steps,
+        **steps,
         "prices_appended": rep["prices_appended"],
         "tx_appended": rep["tx_appended"],
         "routing_appended": rep["routing_appended"],
@@ -435,20 +455,11 @@ def main() -> None:
     fresh.select("h").distinct().write.mode("append").parquet(seen_path)
     dedup_steps["seen_append_s"] = round(time.perf_counter() - t0, 3)
     # step 3: verified near-dup cluster refresh from persisted state.
-    # Round 11 (verdict item 2): the refresh exposes its intermediate
-    # frames via `_stages`; each is noop-materialized SEPARATELY after the
-    # real timed write so the artifact carries a per-stage decomposition
-    # of the one number that was 61% of the round-10 daily wall. Stage
-    # walls OVERLAP (each sub-DAG recomputes its upstream); the timed
-    # `edge_refresh_s` is the real end-to-end write, unchanged in
-    # methodology. Full protocol + before/after: bench_edge_refresh_
-    # decomp.py / BENCH_EDGE_REFRESH_DECOMP.json / OPTIMIZATION_r11.md.
     bands = spark.read.parquet(os.path.join(vstate, "bands"))
     store = spark.read.parquet(os.path.join(vstate, "store"))
     edges = spark.read.parquet(os.path.join(vstate, "edges"))
     next_edges = os.path.join(scratch, "edges-next")
     edges_delta = os.path.join(scratch, "edges-delta")
-    stages: dict = {}
     parts: dict = {}
     # the refresh CALL is inside the timed region: it eagerly materializes
     # its O(batch) decision relations (see refresh_verified_star_edges).
@@ -462,7 +473,7 @@ def main() -> None:
     # the day actually performs.
     t0 = time.perf_counter()
     refreshed = D.refresh_verified_star_edges(
-        bands, store, edges, batch, _stages=stages, _parts=parts
+        bands, store, edges, batch, _parts=parts
     )
     if parts["displaced_empty"]:
         parts["new_scored"].write.parquet(edges_delta)
@@ -493,20 +504,6 @@ def main() -> None:
         ) == _edge_hash(refreshed)
     else:
         edges_view = spark.read.parquet(next_edges)
-    edge_stage_walls: dict[str, float] = {}
-    for name in (
-        "batch_bands", "touched", "old_hubs", "new_members", "displaced",
-        "new_edges", "new_pairs", "store_needed", "verified", "carried",
-    ):
-        df = stages.get(name)
-        if df is None:
-            continue
-        spark.sparkContext.setJobDescription(f"edge_refresh stage: {name}")
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        edge_stage_walls[name] = round(time.perf_counter() - t0, 3)
-    spark.sparkContext.setJobDescription(None)
-    dedup_steps["edge_refresh_stage_walls_s"] = edge_stage_walls
     t0 = time.perf_counter()
     comps = D.connected_components(
         edges_view
@@ -524,8 +521,6 @@ def main() -> None:
         .collect()[0]
     )
     dedup_steps["components_s"] = round(time.perf_counter() - t0, 3)
-    # total over the real pipeline steps only — the stage-wall probes are
-    # diagnostic re-materializations, not daily work
     dedup_steps["total_s"] = round(
         sum(v for v in dedup_steps.values() if isinstance(v, float)), 3
     )
@@ -566,12 +561,8 @@ def main() -> None:
         ST.read_or_empty(spark, stats_path, _STATS_SCHEMA)
     )
 
-    steps_r: dict[str, float] = {}
-    rep_r, wall_replay = _timed(
-        lambda: run_batch(
-            spark, sfxl, state_dir, run_ts=max_ts,
-            step_timer=lambda s, t: steps_r.__setitem__(s, t),
-        )
+    rep_r, wall_replay, steps_r = _traced(
+        spark, tracer, lambda: run_batch(spark, sfxl, state_dir, run_ts=max_ts)
     )
     sink_digests_r = {
         name: _tree_digest(os.path.join(state_dir, f"{name}.parquet"))
@@ -599,7 +590,7 @@ def main() -> None:
         )
     phase("replay", {
         "wall_s": wall_replay,
-        "steps": steps_r,
+        **steps_r,
         "appends": {
             "prices": rep_r["prices_appended"],
             "tx": rep_r["tx_appended"],

@@ -12,7 +12,6 @@ by construction.
 
 from __future__ import annotations
 
-import functools
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Window
@@ -565,7 +564,6 @@ def connected_components(
     pairs: DataFrame,
     max_iterations: int = 50,
     on_round=None,
-    _walls: dict | None = None,
 ) -> DataFrame:
     """Connected components over near-dup pairs → dedup clusters
     (pairs alone can't drive dedup: transitive groups A~B~C must collapse
@@ -632,20 +630,8 @@ def connected_components(
 
     Input: (doc_a, doc_b) undirected edges. Output: (doc_id, component)
     where component = min doc_id reachable. `on_round`, when given,
-    receives the residual's changed-label count per round. `_walls`
-    (bench-only): phase wall clocks land in the dict — the phases end at
-    real eager sync points, so the walls are sequential, not overlapping.
+    receives the residual's changed-label count per round.
     """
-    import time as _time
-
-    _t0 = _time.perf_counter()
-
-    def _mark(name: str) -> None:
-        nonlocal _t0
-        if _walls is not None:
-            now = _time.perf_counter()
-            _walls[name] = round(now - _t0, 3)
-            _t0 = now
 
     def _jump(lbl: DataFrame) -> DataFrame:
         # label(x) ← min(label(x), label(label(x))): the invariant
@@ -672,7 +658,6 @@ def connected_components(
         F.greatest("doc_a", "doc_b").alias("doc_b"),
     ).localCheckpoint(eager=True)
     edges = norm.filter(F.col("doc_a") != F.col("doc_b"))
-    _mark("edges_checkpoint")
 
     # ---- phase 1: collapse cliques, contract to the residual graph
     # base(x) = min(x, min neighbors(x)) = min(x, min SMALLER neighbors)
@@ -701,7 +686,6 @@ def connected_components(
         .agg(F.min("cand").alias("component"))
         .localCheckpoint(eager=True)
     )
-    _mark("base_labels")
     la = base.select(F.col("doc_id").alias("__ja"), F.col("component").alias("__ls"))
     lb = base.select(F.col("doc_id").alias("__jb"), F.col("component").alias("__ld"))
     residual = (
@@ -715,9 +699,6 @@ def connected_components(
         residual.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct().localCheckpoint(eager=True)
     n_res = residual.count()
-    _mark("residual_contract")
-    if _walls is not None:
-        _walls["residual_rows"] = n_res
     if n_res == 0:
         return base
     if n_res <= _DRIVER_RESIDUAL_MAX:
@@ -748,9 +729,6 @@ def connected_components(
         labels = pairs.sparkSession.createDataFrame(
             sol, f"doc_id {id_t}, component {id_t}"
         )
-        _mark("residual_loop")
-        if _walls is not None:
-            _walls["residual_mode"] = "driver_union_find"
         s = labels.select(
             F.col("doc_id").alias("__sk"), F.col("component").alias("__sv")
         )
@@ -760,8 +738,6 @@ def connected_components(
             "doc_id",
             F.coalesce("__sv", F.col("component")).alias("component"),
         )
-    if _walls is not None:
-        _walls["residual_mode"] = "distributed_loop"
 
     # ---- phase 2: iterate to fixpoint on the residual
     # The residual is orders of magnitude smaller than the input, but the
@@ -832,8 +808,6 @@ def connected_components(
             labels = new_labels
             if on_round is not None:
                 on_round(changed)
-            if _walls is not None:
-                _walls["loop_rounds"] = rnd + 1
             if changed == 0:
                 converged = True
                 break
@@ -847,7 +821,6 @@ def connected_components(
             )
     finally:
         cleanup()
-    _mark("residual_loop")
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "
@@ -1063,19 +1036,16 @@ def minhash_components_verified(
             shingles.unpersist()
 
 
-def _hub_edges(
-    postings: DataFrame, bucket: list[str]
-) -> tuple[DataFrame, DataFrame]:
+def _hub_edges(postings: DataFrame, bucket: list[str]) -> DataFrame:
     """The bucket-hub step shared by the full star-edge builders: per
     bucket the hub is min(doc_id), and every other member contributes one
-    (bucket, doc_a=hub, doc_b=member) edge. Returns (hubs, edges)."""
+    (bucket, doc_a=hub, doc_b=member) edge."""
     hubs = postings.groupBy(*bucket).agg(F.min("doc_id").alias("doc_a"))
-    edges = (
+    return (
         postings.join(hubs, bucket)
         .filter(F.col("doc_id") != F.col("doc_a"))
         .select(*bucket, "doc_a", F.col("doc_id").alias("doc_b"))
     )
-    return hubs, edges
 
 
 def _endpoint_ids(edges: DataFrame) -> DataFrame:
@@ -1092,7 +1062,6 @@ def scored_star_edges(
     bands: DataFrame,
     shingles: DataFrame,
     reuse_scores: DataFrame | None = None,
-    _stages: dict | None = None,
 ) -> DataFrame:
     """Bucket-attributed, Jaccard-scored star edges: for each LSH bucket
     (band, band_sig), the hub (min doc_id) connects to every other member,
@@ -1126,14 +1095,8 @@ def scored_star_edges(
     endpoints with a semi-join, so the per-doc size aggregation inside
     `verified_jaccard` never scans the whole store. Zero-intersection
     pairs (possible only via hash collision) score 0.0 instead of
-    vanishing, keeping the state total over its edge set.
-
-    `_stages` (bench-only, round-11 verdict item 2): when a dict is
-    passed, the named intermediate frames are recorded in it so a bench
-    can attribute wall time per stage (noop-materialize each). Never
-    changes the plan — the frames are the same lazy objects the result
-    is built from."""
-    hubs, edges = _hub_edges(bands, _BAND)
+    vanishing, keeping the state total over its edge set."""
+    edges = _hub_edges(bands, _BAND)
     cols = [*_BAND, "doc_a", "doc_b", "jaccard"]
     if reuse_scores is not None:
         known = reuse_scores.select("doc_a", "doc_b", "jaccard").distinct()
@@ -1171,16 +1134,6 @@ def scored_star_edges(
         .withColumn("jaccard", F.coalesce("jaccard", F.lit(0.0)))
         .select(*cols)
     )
-    if _stages is not None:
-        _stages.update(
-            hubs=hubs,
-            candidate_edges=edges,
-            reuse_hits=hits,
-            reuse_misses=misses,
-            new_pairs=pairs,
-            store_needed=needed,
-            verified=scored,
-        )
     return out if hits is None else hits.unionByName(out)
 
 
@@ -1307,7 +1260,6 @@ def _refresh_star_edges(
     score_col: str,
     score,
     rebuild,
-    _stages: dict | None = None,
     _parts: dict | None = None,
 ) -> DataFrame:
     """The carry-forward refresh of a bucket-attributed star-edge state,
@@ -1421,15 +1373,6 @@ def _refresh_star_edges(
         known_d = index_edges.join(bd, bucket, "leftsemi")
         recomputed = rebuild(members_d, store, known_d)
     carried = index_edges.select(*cols).join(bd, bucket, "left_anti")
-    if _stages is not None:
-        _stages.update(
-            touched=touched,
-            old_hubs=old_hubs,
-            new_members=new_members,
-            displaced=displaced,
-            new_edges=new_edges,
-            carried=carried,
-        )
     if _parts is not None:
         _parts["displaced_empty"] = bool(displaced_empty)
         _parts["new_scored"] = new_scored.select(*cols)
@@ -1446,7 +1389,6 @@ def refresh_verified_star_edges(
     num_hashes: int | None = None,
     band_size: int | None = None,
     batch_shingles: DataFrame | None = None,
-    _stages: dict | None = None,
     _parts: dict | None = None,
 ) -> DataFrame:
     """Daily refresh of the verified edge state: the batch pays its own
@@ -1468,8 +1410,7 @@ def refresh_verified_star_edges(
     ids (oracled by x_minhash_components_verified_incremental against the
     full-recompute recursive CTE). A batch doc already present in the
     index cannot double edge rows. `_parts` exposes the base+delta write
-    contract (see `_refresh_star_edges`); `_stages` (bench-only) records
-    the intermediate frames for per-stage attribution.
+    contract (see `_refresh_star_edges`).
 
     The hash MODE is inferred from the persisted index itself, so the
     batch's signatures are always computed in the keyspace the index
@@ -1524,12 +1465,9 @@ def refresh_verified_star_edges(
             .localCheckpoint(eager=True)
         )
         needed.unpersist()
-        if _stages is not None:
-            _stages.update(new_pairs=pairs, store_needed=needed, verified=scored)
         return new_scored
 
-    d_stages: dict | None = {} if _stages is not None else None
-    out = _refresh_star_edges(
+    return _refresh_star_edges(
         _BAND,
         index_bands,
         index_edges,
@@ -1537,14 +1475,9 @@ def refresh_verified_star_edges(
         index_shingles.select("doc_id", "shingle").unionByName(b_sh),
         "jaccard",
         score,
-        functools.partial(scored_star_edges, _stages=d_stages),
-        _stages,
+        scored_star_edges,
         _parts,
     )
-    if _stages is not None:
-        _stages.update({f"displaced_{k}": v for k, v in d_stages.items()})
-        _stages["batch_bands"] = batch_bands
-    return out
 
 
 def minhash_components_verified_refresh(

@@ -1276,7 +1276,7 @@ def phash_star_edges(chunks: DataFrame, hashes: DataFrame) -> DataFrame:
     Unlike the text path there is no score-reuse join: Hamming is one
     codegen'd xor/bit_count per edge, cheaper than the join that would
     dedupe it."""
-    return _hamming_scored(_hub_edges(chunks, _CHUNK)[1], hashes)
+    return _hamming_scored(_hub_edges(chunks, _CHUNK), hashes)
 
 
 def phash_star_state(

@@ -211,7 +211,6 @@ def update_routing(
     events: DataFrame,
     state_dir: str,
     watermark: datetime.datetime,
-    step_timer=None,
 ) -> dict[str, int]:
     """P5: routing matrix → three idempotent sink appends
     (updatescript.py:154-218). First-touch is computed against the
@@ -286,15 +285,7 @@ def update_routing(
     # the last O(history) term in the daily path.
     fence = F.col("ts") > F.lit(watermark)
 
-    import time as _time
     from concurrent.futures import ThreadPoolExecutor
-
-    def _t(name, fn):
-        t0 = _time.perf_counter()
-        out = fn()
-        if step_timer is not None:
-            step_timer(name, round(_time.perf_counter() - t0, 3))
-        return out
 
     try:
         # Fill the shared persist ONCE before the sink appends fan out:
@@ -303,7 +294,7 @@ def update_routing(
         # block computes — one eager count pays the events scan + window
         # exactly once, then every append is a cached-batch read
         # (guide §5 caching / §2.6 overlapping jobs).
-        _t("cache_fill", lambda: flagged.count())
+        flagged.count()
         # Ledger maintenance: this batch's first-touch users join the seen
         # set with their true global first_ts (first_touch ⇒ no successful
         # tx ≤ watermark, so the batch minimum IS the global minimum). On
@@ -319,8 +310,15 @@ def update_routing(
         # The four appends are independent fenced writes to DISJOINT sinks
         # (crash in any subset is absorbed by each sink's own fence on
         # replay — the commit point is the caller's watermark, which waits
-        # for all of them), so they run OVERLAPPED (guide §2.6): each is
-        # one small staged write whose wall is mostly scheduling floor.
+        # for all of them), so they are submitted to one pool. Their Spark
+        # jobs still SERIALIZE: every staged write holds
+        # state._observed_metrics_lock across the write and its
+        # observation read-back, so only the driver-side work around the
+        # writes can overlap. perfbench measures the overlap as
+        # `pipelines.p5_append_overlap` (summed append walls over the wall
+        # that covers them). Each append's wall includes its wait for the
+        # lock, so a ratio above 1 does not by itself mean Spark work ran
+        # concurrently; read it with `spark.p5_routing.*`.
         jobs = {
             "nominations": lambda: ST.idempotent_append(
                 nominations, _sink(state_dir, "sink_nominations"), key="event_id",
@@ -339,10 +337,7 @@ def update_routing(
             ),
         }
         with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = {
-                name: pool.submit(_t, f"append_{name}", fn)
-                for name, fn in jobs.items()
-            }
+            futs = {name: pool.submit(fn) for name, fn in jobs.items()}
             results = {name: f.result() for name, f in futs.items()}
         return {
             "nominations": results["nominations"],
@@ -609,17 +604,10 @@ def run_batch(
     sf_dir: str,
     state_dir: str,
     run_ts: datetime.datetime | None = None,
-    step_timer=None,
 ) -> dict[str, object]:
     """The cron-equivalent driver (updatescript.py:221-241), re-ordered so the
     watermark commit is the LAST effect. Explicit `run_ts` (reference's
-    datetime.now(), :224) keeps runs replayable. `step_timer(step_name,
-    seconds)`, when given, receives each pipeline step's wall clock —
-    bench_daily_sfxl.py instruments the REAL driver with it instead of
-    re-implementing the sequence (and its ordering guarantees) in a
-    harness."""
-    import time as _time
-
+    datetime.now(), :224) keeps runs replayable."""
     os.makedirs(state_dir, exist_ok=True)
     # Heal crashed-compaction staging BEFORE any step reads a sink. A crash
     # between compaction's two swap renames leaves a sink (flat root or
@@ -654,53 +642,20 @@ def run_batch(
             "empty_source": True,
         }
 
-    def timed(step, fn):
-        t0 = _time.perf_counter()
-        out = fn()
-        if step_timer is not None:
-            step_timer(step, round(_time.perf_counter() - t0, 3))
-        return out
-
     report: dict[str, object] = {"watermark_in": watermark}
-    report["prices_appended"] = timed(
-        "p1_prices", lambda: update_prices(spark, events, state_dir)
-    )
-    report["tx_appended"] = timed(
-        "p2_tx_enriched",
-        lambda: update_tx_enriched(spark, events, state_dir, watermark),
-    )
-    timed(
-        "p3_stats",
-        lambda: update_stats(spark, events, state_dir, run_ts, watermark),
-    )
-    report["routing_appended"] = timed(
-        "p5_routing",
-        lambda: update_routing(
-            spark, events, state_dir, watermark,
-            step_timer=(
-                None
-                if step_timer is None
-                else lambda s, t: step_timer(f"p5_routing.{s}", t)
-            ),
-        ),
-    )
-    report["rollup_days_touched"] = timed(
-        "p6_rollup", lambda: update_rollup(spark, events, state_dir, run_ts)
-    )
-    report["image_dedup"] = timed(
-        "p7_image_dedup", lambda: update_image_dedup(spark, sf_dir, state_dir)
-    )
-    report["embed_index"] = timed(
-        "p8_embed_index", lambda: update_embedding_index(spark, sf_dir, state_dir)
-    )
-    timed("watermark_commit", lambda: wm_store.commit(run_ts))
+    report["prices_appended"] = update_prices(spark, events, state_dir)
+    report["tx_appended"] = update_tx_enriched(spark, events, state_dir, watermark)
+    update_stats(spark, events, state_dir, run_ts, watermark)
+    report["routing_appended"] = update_routing(spark, events, state_dir, watermark)
+    report["rollup_days_touched"] = update_rollup(spark, events, state_dir, run_ts)
+    report["image_dedup"] = update_image_dedup(spark, sf_dir, state_dir)
+    report["embed_index"] = update_embedding_index(spark, sf_dir, state_dir)
+    wm_store.commit(run_ts)
     # LAST among the data effects, after every sink (fixes §3 hazard).
     # Compaction runs AFTER the commit on purpose: it changes file layout,
     # never row content, so a crash mid-compaction can cost at most a
     # re-compaction — the watermark must not wait on maintenance.
-    report["compaction"] = timed(
-        "p9_compaction", lambda: run_maintenance(spark, state_dir)
-    )
+    report["compaction"] = run_maintenance(spark, state_dir)
     report["watermark_out"] = run_ts
     return report
 

@@ -155,6 +155,47 @@ def _publish_parquet_files(stage: str, path: str) -> None:
             os.rename(os.path.join(root, name), os.path.join(out, name))
 
 
+def _stage_audit_publish(
+    df: DataFrame, path: str, partition_by: list[str] | None = None, pre_publish=None
+) -> int:
+    """The stage-audit-publish core of both appends: write `df` ONCE to a
+    sibling `<path>.stage-*` dir with its row count riding the write as an
+    observe metric, run `pre_publish` (if given), then rename the staged
+    files into the sink only when the count is non-zero. Returns the
+    count."""
+    spark = df.sparkSession
+    # Reap stage dirs stranded by a previous crashed run (the finally
+    # below can't run under SIGKILL). Single-writer model (module
+    # docstring): any pre-existing stage is dead by definition.
+    parent, base = os.path.split(path.rstrip("/"))
+    parent = parent or "."
+    if os.path.isdir(parent):
+        for n in os.listdir(parent):
+            if n.startswith(f"{base}.stage-"):
+                shutil.rmtree(os.path.join(parent, n), ignore_errors=True)
+    obs = Observation()
+    staged = df.observe(obs, F.count(F.lit(1)).alias("n"))
+    stage = f"{path}.stage-{uuid.uuid4().hex[:8]}"
+    try:
+        # the staged write carries this append's count AND any caller
+        # observations (the I3 gate) — run it with observation-eliminating
+        # AQE rewrites off so an empty replay batch resolves to 0 instead
+        # of asserting in the JVM
+        with _keep_observed_metrics(spark):
+            writer = staged.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(stage)
+            n = int(obs.get["n"])
+            if pre_publish is not None:
+                pre_publish()
+        if n:
+            _publish_parquet_files(stage, path)
+        return n
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
 def idempotent_append(
     new: DataFrame,
     path: str,
@@ -204,44 +245,12 @@ def idempotent_append(
     history. CORRECTNESS CONTRACT: the caller must guarantee that any sink
     row NOT satisfying `fence` cannot share `key` with any batch row; the
     watermark contract above is the canonical instance."""
-    spark = new.sparkSession
-    # Reap stage dirs stranded by a previous crashed run (the finally
-    # below can't run under SIGKILL). Single-writer model (module
-    # docstring): any pre-existing stage is dead by definition.
-    parent, base = os.path.split(path.rstrip("/"))
-    parent = parent or "."
-    if os.path.isdir(parent):
-        for n in os.listdir(parent):
-            if n.startswith(f"{base}.stage-"):
-                shutil.rmtree(os.path.join(parent, n), ignore_errors=True)
     if _exists(path):
-        existing = spark.read.parquet(path)
+        existing = new.sparkSession.read.parquet(path)
         if fence is not None:
             existing = existing.filter(fence)
-        fresh = new.join(existing.select(key), key, "left_anti")
-    else:
-        fresh = new
-    obs = Observation()
-    fresh = fresh.observe(obs, F.count(F.lit(1)).alias("n"))
-    stage = f"{path}.stage-{uuid.uuid4().hex[:8]}"
-    try:
-        # the staged write carries this append's count AND any caller
-        # observations (the I3 gate) — run it with observation-eliminating
-        # AQE rewrites off so an empty replay batch resolves to 0 instead
-        # of asserting in the JVM
-        with _keep_observed_metrics(spark):
-            writer = fresh.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(stage)
-            n = int(obs.get["n"])
-            if pre_publish is not None:
-                pre_publish()
-        if n:
-            _publish_parquet_files(stage, path)
-        return n
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+        new = new.join(existing.select(key), key, "left_anti")
+    return _stage_audit_publish(new, path, partition_by, pre_publish)
 
 
 def staged_append(df: DataFrame, path: str) -> int:
@@ -256,25 +265,7 @@ def staged_append(df: DataFrame, path: str) -> int:
     publishes NOTHING (the stage is dropped — no empty part-file
     accumulation on replays), and the staged files are renamed in, so a
     reader never sees a half-written file. Returns the appended count."""
-    spark = df.sparkSession
-    parent, base = os.path.split(path.rstrip("/"))
-    parent = parent or "."
-    if os.path.isdir(parent):
-        for n in os.listdir(parent):
-            if n.startswith(f"{base}.stage-"):
-                shutil.rmtree(os.path.join(parent, n), ignore_errors=True)
-    obs = Observation()
-    staged = df.observe(obs, F.count(F.lit(1)).alias("n"))
-    stage = f"{path}.stage-{uuid.uuid4().hex[:8]}"
-    try:
-        with _keep_observed_metrics(spark):
-            staged.write.mode("overwrite").parquet(stage)
-            n = int(obs.get["n"])
-        if n:
-            _publish_parquet_files(stage, path)
-        return n
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    return _stage_audit_publish(df, path)
 
 
 def snapshot_overwrite(

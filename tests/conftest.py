@@ -20,6 +20,24 @@ def spark():
     yield s
 
 
+@pytest.fixture(autouse=True, scope="module")
+def _release_dead_spark_blocks():
+    """After each module, collect the frames it left unreferenced and run a
+    JVM GC, so Spark's context cleaner drops their localCheckpoint and
+    broadcast blocks. Without this, storage memory held by earlier modules
+    is freed only whenever a GC happens to run, and a later module's
+    execution memory depends on that timing."""
+    yield
+    import gc
+
+    from pyspark import SparkContext
+
+    gc.collect()
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        sc._jvm.System.gc()
+
+
 @contextlib.contextmanager
 def set_confs(spark, **kv):
     """Set SQL confs for a block and restore prior values on exit; `__` in

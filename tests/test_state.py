@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
+
 
 def test_watermark_roundtrip(spark, tmp_path):
     from metrics_database_cron_script_spark.state import Watermark
@@ -125,7 +127,22 @@ def test_compact_preserves_partitioned_layout(spark, tmp_path):
     assert got == orig
 
 
-def test_empty_first_append_leaves_no_sink(spark, tmp_path):
+APPENDS = ("idempotent_append", "staged_append")
+
+
+def _appender(primitive: str, path: str, **kw):
+    """One call shape for both stage-audit-publish primitives:
+    idempotent_append anti-joins on `event_id` (with `kw`), staged_append
+    appends the batch as given."""
+    from metrics_database_cron_script_spark import state
+
+    if primitive == "idempotent_append":
+        return lambda df: state.idempotent_append(df, path, key="event_id", **kw)
+    return lambda df: state.staged_append(df, path)
+
+
+@pytest.mark.parametrize("primitive", APPENDS)
+def test_empty_first_append_leaves_no_sink(spark, tmp_path, primitive):
     """Regression: an all-empty FIRST batch on a partitioned sink used to
     create a schema-less directory (only _SUCCESS) that bricked every
     subsequent read with UNABLE_TO_INFER_SCHEMA. Staged publish drops the
@@ -133,33 +150,48 @@ def test_empty_first_append_leaves_no_sink(spark, tmp_path):
     next non-empty batch bootstraps it normally."""
     import os
 
-    from metrics_database_cron_script_spark.state import idempotent_append
-
     path = str(tmp_path / "sink.parquet")
+    append = _appender(primitive, path, partition_by=["chain"])
     empty = spark.createDataFrame([], "event_id long, chain string")
-    assert idempotent_append(empty, path, key="event_id",
-                             partition_by=["chain"]) == 0
+    assert append(empty) == 0
     assert not os.path.exists(path)
     rows = spark.createDataFrame([(1, "dot")], "event_id long, chain string")
-    assert idempotent_append(rows, path, key="event_id",
-                             partition_by=["chain"]) == 1
+    assert append(rows) == 1
     assert spark.read.parquet(path).count() == 1
 
 
-def test_empty_replays_accumulate_no_files(spark, tmp_path):
+@pytest.mark.parametrize("primitive", APPENDS)
+def test_empty_replays_accumulate_no_files(spark, tmp_path, primitive):
     """Regression: all-duplicate replays (the streaming foreachBatch idle
-    case) must not grow the sink's file count with empty part files."""
+    case) must not grow the sink's file count with empty part files.
+    staged_append has no key anti-join; its callers' replays arrive as
+    EMPTY frames (the edge refresh's suppression), so that is its replay."""
     import os
 
-    from metrics_database_cron_script_spark.state import idempotent_append
-
     path = str(tmp_path / "sink.parquet")
+    append = _appender(primitive, path)
     batch = spark.range(0, 5).toDF("event_id")
-    assert idempotent_append(batch, path, key="event_id") == 5
+    replay = batch if primitive == "idempotent_append" else batch.limit(0)
+    assert append(batch) == 5
     files_before = sorted(os.listdir(path))
     for _ in range(3):
-        assert idempotent_append(batch, path, key="event_id") == 0
+        assert append(replay) == 0
     assert sorted(os.listdir(path)) == files_before
+
+
+@pytest.mark.parametrize("primitive", APPENDS)
+def test_append_reaps_stranded_stage_dir(spark, tmp_path, primitive):
+    """A `<sink>.stage-*` dir stranded by a killed run is removed by the
+    next append of either primitive; another sink's stage is left alone."""
+    import os
+
+    stranded = tmp_path / "sink.parquet.stage-x"
+    stranded.mkdir()
+    (stranded / "part-00000.parquet").write_bytes(b"torn")
+    (tmp_path / "other.parquet.stage-y").mkdir()
+    append = _appender(primitive, str(tmp_path / "sink.parquet"))
+    assert append(spark.range(0, 3).toDF("event_id")) == 3
+    assert sorted(os.listdir(tmp_path)) == ["other.parquet.stage-y", "sink.parquet"]
 
 
 def test_pre_publish_abort_leaves_sink_untouched(spark, tmp_path):
