@@ -251,23 +251,33 @@ def lsh_candidate_pairs(
 
 
 def verified_jaccard(shingles: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Exact Jaccard on candidate pairs only: |A∩B| via a shingle equi-join
-    restricted to candidates, |A∪B| from per-doc sizes.
+    """Exact Jaccard on candidate pairs only, as (doc_a, doc_b, jaccard)
+    rounded to 6 places.
 
     Sizes come in two shapes:
     - CARRIED: when `pairs` already has `sz_a`/`sz_b` columns (threaded
       through the banding self-join via `lsh_candidate_pairs(carry=
-      ("sz",))` from a `minhash_signatures(with_size=True)` pass), no size
-      relation is built at all — the union term is a projection (round-6
-      job-floor shave: one aggregation + one broadcast build fewer).
-    - DERIVED: otherwise the per-doc size relation is aggregated here and
-      joins TWICE (doc_a side, doc_b side) — both joins reference the SAME
-      aliased plan instead of two differently re-projected copies, so the
-      canonical broadcast exchange is built once and the second join is a
-      ReusedExchange (round-5 shave)."""
-    sa = shingles.select(F.col("doc_id").alias("doc_a"), "shingle")
-    sb = shingles.select(F.col("doc_id").alias("doc_b"), "shingle")
+      ("sz",))` from a `minhash_signatures(with_size=True)` pass), |A∩B|
+      comes from a shingle equi-join and |A∪B| is a projection; a pair
+      with no shared shingle is absent.
+    - DERIVED: otherwise one grouped pass over the pairs' endpoint
+      shingles. Each pair contributes two endpoint rows (doc_id, doc_a,
+      doc_b); the shingle relation joins them ONCE, one aggregate per
+      (pair, shingle) marks the shingle shared when both endpoints hold
+      it, and one per pair gives shared / all (both hash-partitioned on
+      the pair, so one shuffle). There is no size relation and no
+      self-join, so `shingles` is read once. Set semantics:
+      duplicated (doc_id, shingle) rows — a store ∪ re-ingested batch —
+      score as the distinct input does. A pair with no shared shingle
+      scores 0.0; a pair with an endpoint that has no shingle is absent.
+      The endpoint join adds no hint of its own. A broadcast hint on
+      `pairs` reaches it (the endpoint rows are an explode of `pairs`, not
+      a union): the daily refresh hints its O(batch) pairs, so the store
+      is scanned once as the streamed side. Un-hinted, statistics plan
+      it: a full build's O(corpus) pairs get a shuffle join."""
     if "sz_a" in pairs.columns and "sz_b" in pairs.columns:
+        sa = shingles.select(F.col("doc_id").alias("doc_a"), "shingle")
+        sb = shingles.select(F.col("doc_id").alias("doc_b"), "shingle")
         inter = (
             pairs.join(sa, "doc_a")
             .join(sb, ["doc_b", "shingle"])
@@ -282,25 +292,31 @@ def verified_jaccard(shingles: DataFrame, pairs: DataFrame) -> DataFrame:
                 6,
             ).alias("jaccard"),
         )
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    inter = (
-        pairs.join(sa, "doc_a")
-        .join(sb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
+    ends = pairs.select(
+        F.explode(F.array("doc_a", "doc_b")).alias("doc_id"), "doc_a", "doc_b"
     )
-    za, zb = sizes.alias("za"), sizes.alias("zb")
+    per_shingle = (
+        shingles.select("doc_id", "shingle")
+        .join(ends, "doc_id")
+        # hashing on the pair serves both aggregates: one shuffle, not two
+        .repartition("doc_a", "doc_b")
+        .groupBy("doc_a", "doc_b", "shingle")
+        .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
+    )
     return (
-        inter.join(za, F.col("doc_a") == F.col("za.doc_id"))
-        .join(zb, F.col("doc_b") == F.col("zb.doc_id"))
+        per_shingle.groupBy("doc_a", "doc_b")
+        .agg(
+            F.sum((F.col("lo") != F.col("hi")).cast("long")).alias("inter"),
+            F.count(F.lit(1)).alias("total"),
+            # both endpoints hold a shingle; a pair with a shingle-less
+            # endpoint stays unscored (the star-edge scorers coalesce it)
+            (F.min("lo") != F.max("hi")).alias("both"),
+        )
+        .filter("both")
         .select(
             "doc_a",
             "doc_b",
-            F.round(
-                F.col("inter")
-                / (F.col("za.sz") + F.col("zb.sz") - F.col("inter")),
-                6,
-            ).alias("jaccard"),
+            F.round(F.col("inter") / F.col("total"), 6).alias("jaccard"),
         )
     )
 
@@ -1049,8 +1065,10 @@ def _hub_edges(postings: DataFrame, bucket: list[str]) -> DataFrame:
 
 
 def _endpoint_ids(edges: DataFrame) -> DataFrame:
-    """Distinct doc_ids at either end of an edge relation: the keys a
-    scorer semi-restricts its store to."""
+    """Distinct doc_ids at either end of an edge relation: the keys the
+    image refresh scorer (`multimodal.refresh_phash_star_edges`)
+    semi-restricts its hash store to. The text scorers need none: their
+    `verified_jaccard` joins the endpoints itself."""
     return (
         edges.select(F.col("doc_a").alias("doc_id"))
         .unionByName(edges.select(F.col("doc_b").alias("doc_id")))
@@ -1091,11 +1109,11 @@ def scored_star_edges(
     `shingles` must cover every doc that can appear in a NEW pair; pass
     8-byte hashed shingles (`word_shingles(hashed=True)` keyspace) — the
     decade run's string-shingle verification join spilled >200 GB before
-    the hashed-key rewrite. The frame is pre-restricted to new-pair
-    endpoints with a semi-join, so the per-doc size aggregation inside
-    `verified_jaccard` never scans the whole store. Zero-intersection
-    pairs (possible only via hash collision) score 0.0 instead of
-    vanishing, keeping the state total over its edge set."""
+    the hashed-key rewrite. `verified_jaccard` reads it once, joined to
+    the new pairs' endpoints, with set semantics, so a store ∪ batch
+    relation that repeats a re-ingested doc's rows needs no distinct().
+    A pair whose endpoint has no shingle scores 0.0 instead of vanishing,
+    keeping the state total over its edge set."""
     edges = _hub_edges(bands, _BAND)
     cols = [*_BAND, "doc_a", "doc_b", "jaccard"]
     if reuse_scores is not None:
@@ -1106,29 +1124,7 @@ def scored_star_edges(
     else:
         hits, misses = None, edges
     pairs = misses.select("doc_a", "doc_b").distinct()
-    needed = shingles.select("doc_id", "shingle")
-    if reuse_scores is not None:
-        # refresh path: new-pair endpoints are FEW (O(batch)), so the
-        # semi-join keeps the store scan from feeding whole-corpus rows
-        # into the verification shuffle. In the full build (no reuse)
-        # nearly every doc is an endpoint and the restriction would only
-        # add a full-store shuffle — skip it there.
-        ids = _endpoint_ids(pairs)
-        # NO broadcast hint here (round-12, ADVICE r11): the only caller
-        # of this reuse branch is refresh_verified_star_edges' DISPLACED-
-        # bucket path, whose `misses` are ALL candidate edges of the
-        # displaced buckets — one low-id batch doc landing in a large
-        # clique bucket makes `ids` approximate that bucket's full
-        # membership, and a forced driver-collected broadcast of millions
-        # of rows risks a driver OOM. Un-hinted the semi degrades to a
-        # shuffle, which is the correct failure mode on that path. The
-        # batch-bounded refresh main path hints its own semi-join inline
-        # (refresh_verified_star_edges), where O(batch) is a contract.
-        # distinct(): `shingles` here is index_store ∪ batch shingles, so
-        # a re-ingested doc's rows appear TWICE and would double both its
-        # size and its intersections in verified_jaccard.
-        needed = needed.join(ids, "doc_id", "leftsemi").distinct()
-    scored = verified_jaccard(needed, pairs)
+    scored = verified_jaccard(shingles, pairs)
     out = (
         misses.join(scored, ["doc_a", "doc_b"], "left")
         .withColumn("jaccard", F.coalesce("jaccard", F.lit(0.0)))
@@ -1440,32 +1436,22 @@ def refresh_verified_star_edges(
         )
 
     def score(new_edges: DataFrame, store: DataFrame) -> DataFrame:
-        pairs = new_edges.select("doc_a", "doc_b").distinct()
-        # broadcast: O(batch)-bounded endpoints; un-hinted, the store semi
-        # planned as a full 679 M-row sort-merge shuffle. distinct(): the
-        # store is index ∪ batch shingles, so a re-ingested hub's rows
-        # appear twice and would inflate its Jaccard
-        # (test_refresh_scores_reingested_hub_with_new_member). persist:
-        # verified_jaccard references the slice three times, each a full
-        # store scan otherwise; a serial cache fill measured WORSE cold
-        # (70.1 s vs 57.9 s) — the racing scans share page-cache IO.
-        needed = (
-            store.join(F.broadcast(_endpoint_ids(pairs)), "doc_id", "leftsemi")
-            .distinct()
-            .persist()
-        )
-        scored = verified_jaccard(needed, pairs)
-        # zero surviving intersection (hash collision) scores 0.0, the
-        # state-totality rule of scored_star_edges. The eager pin lets
-        # `needed` unpersist at the function boundary (no cached frame
-        # leaked per call) and keeps the state write off the store scan.
-        new_scored = (
+        # broadcast: the pairs are O(batch), but a checkpoint keeps its lazy
+        # plan's size estimate, which scales with the table the batch was
+        # filtered from (21.7 MB for 19k pairs over 160k docs); un-hinted,
+        # an estimate past the threshold shuffles the whole store. The
+        # store's repeated rows of a re-ingested doc count once in
+        # verified_jaccard (test_refresh_scores_reingested_hub_with_new_member).
+        pairs = F.broadcast(new_edges.select("doc_a", "doc_b").distinct())
+        scored = verified_jaccard(store, pairs)
+        # an endpoint without shingles scores 0.0, the state-totality rule
+        # of scored_star_edges. The eager pin keeps the delta write and the
+        # returned state off the store scan.
+        return (
             new_edges.join(scored, ["doc_a", "doc_b"], "left")
             .withColumn("jaccard", F.coalesce("jaccard", F.lit(0.0)))
             .localCheckpoint(eager=True)
         )
-        needed.unpersist()
-        return new_scored
 
     return _refresh_star_edges(
         _BAND,
@@ -1673,11 +1659,7 @@ def minhash_probe_index_portable(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    # distinct() so an id on both sides doesn't duplicate its (doc_id,
-    # shingle) rows and skew every Jaccard it appears in
-    return verified_jaccard(
-        corpus_sh.unionByName(batch_sh).distinct(), pairs
-    )
+    return verified_jaccard(corpus_sh.unionByName(batch_sh), pairs)
 
 
 def minhash_near_dups_portable(
