@@ -36,14 +36,15 @@ class ExpectationsFailed(RuntimeError):
         self.metrics = metrics
 
 
-def observe_rules(df: DataFrame, rules: dict[str, Column]):
+def observe_rules(df: DataFrame, rules: dict[str, Column] | None = None):
     """Attach rule-violation counters to `df` without routing: returns
     (df_with_observe_node, resolve) where `resolve()` — called after SOME
     action has executed the returned frame — yields
-    {'rows': n, <rule>: violations...}. The single-pass audit primitive
-    behind `validate` and the versioned table's write-audit-publish."""
-    if not rules:
-        raise ValueError("observe_rules() needs at least one rule")
+    {'rows': n, <rule>: violations...}; with no rules it counts rows only.
+    The single-pass audit primitive behind `validate`, the versioned
+    table's write-audit-publish and the state appends. Counters are
+    `count`/`count_if`, so an empty frame resolves to zeros, not NULLs."""
+    rules = rules or {}
     if "rows" in rules:
         raise ValueError(
             "'rows' is reserved for the total-row counter — rename the rule"
@@ -53,9 +54,7 @@ def observe_rules(df: DataFrame, rules: dict[str, Column]):
         obs,
         F.count(F.lit(1)).alias("rows"),
         *[
-            F.sum(
-                F.when(cond.eqNullSafe(F.lit(False)), 1).otherwise(0)
-            ).alias(f"viol_{name}")
+            F.count_if(cond.eqNullSafe(F.lit(False))).alias(f"viol_{name}")
             for name, cond in rules.items()
         ],
     )
@@ -92,6 +91,8 @@ def validate(df: DataFrame, rules: dict[str, Column]) -> Validated:
     are per-rule violations plus total rows — a row failing two rules
     increments both, so the counts are rule diagnostics, not a partition
     of rows."""
+    if not rules:
+        raise ValueError("validate() needs at least one rule")
     observed, resolve = observe_rules(df, rules)
     fails = [
         F.when(cond.eqNullSafe(F.lit(False)), F.lit(name))

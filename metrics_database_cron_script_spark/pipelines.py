@@ -30,7 +30,7 @@ from __future__ import annotations
 import datetime
 import os
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metrics_database_cron_script_spark import state as ST
@@ -64,15 +64,13 @@ def update_tx_enriched(
     """P2: watermark scan → anti-join dedup → broadcast price join → dollar
     CASE → append (updatescript.py:57-108). Price rows come from the P1
     state table, as in the reference (step 2 depends on step 1)."""
-    obs_in, obs_out = Observation(), Observation()
     tx = R.tx_view(events.filter(F.col("ts") > F.lit(watermark)))
-    tx = tx.observe(obs_in, F.count(F.lit(1)).alias("n"))
     # read_or_empty: with an all-empty source the prices sink legitimately
     # does not exist yet (staged appends publish nothing for 0 rows)
     price = ST.read_or_empty(
         spark, _sink(state_dir, "prices"), "date date, price double"
     )
-    joined = tx.join(F.broadcast(price), F.to_date(tx["ts"]) == price["date"], "inner")
+    joined = tx.join(F.broadcast(price), F.to_date(tx["ts"]) == price["date"], "left")
     dollar = (
         F.when(~F.col("successful"), F.lit(0.0))
         .when(F.col("stake") == F.col("alreadyBonded"), F.col("stake") * F.col("price"))
@@ -82,25 +80,12 @@ def update_tx_enriched(
         "event_id", "ts", "user_id", "chain", "successful", "stake",
         "alreadyBonded", "price", dollar.alias("txDollarValue"),
     )
-    # Invariant I3: the reference crashes on a missing price day; we assert
-    # no row was silently lost by the inner join instead. Both counts ride
-    # the append's STAGED write as observed metrics (pre-join vs post-join
-    # nodes of the SAME plan) — zero extra jobs, where count()-ing each side
-    # would execute the scan and the join twice more. The check runs in the
-    # append's pre_publish hook: the batch is fully written to staging (so
-    # the observations are resolved) but NOTHING is visible in the sink yet;
-    # a violation aborts with tx_enriched untouched, exactly the
-    # write-blocking gate the pre-observe code had, at staging-write cost.
-    enriched = enriched.observe(obs_out, F.count(F.lit(1)).alias("n"))
-
-    def _i3_gate() -> None:
-        n_in, n_out = int(obs_in.get["n"]), int(obs_out.get["n"])
-        if n_in != n_out:
-            raise AssertionError(
-                f"price dim incomplete: {n_in - n_out} tx rows on days "
-                "without a price"
-            )
-
+    # Invariant I3: the reference crashes on a missing price day; we fail
+    # loudly instead of dropping the tx. The LEFT join keeps such a tx
+    # with a NULL price, and the append's audit rule counts those rows in
+    # the observation that already carries its row count (the root of the
+    # staged write — zero extra jobs). A violation aborts with
+    # tx_enriched untouched, before anything is published.
     # Frontier fence (round 10): the batch is watermark-scanned over an
     # immutable source, so a sink row can only collide with a batch
     # event_id if its own ts > watermark — the anti-join needs the
@@ -109,7 +94,7 @@ def update_tx_enriched(
         enriched,
         _sink(state_dir, "tx_enriched"),
         key="event_id",
-        pre_publish=_i3_gate,
+        audit={"price dim incomplete": F.col("price").isNotNull()},
         fence=F.col("ts") > F.lit(watermark),
     )
 
@@ -310,15 +295,13 @@ def update_routing(
         # The four appends are independent fenced writes to DISJOINT sinks
         # (crash in any subset is absorbed by each sink's own fence on
         # replay — the commit point is the caller's watermark, which waits
-        # for all of them), so they are submitted to one pool. Their Spark
-        # jobs still SERIALIZE: every staged write holds
-        # state._observed_metrics_lock across the write and its
-        # observation read-back, so only the driver-side work around the
-        # writes can overlap. perfbench measures the overlap as
-        # `pipelines.p5_append_overlap` (summed append walls over the wall
-        # that covers them). Each append's wall includes its wait for the
-        # lock, so a ratio above 1 does not by itself mean Spark work ran
-        # concurrently; read it with `spark.p5_routing.*`.
+        # for all of them), so they are submitted to one pool and their
+        # Spark jobs overlap: each append reads its count from its own
+        # root observation and touches no session conf, so the appends
+        # share nothing but the cached `flagged`. perfbench measures the
+        # overlap as `pipelines.p5_append_overlap` (summed append walls
+        # over the wall that covers them); read it with
+        # `spark.p5_routing.*`.
         jobs = {
             "nominations": lambda: ST.idempotent_append(
                 nominations, _sink(state_dir, "sink_nominations"), key="event_id",

@@ -12,6 +12,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+
 
 def get_spark(
     app_name: str = "metrics_database_cron_script_spark",
@@ -62,9 +65,19 @@ def get_spark(
     # Ad-hoc overrides for config experiments / site tuning:
     # SPARK_GRAFT_EXTRA_CONF="spark.foo=1;spark.bar=2"
     extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
+    confs = {}
     for pair in filter(None, (p.strip() for p in extra.split(";"))):
         k, _, v = pair.partition("=")
-        builder = builder.config(k.strip(), v.strip())
+        confs[k.strip()] = v.strip()
+    # Python workers unpickle the package's functions (mapInPandas bodies,
+    # Python data sources) by import path, so they need the package's
+    # parent directory on their path even when the driver reached the
+    # package through sys.path alone. A value set above is kept after it;
+    # Spark itself adds the launching environment's PYTHONPATH.
+    worker_path = confs.get(_WORKER_PATH)
+    confs[_WORKER_PATH] = os.pathsep.join(filter(None, (_PACKAGE_ROOT, worker_path)))
+    for k, v in confs.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -7,8 +7,10 @@ The reference keeps state in MongoDB: a single-row `lastUpdated` watermark
 - `Watermark`: a one-row parquet table, overwritten atomically via
   write-new-then-swap; committed LAST in the pipeline (the reference commits
   it before its step 5 — the §3 ordering hazard we deliberately fix).
-- `idempotent_append`: left_anti against the sink's existing keys, then
-  append — batch-level exactly-once on re-run, zero per-row probes.
+- `idempotent_append`: left_anti against the sink's existing keys, then a
+  staged append audited by one root-level observation (row count plus
+  optional `audit` rules) — batch-level exactly-once on re-run, zero
+  per-row probes, no extra job for the audit.
 - `snapshot_overwrite`: keep-latest-per-key window over old ∪ new, full
   rewrite — the plain-Parquet form of MERGE…WHEN MATCHED UPDATE. With a
   Delta/Iceberg runtime the same call sites become MERGE INTO (import-gated,
@@ -17,7 +19,9 @@ The reference keeps state in MongoDB: a single-row `lastUpdated` watermark
 All writers are directory-swap atomic: write to `<path>.tmp-<pid>`, then
 rename over the old directory — a crash mid-write leaves the previous
 committed state intact. These primitives assume the reference's own
-operating model: ONE writer (a daily cron). For concurrent writers use
+operating model: ONE writer (a daily cron). Within that writer, appends
+to DISJOINT sinks may run from concurrent threads of one session: they
+touch no session conf and take no lock. For concurrent writers use
 `versioned.VersionedSnapshot` — same keep-latest MERGE semantics under
 optimistic concurrency (exclusive-create commit log, conflict-detect,
 retry), the hand-rolled form of what Delta/Iceberg provide.
@@ -25,66 +29,19 @@ retry), the hand-rolled form of what Delta/Iceberg provide.
 
 from __future__ import annotations
 
-import contextlib
 import datetime
 import os
 import shutil
-import threading
 import uuid
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from metrics_database_cron_script_spark.operators.expectations import observe_rules
 
 
 def _exists(path: str) -> bool:
     return os.path.exists(path)
-
-
-_AQE_EMPTY_RULE = (
-    "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
-)
-
-# The excludedRules window below mutates SESSION-level conf; serialize it
-# so two threads appending through one SparkSession cannot restore the
-# conf out from under each other's staged write. (The state module's
-# documented operating model is single-writer — this lock closes the
-# intra-process sharp edge for callers who parallelize independent sinks.)
-# RLock, not Lock: the guarded window spans the staged write, the
-# Observation.get AND the pre_publish callback — a pre_publish that
-# re-enters idempotent_append on the SAME thread (e.g. an audit-table
-# append) must not deadlock. Note the cost either way: while one append's
-# Spark job runs inside the window, concurrent appends from OTHER threads
-# in this process serialize for the full duration of that write, not just
-# the conf flip.
-_observed_metrics_lock = threading.RLock()
-
-
-@contextlib.contextmanager
-def _keep_observed_metrics(spark: SparkSession):
-    """AQE's empty-relation propagation REPLACES a runtime-empty subtree —
-    including any `CollectMetrics` (df.observe) nodes inside it — with an
-    empty relation, so a caller's `Observation.get` on an empty replay
-    batch dies in a JVM assertion instead of returning 0 (reproduced on
-    Spark 4.1: empty filter → observe → join under AQE; the batch-level
-    audits only surfaced this at SFXL because `load_table` gates AQE on at
-    ≥4 GiB). Excluding the rule around the staged write keeps every
-    observation resolvable; the only plans that lose the rewrite are the
-    (near-)empty ones where the saved work is nil — replays, by
-    definition."""
-    key = "spark.sql.adaptive.optimizer.excludedRules"
-    with _observed_metrics_lock:
-        try:
-            old = spark.conf.get(key)
-        except Exception:
-            old = None
-        spark.conf.set(key, (old + "," if old else "") + _AQE_EMPTY_RULE)
-        try:
-            yield
-        finally:
-            if old is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, old)
 
 
 def atomic_overwrite(df: DataFrame, path: str) -> None:
@@ -156,14 +113,26 @@ def _publish_parquet_files(stage: str, path: str) -> None:
 
 
 def _stage_audit_publish(
-    df: DataFrame, path: str, partition_by: list[str] | None = None, pre_publish=None
+    df: DataFrame,
+    path: str,
+    partition_by: list[str] | None = None,
+    audit: dict[str, Column] | None = None,
 ) -> int:
     """The stage-audit-publish core of both appends: write `df` ONCE to a
-    sibling `<path>.stage-*` dir with its row count riding the write as an
-    observe metric, run `pre_publish` (if given), then rename the staged
-    files into the sink only when the count is non-zero. Returns the
-    count."""
-    spark = df.sparkSession
+    sibling `<path>.stage-*` dir with its row count and the `audit` rules'
+    violation counts riding the write as one observation, then rename the
+    staged files into the sink only when every rule held and the count is
+    non-zero. A violated rule drops the stage, leaves the sink untouched
+    and raises AssertionError naming the rule. Returns the count.
+
+    The observation is the ROOT of the written plan
+    (operators.expectations.observe_rules on the final frame). AQE's
+    empty-relation propagation replaces a runtime-empty subtree, with any
+    observation inside it, by an empty relation, and reading such an
+    observation then fails in a JVM assertion; a root observation always
+    resolves, to 0 on an empty batch. So no caller observation may sit
+    below the append's anti-join: express a per-row invariant as an
+    `audit` rule instead."""
     # Reap stage dirs stranded by a previous crashed run (the finally
     # below can't run under SIGKILL). Single-writer model (module
     # docstring): any pre-existing stage is dead by definition.
@@ -173,22 +142,21 @@ def _stage_audit_publish(
         for n in os.listdir(parent):
             if n.startswith(f"{base}.stage-"):
                 shutil.rmtree(os.path.join(parent, n), ignore_errors=True)
-    obs = Observation()
-    staged = df.observe(obs, F.count(F.lit(1)).alias("n"))
+    observed, resolve = observe_rules(df, audit)
     stage = f"{path}.stage-{uuid.uuid4().hex[:8]}"
     try:
-        # the staged write carries this append's count AND any caller
-        # observations (the I3 gate) — run it with observation-eliminating
-        # AQE rewrites off so an empty replay batch resolves to 0 instead
-        # of asserting in the JVM
-        with _keep_observed_metrics(spark):
-            writer = staged.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(stage)
-            n = int(obs.get["n"])
-            if pre_publish is not None:
-                pre_publish()
+        writer = observed.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(stage)
+        metrics = resolve()
+        n = metrics.pop("rows")
+        violated = {rule: v for rule, v in metrics.items() if v}
+        if violated:
+            raise AssertionError(
+                f"{path}: audit failed, append aborted — "
+                + "; ".join(f"{rule}: {v} rows" for rule, v in violated.items())
+            )
         if n:
             _publish_parquet_files(stage, path)
         return n
@@ -201,7 +169,7 @@ def idempotent_append(
     path: str,
     key: str,
     partition_by: list[str] | None = None,
-    pre_publish=None,
+    audit: dict[str, Column] | None = None,
     fence=None,
 ) -> int:
     """R14 as a set operation: append only rows whose `key` is absent from
@@ -212,18 +180,19 @@ def idempotent_append(
 
     Stage-audit-publish shape: the batch is written ONCE to a sibling
     staging dir with the appended-row count riding the write as a
-    `df.observe` metric (count-then-write would run the anti-join twice —
-    a full second scan of the batch at 100 TB), and the staged files are
-    then renamed into the sink. Consequences the naive append lacks:
+    `df.observe` metric at the plan root (count-then-write would run the
+    anti-join twice — a full second scan of the batch at 100 TB), and the
+    staged files are then renamed into the sink. Consequences the naive
+    append lacks:
 
     - an all-zero batch publishes NOTHING — no schema-less partitioned
       dir that bricks the next read, no empty part-file accumulation on
       replays; the stage dir is simply dropped;
-    - `pre_publish` (if given) runs after the staged write completes —
-      so any `Observation` the CALLER attached to `new` is resolved —
-      and before anything becomes visible: raising there aborts the
-      append with the sink untouched (see pipelines.update_tx_enriched's
-      I3 gate);
+    - `audit` (optional `{name: Column}` predicates every appended row
+      must satisfy; NULL passes, as in `operators.expectations`) is
+      counted by the same root observation: a violation aborts the
+      append before anything becomes visible, with the sink untouched
+      (see pipelines.update_tx_enriched's I3 rule);
     - a crash mid-rename leaves some fresh keyed rows visible; the
       replay's anti-join skips exactly those, so batch idempotency and
       exactly-once row content are preserved (same guarantee, smaller
@@ -250,7 +219,7 @@ def idempotent_append(
         if fence is not None:
             existing = existing.filter(fence)
         new = new.join(existing.select(key), key, "left_anti")
-    return _stage_audit_publish(new, path, partition_by, pre_publish)
+    return _stage_audit_publish(new, path, partition_by, audit)
 
 
 def staged_append(df: DataFrame, path: str) -> int:
@@ -261,7 +230,7 @@ def staged_append(df: DataFrame, path: str) -> int:
     single-column key cannot express — a replayed batch arrives here as
     an EMPTY frame, never as duplicate rows). Same protocol guarantees as
     idempotent_append: the batch is written once to a sibling stage dir
-    with its row count riding as an observe metric, a zero-row batch
+    with its row count riding as a root observe metric, a zero-row batch
     publishes NOTHING (the stage is dropped — no empty part-file
     accumulation on replays), and the staged files are renamed in, so a
     reader never sees a half-written file. Returns the appended count."""

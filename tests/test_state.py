@@ -194,12 +194,14 @@ def test_append_reaps_stranded_stage_dir(spark, tmp_path, primitive):
     assert sorted(os.listdir(tmp_path)) == ["other.parquet.stage-y", "sink.parquet"]
 
 
-def test_pre_publish_abort_leaves_sink_untouched(spark, tmp_path):
-    """pre_publish raising must abort the append with the sink exactly as
-    it was — the write-blocking audit gate update_tx_enriched relies on."""
+def test_audit_abort_leaves_sink_untouched(spark, tmp_path):
+    """A violated `audit` rule must abort the append with the sink exactly
+    as it was — the write-blocking gate update_tx_enriched relies on — and
+    name the rule and its violation count."""
     import os
 
     import pytest as _pytest
+    from pyspark.sql import functions as F
 
     from metrics_database_cron_script_spark.state import idempotent_append
 
@@ -207,18 +209,89 @@ def test_pre_publish_abort_leaves_sink_untouched(spark, tmp_path):
     idempotent_append(spark.range(0, 3).toDF("event_id"), path, key="event_id")
     before = sorted(os.listdir(path))
 
-    def boom():
-        raise AssertionError("audit failed")
-
-    with _pytest.raises(AssertionError, match="audit failed"):
+    with _pytest.raises(AssertionError, match="audit failed") as ei:
         idempotent_append(
             spark.range(10, 20).toDF("event_id"), path,
-            key="event_id", pre_publish=boom,
+            key="event_id", audit={"below 15": F.col("event_id") < 15},
         )
+    assert "below 15: 5 rows" in str(ei.value)
     assert sorted(os.listdir(path)) == before
     assert spark.read.parquet(path).count() == 3
     # no stage garbage next to the sink either
     assert [n for n in os.listdir(str(tmp_path)) if ".stage-" in n] == []
+
+
+def test_audit_resolves_on_runtime_empty_shuffle_join_under_aqe(spark, tmp_path):
+    """The hazard the root-level audit exists for: with AQE on and
+    broadcast joins off, a filter that is empty only at run time,
+    shuffle-joined to a table, is replaced by an empty relation — an
+    observation below the join would then fail in a JVM assertion. The
+    append's own root observation resolves: 0 rows, no violation, and the
+    session's excluded optimizer rules are left as they were."""
+    from pyspark.sql import functions as F
+
+    from metrics_database_cron_script_spark.state import idempotent_append
+    from tests.conftest import set_confs
+
+    src = str(tmp_path / "t.parquet")
+    spark.range(0, 50).select(
+        F.col("id").alias("event_id"),
+        (F.col("id") % 7).alias("k"),
+        (F.col("id") % 3).alias("v"),
+    ).write.parquet(src)
+    path = str(tmp_path / "sink.parquet")
+    key = "spark.sql.adaptive.optimizer.excludedRules"
+    before = spark.conf.get(key, None)
+    with set_confs(
+        spark,
+        spark__sql__adaptive__enabled="true",
+        spark__sql__autoBroadcastJoinThreshold="-1",
+    ):
+        t = spark.read.parquet(src)
+        audit = {"v in range": F.col("v") < 3}
+        assert idempotent_append(t, path, key="event_id", audit=audit) == 50
+        # joined on `k`, so the append's anti-join on event_id re-shuffles
+        empty = t.filter(F.col("v") > 10).select("k").join(t, "k")
+        assert idempotent_append(empty, path, key="event_id", audit=audit) == 0
+    assert spark.conf.get(key, None) == before
+    assert spark.read.parquet(path).count() == 50
+
+
+def test_concurrent_appends_to_disjoint_sinks(spark, tmp_path):
+    """Appends to disjoint sinks run from concurrent threads of one session
+    (P5's pool): each returns its own count, a violated rule aborts only
+    its own append, and no stage dir is left behind."""
+    import os
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pytest as _pytest
+    from pyspark.sql import functions as F
+
+    from metrics_database_cron_script_spark.state import idempotent_append
+
+    audit = {"small ids": F.col("event_id") < 100}
+
+    def append(i):
+        path = str(tmp_path / f"sink{i}.parquet")
+        hi = 200 if i == 0 else i + 1  # sink 0's batch violates the rule
+        return idempotent_append(
+            spark.range(0, hi).toDF("event_id"), path, key="event_id", audit=audit
+        )
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=6) as pool:
+            futs = [pool.submit(append, i) for i in range(6)]
+            with _pytest.raises(AssertionError, match="small ids: 100 rows"):
+                futs[0].result(timeout=300)
+            assert [f.result(timeout=300) for f in futs[1:]] == [2, 3, 4, 5, 6]
+    finally:
+        sys.setswitchinterval(interval)
+    assert sorted(os.listdir(tmp_path)) == [f"sink{i}.parquet" for i in range(1, 6)]
+    for i in range(1, 6):
+        assert spark.read.parquet(str(tmp_path / f"sink{i}.parquet")).count() == i + 1
 
 
 def test_idempotent_append_fence_bounds_existing_scan(spark, tmp_path):

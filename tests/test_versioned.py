@@ -636,6 +636,20 @@ def test_wap_publishes_clean_batch_with_metrics(spark, tmp_path):
     assert t.read().count() == 10
 
 
+def test_wap_audits_empty_batch_as_zero_counts(spark, tmp_path):
+    """Violation counts over an empty snapshot are 0, not NULL: the audit
+    resolves and the empty version publishes."""
+    from pyspark.sql import functions as F
+
+    t = VersionedSnapshot(spark, str(tmp_path / "snap"))
+    v, m = t.wap_overwrite(
+        spark.range(0, 0).toDF("id"),
+        {"nonneg": F.col("id") >= 0, "small": F.col("id") < 5},
+    )
+    assert v == 0 and m == {"rows": 0, "nonneg": 0, "small": 0}
+    assert t.read().count() == 0
+
+
 def test_wap_aborts_dirty_batch_without_a_version(spark, tmp_path):
     import os
 
