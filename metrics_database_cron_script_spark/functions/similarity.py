@@ -266,7 +266,7 @@ def ivf_probe_matmul(
     cell-partitioned parquet.
 
     `assigned` is (vec_id, embedding, cell); `centers` the coarse
-    quantizer's (n_cells, dim) array (KMeansModel.clusterCenters()).
+    quantizer's (n_cells, dim) array (ivf_fit's or ivf_fixed_centers()).
     Query→cell routing is driver math (tiny by the broadcast-queries
     contract). Same scoring contract as brute_force_topk / arrow_pair_topk:
     HALF_UP 6-dp cosine, self-pairs and zero-norm rows excluded."""
@@ -448,9 +448,11 @@ def ivf_fixed_centers(
     (c, d) is uniform in [-scale/2, scale/2), replayable across runs,
     engines and clusters, which makes the FULL IVF pipeline (assign →
     probe-cell routing → per-cell exact re-rank) SQL-expressible and
-    therefore oracle-checkable. The MLlib-KMeans quantizer (ivf_fit) gives
-    data-adaptive cells and stays the production default; the fixed
-    centers trade recall points for a bit-exact external contract."""
+    therefore oracle-checkable. The trained quantizer (ivf_fit, a
+    driver-side k-means on a sample) gives data-adaptive cells and stays
+    the production default; both share the assigner ivf_assign_fixed, and
+    the fixed centers trade recall points for a bit-exact external
+    contract."""
     out = []
     for c in range(n_cells):
         cent = []
@@ -469,8 +471,9 @@ def ivf_assign_fixed(
     left-associative F.aggregate fold — the exact association a SQL
     `t1 + t2 + ...` expansion reproduces, so an oracle replays the
     assignment bitwise — ties to the LOWER cell index (array_position
-    returns the first minimum). Returns (vec_id, embedding, cell), the
-    same contract as ivf_fit's assignment half."""
+    returns the first minimum). Returns (vec_id, embedding, cell). ivf_fit
+    assigns through it too, so a bootstrapped index and the daily append
+    over its frozen centers share one assignment rule."""
     dists = F.array(
         *[
             F.aggregate(
@@ -492,38 +495,86 @@ def ivf_assign_fixed(
     )
 
 
+def _kmeans(points, k: int, seed: int, max_iter: int = 20, tol: float = 1e-4):
+    """Lloyd's k-means on a driver-held (n, dim) float64 matrix, seeded by
+    k-means++ from numpy.random.default_rng(seed); max_iter and tol are
+    MLlib KMeans' defaults (stop once no center moves farther than tol).
+    A center whose cluster empties keeps its previous position. Seeding
+    stops early when every point already sits on a chosen center, so
+    fewer distinct points than `k` yield fewer centers."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    n = len(points)
+    chosen = [points[rng.integers(n)]]
+    d2 = ((points - chosen[0]) ** 2).sum(axis=1)
+    while len(chosen) < k:
+        total = d2.sum()
+        if total <= 0.0:
+            break
+        nxt = points[rng.choice(n, p=d2 / total)]
+        chosen.append(nxt)
+        d2 = np.minimum(d2, ((points - nxt) ** 2).sum(axis=1))
+    centers = np.array(chosen)
+    for _ in range(max_iter):
+        # |x|^2 is constant per row, so it drops out of the argmin
+        dist = (centers * centers).sum(axis=1) - 2.0 * points @ centers.T
+        near = dist.argmin(axis=1)
+        moved = centers.copy()
+        for c in range(len(centers)):
+            members = near == c
+            if members.any():
+                moved[c] = points[members].mean(axis=0)
+        shift = np.sqrt(((moved - centers) ** 2).sum(axis=1)).max()
+        centers = moved
+        if shift <= tol:
+            break
+    return centers
+
+
 def ivf_fit(
-    corpus: DataFrame, n_cells: int = 16, seed: int = 42
+    corpus: DataFrame, n_cells: int = 16, seed: int = 42, n_rows: int | None = None
 ) -> tuple[DataFrame, list[list[float]]]:
     """Fit the IVF coarse quantizer and assign every corpus row to its cell.
 
     Returns (assigned, centers): `assigned` is (vec_id, embedding, cell) —
     at 100 TB this frame is written once as cell-partitioned parquet so a
-    probe becomes static partition pruning — and `centers` the (n_cells,
-    dim) centroid list. The quantizer is Spark MLlib KMeans with a fixed
-    seed, fit on a deterministic hash-mod sample (KMeans iterates over its
-    input several times, and a quantizer only needs a sample's geometry,
-    not 100 TB)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    probe becomes static partition pruning — and `centers` the (≤ n_cells,
+    dim) centroid list. The fit runs on the driver over a deterministic
+    hash-mod sample of at most ~8k vectors (a quantizer only needs a
+    sample's geometry, not 100 TB), collected in ONE job and sorted by
+    vec_id so the centers do not depend on partition order: k-means++
+    seeding from `seed`, then Lloyd (_kmeans). The assignment is the pure
+    expression ivf_assign_fixed, the same assigner the daily index append
+    runs against the frozen centers. `n_rows` is the corpus count when
+    the caller already holds it (it sizes the sample); otherwise one
+    count() job computes it."""
+    import numpy as np
 
-    corpus_v = corpus.withColumn("__vec", array_to_vector("embedding"))
-    n_rows = corpus.count()
+    if n_rows is None:
+        n_rows = corpus.count()
     mod = max(1, n_rows // 4096)
-    fit_set = corpus_v
+    fit_set = corpus.select("vec_id", "embedding")
     if mod > 1:
         fit_set = fit_set.filter(
             F.pmod(F.xxhash64(F.col("vec_id")), F.lit(mod)) == 0
         )
-    km = KMeans(k=n_cells, seed=seed, featuresCol="__vec", predictionCol="cell")
-    model = km.fit(fit_set.select("__vec"))
-    assigned = model.transform(corpus_v).select("vec_id", "embedding", "cell")
-    centers = [[float(x) for x in c] for c in model.clusterCenters()]
-    return assigned, centers
+    rows = sorted(
+        (r["vec_id"], tuple(r["embedding"])) for r in fit_set.collect()
+    )
+    if not rows:
+        raise ValueError("ivf_fit: empty corpus, nothing to fit")
+    points = np.asarray([e for _, e in rows], dtype=np.float64)
+    centers = [[float(x) for x in c] for c in _kmeans(points, n_cells, seed)]
+    return ivf_assign_fixed(corpus, centers), centers
 
 
 def ivf_index_write(
-    corpus: DataFrame, path: str, n_cells: int = 16, seed: int = 42
+    corpus: DataFrame,
+    path: str,
+    n_cells: int = 16,
+    seed: int = 42,
+    n_rows: int | None = None,
 ) -> list[list[float]]:
     """Persist the IVF index as CELL-PARTITIONED parquet (round 9 —
     promotes the layout BENCH_ANN_SFXL measured from bench code to an
@@ -537,12 +588,13 @@ def ivf_index_write(
     Discipline from the 10 M-vector measurement: `repartition("cell")`
     BEFORE partitionBy — writing partitionBy from N upstream tasks emits
     N×cells tiny files (65 k at 256 tasks, ~5× slower probes); the
-    repartition makes it one file per cell. Returns the centers (also
-    readable later via the sidecar)."""
+    repartition makes it one file per cell. The write emits every corpus
+    row; `n_rows` passes a known corpus count through to ivf_fit. Returns
+    the centers (also readable later via the sidecar)."""
     import json as _json
     import os as _os
 
-    assigned, centers = ivf_fit(corpus, n_cells=n_cells, seed=seed)
+    assigned, centers = ivf_fit(corpus, n_cells=n_cells, seed=seed, n_rows=n_rows)
     assigned.repartition("cell").write.partitionBy("cell").parquet(path)
     with open(_os.path.join(path, "_ivf_centers.json"), "w") as fh:
         _json.dump({"n_cells": n_cells, "seed": seed, "centers": centers}, fh)
@@ -588,11 +640,12 @@ def ivf_topk_matmul(
     the DEPLOYABLE shape (round-9): BENCH_ANN_SFXL.json measured the
     pair-join probe at 0.3–1.3× of brute force at 10 M vectors (query
     duplication forfeits BLAS batching) while ivf_probe_matmul ran the
-    same probe 8× faster at recall 0.999. Same quantizer (ivf_fit, fixed
-    seed), same scoring contract (HALF_UP 6-dp cosine, self-pairs and
-    zero-norm rows dropped); equality with the pair-join probe on the
-    same cells is pinned by tests/test_dedup_quality.py
-    (test_ivf_topk_matmul_matches_pair_probe). The SQL-transparent
+    same probe 8× faster at recall 0.999. Same quantizer (ivf_fit's
+    driver-side k-means, fixed seed), same scoring contract (HALF_UP 6-dp
+    cosine, self-pairs and zero-norm rows dropped); equality with the
+    pair-join probe on the same cells is pinned by
+    tests/test_dedup_quality.py (test_ivf_topk_matmul_matches_pair_probe).
+    The SQL-transparent
     pair-join expression stays available as ivf_topk — the documentation
     path, not the deployed one."""
     assigned, centers = ivf_fit(corpus, n_cells=n_cells, seed=seed)
@@ -612,10 +665,12 @@ def ivf_topk(
     partitions the corpus into cells; each query probes its `n_probe`
     nearest cells and re-ranks exactly within them.
 
-    The quantizer is Spark MLlib KMeans (fixed seed → replayable). At 100 TB
-    the fit runs on a sample, the cell assignment is one codegen'd pass, and
-    the probe is an equi-join on cell id — the same shuffle shape as the LSH
-    variant but with data-adaptive cells (better recall on clustered data).
+    The quantizer is ivf_fit: k-means++ and Lloyd on the driver over a
+    hash-mod sample sorted by vec_id (fixed seed → replayable). At 100 TB
+    the fit is one sample collect, the cell assignment is one expression
+    pass (ivf_assign_fixed), and the probe is an equi-join on cell id — the
+    same shuffle shape as the LSH variant but with data-adaptive cells
+    (better recall on clustered data).
 
     This is the SQL-TRANSPARENT documentation path: the pair-join probe
     duplicates the query vector onto every candidate row, which
@@ -980,7 +1035,9 @@ def pq_codebooks(
     into `m` contiguous sub-vectors and k-means each subspace into `codes`
     centroids. MLlib KMeans with a fixed seed → replayable. Returns
     m × codes × (dim/m) floats — a few KB, driver-held, broadcast as plan
-    literals.
+    literals. Unlike ivf_fit's driver-side k-means, this keeps MLlib: it
+    is off the daily cron path, and tests/test_pq_topk.py pins the recall
+    of these codebooks.
 
     Scale shape: ALL m fits train on one deterministic hash-mod sample of
     ~`sample_target` vectors (`xxhash64(vec_id) % mod == 0` — replayable,

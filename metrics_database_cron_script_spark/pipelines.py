@@ -319,7 +319,7 @@ def update_routing(
                 fence=F.col("first_ts") > F.lit(watermark),
             ),
         }
-        with ThreadPoolExecutor(max_workers=3) as pool:
+        with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
             futs = {name: pool.submit(fn) for name, fn in jobs.items()}
             results = {name: f.result() for name, f in futs.items()}
         return {
@@ -364,12 +364,15 @@ def update_rollup(
         "max_value double, merged_through timestamp_ntz"
     )
     snap_full = ST.read_or_empty(spark, path, schema)
-    row = snap_full.agg(F.max("merged_through").alias("m")).collect()[0]
     # Absent/deleted state bootstraps from EPOCH — a FULL backfill — never
     # from the shared watermark: a non-EPOCH watermark with no rollup state
     # (state deleted for rebuild, or P6 deployed onto a pre-P6 state_dir)
     # would silently and permanently exclude all pre-watermark history.
-    merged_through = row["m"] if row["m"] is not None else ST.Watermark.EPOCH
+    merged_through = ST.Watermark.EPOCH
+    if os.path.exists(path):
+        row = snap_full.agg(F.max("merged_through").alias("m")).collect()[0]
+        if row["m"] is not None:
+            merged_through = row["m"]
     delta = R.daily_rollup(
         events.filter(
             (F.col("ts") > F.lit(merged_through)) & (F.col("ts") <= F.lit(run_ts))
@@ -446,10 +449,12 @@ def update_image_dedup(
         ST.atomic_overwrite(edges, edges_p)
         ST.atomic_overwrite(chunks, chunks_p)
         ST.atomic_overwrite(store, hashes_p)
-        hi = hashes.agg(F.max("doc_id").alias("m")).collect()[0]["m"]
-        if hi is not None:
-            _commit_frontier(hi)  # marker commits LAST
-        return {"bootstrap_docs": hashes.count(), "batch_docs": 0}
+        row = hashes.agg(
+            F.count(F.lit(1)).alias("n"), F.max("doc_id").alias("m")
+        ).collect()[0]
+        if row["m"] is not None:
+            _commit_frontier(row["m"])  # marker commits LAST
+        return {"bootstrap_docs": row["n"], "batch_docs": 0}
 
     store = spark.read.parquet(hashes_p)
     if os.path.isdir(frontier_p):
@@ -523,6 +528,14 @@ def update_embedding_index(
     is an explicit rebuild, not a daily side effect) and appended to
     their cell directories.
 
+    The bootstrap is one aggregate (count and max vec_id: the fit's
+    sample size, the frontier, and the written count, since the write
+    emits every row), ivf_fit's one sample collect for its driver-side
+    k-means, the cell-partitioned write (assigned by the same
+    ivf_assign_fixed the daily append runs) and the frontier commit. An
+    empty embeddings table bootstraps nothing and leaves index and
+    frontier absent, so the first day with vectors bootstraps.
+
     Crash safety differs from P7 deliberately: a derived frontier
     (max key IN the state) can advance past unpublished rows when an
     append crashes mid-publish, so P8 keeps an EXPLICIT frontier marker
@@ -554,11 +567,14 @@ def update_embedding_index(
         )
 
     if not os.path.isdir(index_p):
-        S.ivf_index_write(emb, index_p, n_cells=n_cells)
-        hi = emb.agg(F.max("vec_id").alias("m")).collect()[0]["m"]
-        n = spark.read.parquet(index_p).count()
-        _commit_frontier(hi)  # frontier commits LAST
-        return {"bootstrap_vectors": n, "batch_vectors": 0}
+        row = emb.agg(
+            F.count(F.lit(1)).alias("n"), F.max("vec_id").alias("m")
+        ).collect()[0]
+        if row["n"] == 0:
+            return {"bootstrap_vectors": 0, "batch_vectors": 0}
+        S.ivf_index_write(emb, index_p, n_cells=n_cells, n_rows=row["n"])
+        _commit_frontier(row["m"])  # frontier commits LAST
+        return {"bootstrap_vectors": row["n"], "batch_vectors": 0}
 
     frontier = spark.read.parquet(frontier_p).collect()[0]["frontier"]
     batch = emb.filter(F.col("vec_id") > F.lit(frontier))

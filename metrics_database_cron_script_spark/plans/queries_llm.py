@@ -1406,10 +1406,11 @@ def x_embed_ivf_topk(spark, sf_dir):
     assigner ivf_assign_fixed), so assignment, probe routing and scoring
     are all literal-deterministic and DuckDB replays the pipeline end to
     end — the PQ codebook conversion's template applied to the quantizer.
-    The MLlib-KMeans quantizer (ivf_fit/ivf_topk_matmul) remains the
-    production default in the library — data-adaptive cells give better
-    recall — equivalence-gated against the pair probe in
-    tests/test_dedup_quality.py."""
+    The trained quantizer (ivf_fit's driver-side k-means, used by
+    ivf_topk_matmul and the daily index) remains the production default
+    in the library — data-adaptive cells give better recall — and assigns
+    through the same ivf_assign_fixed expression; it is equivalence-gated
+    against the pair probe in tests/test_dedup_quality.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     centers = S.ivf_fixed_centers()
     assigned = S.ivf_assign_fixed(emb, centers)

@@ -507,7 +507,8 @@ def test_ivf_fixed_recall_floor(spark):
     """The fixed quantizer trades recall for oracle-checkability — pin the
     floor so a regression to useless cells is caught: recall@5 vs oracled
     brute force must stay ≥ 0.5 at fixture scale with n_probe=2 of 16
-    cells (the trained quantizer's recall test is separate and stricter)."""
+    cells (test_ivf_trained_recall_not_below_fixed holds the trained
+    quantizer to at least the fixed one's recall)."""
     from metrics_database_cron_script_spark.functions.similarity import (
         brute_force_topk,
         ivf_assign_fixed,
@@ -533,3 +534,98 @@ def test_ivf_fixed_recall_floor(spark):
     }
     recall = len(approx & exact) / len(exact)
     assert recall >= 0.5, recall
+
+
+def test_ivf_fit_centers_do_not_depend_on_partitioning(spark):
+    """The driver-side fit sorts its sample by vec_id before seeding, so
+    the same rows under a different partitioning give the same centers."""
+    from metrics_database_cron_script_spark.functions.similarity import ivf_fit
+    from metrics_database_cron_script_spark.sources import load_table
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    _, a = ivf_fit(emb.repartition(1), n_cells=16, seed=42)
+    _, b = ivf_fit(emb.repartition(7, "label"), n_cells=16, seed=42)
+    assert a == b and len(a) == 16
+
+
+def test_ivf_fit_with_few_distinct_points_returns_fewer_centers(spark):
+    """Three distinct vectors, each repeated, cannot fill 16 cells: the
+    fit returns one center per distinct vector and every copy lands in
+    its vector's cell."""
+    from metrics_database_cron_script_spark.functions.similarity import ivf_fit
+
+    base = [[1.0, 0.0, 0.0], [0.0, 2.0, 0.0], [0.0, 0.0, -3.0]]
+    corpus = spark.createDataFrame(
+        [(i, base[i % 3]) for i in range(12)], "vec_id long, embedding array<float>"
+    )
+    assigned, centers = ivf_fit(corpus, n_cells=16, seed=7)
+    assert sorted(centers) == sorted(base)
+    cell_of = {}
+    for r in assigned.collect():
+        cell_of.setdefault(r["vec_id"] % 3, set()).add(r["cell"])
+    assert all(len(c) == 1 for c in cell_of.values())
+    assert len(set().union(*cell_of.values())) == 3
+
+
+def test_ivf_index_cells_equal_the_expression_assigner(spark, tmp_path):
+    """A bootstrapped index assigns cells with ivf_assign_fixed over its
+    own sidecar centers, the assigner the daily append uses, so bootstrap
+    and appended rows follow one rule."""
+    import json
+
+    from metrics_database_cron_script_spark.functions.similarity import (
+        ivf_assign_fixed,
+        ivf_index_write,
+    )
+    from metrics_database_cron_script_spark.sources import load_table
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    idx = str(tmp_path / "ivf-index")
+    ivf_index_write(emb, idx, n_cells=16, seed=42)
+    centers = json.load(open(f"{idx}/_ivf_centers.json"))["centers"]
+    got = sorted(
+        (r["vec_id"], r["cell"])
+        for r in spark.read.parquet(idx).select("vec_id", "cell").collect()
+    )
+    want = sorted(
+        (r["vec_id"], r["cell"])
+        for r in ivf_assign_fixed(emb, centers).select("vec_id", "cell").collect()
+    )
+    assert got == want and len(got) == emb.count()
+
+
+def test_ivf_trained_recall_not_below_fixed(spark):
+    """The trained quantizer must earn its fit: recall@5 against exact
+    brute force, every 5th vector a query, n_probe=2 of 16 cells, is at
+    least the fixed sha256 quantizer's on the same queries."""
+    from metrics_database_cron_script_spark.functions.similarity import (
+        brute_force_topk,
+        ivf_assign_fixed,
+        ivf_fit,
+        ivf_fixed_centers,
+        ivf_probe_matmul,
+    )
+    from metrics_database_cron_script_spark.sources import load_table
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    queries = emb.filter(F.col("vec_id") % 5 == 0).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    )
+    exact = {
+        (r["q_id"], r["vec_id"])
+        for r in brute_force_topk(emb, queries, k=5).collect()
+    }
+
+    def recall(assigned, centers):
+        approx = {
+            (r["q_id"], r["vec_id"])
+            for r in ivf_probe_matmul(
+                assigned, queries, centers, k=5, n_probe=2
+            ).collect()
+        }
+        return len(approx & exact) / len(exact)
+
+    fixed = ivf_fixed_centers()
+    r_fixed = recall(ivf_assign_fixed(emb, fixed), fixed)
+    r_trained = recall(*ivf_fit(emb, n_cells=16, seed=42))
+    assert r_trained >= r_fixed, (r_trained, r_fixed)

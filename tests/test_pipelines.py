@@ -388,11 +388,11 @@ def test_run_batch_replay_noop_under_aqe(spark, state_dir, monkeypatch):
     """Round-7 regression: at SFXL scale (AQE gated ON) the REPLAY run's
     empty batch crashed the I3 observation gate — AQE's empty-relation
     propagation eliminated the CollectMetrics nodes and Observation.get
-    died in a JVM assertion. idempotent_append now excludes
-    AQEPropagateEmptyRelation around the staged write
-    (state._keep_observed_metrics); this pins the replay no-op with AQE
-    pinned on at fixture scale, and that the exclusion is scoped (the
-    session conf is restored)."""
+    died in a JVM assertion. The staged write now observes its row count
+    and audit rules at the plan root (state._stage_audit_publish), which
+    always resolves; this pins the replay no-op with AQE pinned on at
+    fixture scale, and that the append leaves the session's
+    excludedRules conf as it found it."""
     from metrics_database_cron_script_spark.pipelines import run_batch
     from metrics_database_cron_script_spark.sources.tables import (
         invalidate_caches,
@@ -569,6 +569,58 @@ def test_embedding_index_incremental_replay_and_probe_equivalence(spark, tmp_pat
     idx2 = spark.read.parquet(f"{state}/ivf_index.parquet")
     assert idx2.count() == total
     assert idx2.select("vec_id").distinct().count() == total
+
+
+def _job_ids(spark) -> set[int]:
+    """Ids of the jobs in Spark's status store (ids count up from 0)."""
+    sc = spark.sparkContext
+    conv = getattr(sc._jvm, "scala.jdk.javaapi.CollectionConverters")
+    jobs = conv.asJava(sc._jsc.sc().statusStore().jobsList(None))
+    return {j.jobId() for j in jobs}
+
+
+def test_embedding_index_bootstrap_on_empty_embeddings(spark, tmp_path):
+    """P8 on an empty embeddings table bootstraps nothing: no index, no
+    frontier, no error (a failing fit would stop run_batch before the
+    watermark commit). The first day with vectors then bootstraps."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from metrics_database_cron_script_spark.pipelines import update_embedding_index
+    from metrics_database_cron_script_spark.sources import load_table
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    day0 = str(tmp_path / "day0")
+    os.makedirs(day0)
+    emb.limit(0).write.parquet(f"{day0}/embeddings.parquet")
+    state = str(tmp_path / "state")
+    os.makedirs(state)
+
+    r0 = update_embedding_index(spark, day0, state)
+    assert r0 == {"bootstrap_vectors": 0, "batch_vectors": 0}
+    assert not os.path.exists(f"{state}/ivf_index.parquet")
+    assert not os.path.exists(f"{state}/ivf_frontier.parquet")
+
+    r1 = update_embedding_index(spark, SF_SMOKE, state)
+    assert r1 == {"bootstrap_vectors": emb.count(), "batch_vectors": 0}
+    frontier = spark.read.parquet(f"{state}/ivf_frontier.parquet").collect()
+    assert frontier[0]["frontier"] == emb.agg(F.max("vec_id")).collect()[0][0]
+
+
+def test_embedding_index_bootstrap_job_budget(spark, tmp_path):
+    """P8's bootstrap is one aggregate (count and max vec_id), one sample
+    collect for the driver-side fit, the cell-partitioned write and the
+    frontier commit: at most 5 Spark jobs. The MLlib fit it replaced ran
+    18, most of them k-means passes over the sample."""
+    from metrics_database_cron_script_spark.pipelines import update_embedding_index
+
+    state = str(tmp_path / "state")
+    before = max(_job_ids(spark), default=-1)
+    r = update_embedding_index(spark, SF_SMOKE, state)
+    ran = [j for j in _job_ids(spark) if j > before]
+    assert r["bootstrap_vectors"] > 0
+    assert len(ran) <= 5, f"P8 bootstrap ran {len(ran)} jobs"
 
 
 def test_stats_incremental_matches_full_recompute_and_survives_crash(spark, tmp_path):
