@@ -626,7 +626,9 @@ def connected_components(
        session conf is never touched, so concurrent queries on it can't
        race the override.
     3. COMPOSE: final(doc) = residual_component(label(doc)), one join
-       (the residual solution is broadcast-sized by construction).
+       (broadcast when the residual was solved on the driver; a residual
+       past _DRIVER_RESIDUAL_MAX — what a path-like graph leaves — is
+       joined without a broadcast hint).
 
     Scratch placement: loop state must be readable by every executor AND
     the driver, so the scratch dir lives under the SparkContext's
@@ -756,8 +758,10 @@ def connected_components(
         )
 
     # ---- phase 2: iterate to fixpoint on the residual
-    # The residual is orders of magnitude smaller than the input, but the
-    # loop's shuffles would still run at the session's data-sized width
+    # Only a residual past _DRIVER_RESIDUAL_MAX gets here. On clique-heavy
+    # dedup graphs it is still far smaller than the input; a high-diameter
+    # (path-like) graph contracts poorly and keeps ~|E| rows. Either way,
+    # the loop's shuffles would run at the session's data-sized width
     # (e.g. 91 partitions for the decade corpus) — fixed per-task cost ×
     # stages × rounds dominated the loop (measured ~12 s/round on a few
     # thousand rows). The loop therefore runs in an ISOLATED session
@@ -783,8 +787,10 @@ def connected_components(
     # rounds Catalyst is multiplying million-digit BigInts and a single
     # stats visit takes minutes (measured; the thread was pinned inside
     # BigInteger.multiplyToomCook3). A parquet leaf restarts every round
-    # from real file-sized stats. The residual is tiny, so the write is
-    # milliseconds; the scratch dir is removed in the finally below.
+    # from real file-sized stats. Each round writes O(residual) rows:
+    # milliseconds on a clique-heavy residual, a full pass over ~|E| rows
+    # on a poorly contracting path-like one. The scratch dir is removed in
+    # the finally below.
     def _materialize(df: DataFrame, slot: int) -> DataFrame:
         path = scratch + f"/labels-{slot & 1}"
         df.write.mode("overwrite").parquet(path)

@@ -25,6 +25,8 @@ import uuid
 
 from pyspark.sql import SparkSession
 
+from metrics_database_cron_script_spark.state import SCHEMA_MARKER, read_schema_marker
+
 
 def dir_bytes(path: str) -> int:
     total = 0
@@ -179,12 +181,14 @@ def compact(
         return parquet_file_count(path)
 
     tmp_root = os.path.join(staging, "tmp")
+    # the table's schema marker (state.py) spares the scan its footer
+    # inference job; unmarked tables infer
+    schema = read_schema_marker(base)
+    reader = spark.read if schema is None else spark.read.schema(schema)
     try:
         if list(plan) == [base]:  # flat table: the leaf IS the root
             small, _files, n_out = plan[base]
-            df = spark.read.parquet(
-                *(os.path.join(base, f) for f in sorted(small))
-            )
+            df = reader.parquet(*(os.path.join(base, f) for f in sorted(small)))
             # coalesce, not repartition: the scan already bin-packs the
             # small files into read partitions (maxPartitionBytes /
             # openCostInBytes), so a full shuffle would only re-spread
@@ -205,7 +209,7 @@ def compact(
                 for leaf, (small, _f, _n) in plan.items()
                 for f in sorted(small)
             ]
-            df = spark.read.option("basePath", base).parquet(*paths)
+            df = reader.option("basePath", base).parquet(*paths)
             df.repartition(*pcols).write.mode("overwrite").partitionBy(
                 *pcols
             ).parquet(tmp_root)
@@ -255,7 +259,8 @@ def compact(
                         )
         # swap each packed leaf: full-size files ride as hardlinks (same
         # bytes, new directory entry, zero copy — same-filesystem sibling
-        # staging), then the two-rename crash-recoverable swap
+        # staging), and so does a flat table's schema marker, then the
+        # two-rename crash-recoverable swap
         for leaf, (small, files, _n_out) in plan.items():
             tmp = os.path.join(tmp_root, _rel(leaf))
             if not os.path.isdir(tmp):
@@ -263,9 +268,11 @@ def compact(
                 # small files): leave the leaf exactly as it is
                 continue
             old = os.path.join(staging, "old", _rel(leaf))
-            for f, _sz in files:
-                if f not in small:
-                    os.link(os.path.join(leaf, f), os.path.join(tmp, f))
+            carried = [f for f, _sz in files if f not in small]
+            if os.path.isfile(os.path.join(leaf, SCHEMA_MARKER)):
+                carried.append(SCHEMA_MARKER)
+            for f in carried:
+                os.link(os.path.join(leaf, f), os.path.join(tmp, f))
             os.makedirs(os.path.dirname(old), exist_ok=True)
             os.rename(leaf, old)
             os.rename(tmp, leaf)

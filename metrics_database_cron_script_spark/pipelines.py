@@ -17,12 +17,18 @@ State layout under `state_dir`: `prices.parquet`, `tx_enriched.parquet`,
 first_ts, watermark-fenced on read), `daily_rollup.parquet`
 (incrementally merged, P6),
 `phash_chunks.parquet` + `phash_hashes.parquet` + `phash_edges.parquet`
-(incremental image near-dup state, P7), `ivf_index.parquet` +
-`ivf_frontier.parquet` (cell-partitioned ANN index + its explicit
-frontier marker, P8), `watermark.parquet`. The append sinks are
-bin-packed by the P9 compaction step (`run_maintenance`) once their
-file count crosses the trigger — content-identical rewrites, so none of
-the fences/frontiers above notice.
++ `phash_frontier.parquet` (incremental image near-dup state and its
+frontier marker, P7), `ivf_index.parquet` + `ivf_frontier.parquet`
+(cell-partitioned ANN index + its explicit frontier marker, P8),
+`watermark.parquet`. The append sinks are bin-packed by the P9
+compaction step (`run_maintenance`) once their file count crosses the
+trigger — content-identical rewrites, so none of the fences/frontiers
+above notice.
+
+The control plane runs no Spark job: state tables are read with the
+schema their writer marked (`state.read_state`), and the watermark and
+frontier markers are one-row files committed and read on the driver
+(`state.commit_scalar` / `state.read_scalar`).
 """
 
 from __future__ import annotations
@@ -233,7 +239,7 @@ def update_routing(
             .agg(F.min("ts").alias("first_ts"))
         )
     else:
-        seen_ledger = spark.read.parquet(seen_path).filter(
+        seen_ledger = ST.read_state(spark, seen_path).filter(
             F.col("first_ts") <= F.lit(watermark)
         )
     seen_pre = seen_ledger.select("user_id")
@@ -357,6 +363,12 @@ def update_rollup(
     interval. Both failure modes are test-caught (split-batch equivalence,
     crash-replay) in tests/test_pipelines.py.
 
+    Jobs: the batch delta is one row per touched day, so one `collect`
+    both counts it and brings it to the driver as a local relation for
+    the merge; the merge then runs as the overwrite's one write job (the
+    rollup is read with its marked schema, and `merged_through` costs an
+    aggregate only once the rollup exists).
+
     Returns the number of days touched by this batch's delta."""
     path = _sink(state_dir, "daily_rollup")
     schema = (
@@ -377,17 +389,18 @@ def update_rollup(
         events.filter(
             (F.col("ts") > F.lit(merged_through)) & (F.col("ts") <= F.lit(run_ts))
         )
-    ).localCheckpoint(eager=True)  # one materialization serves count + merge
-    n_touched = delta.count()
-    if n_touched == 0:
+    )
+    rows = delta.collect()
+    if not rows:
         return 0
+    delta = spark.createDataFrame(rows, delta.schema)
     merged = R.merge_daily_rollups(snap_full.drop("merged_through"), delta).withColumn(
         "merged_through", F.lit(run_ts).cast("timestamp_ntz")
     )
-    # rewrite is O(total days) rows — trivially small; atomicity matches the
-    # other snapshot state (directory swap after materialization)
-    ST.atomic_overwrite(merged.localCheckpoint(eager=True), path)
-    return n_touched
+    # rewrite is O(total days) rows — trivially small; the plan reads the
+    # rollup it replaces, which atomic_overwrite allows
+    ST.atomic_overwrite(merged, path)
+    return len(rows)
 
 
 def update_image_dedup(
@@ -401,7 +414,9 @@ def update_image_dedup(
     State: `phash_chunks.parquet` (hamming-LSH index), `phash_hashes.
     parquet` (aHash store), `phash_edges.parquet` (bucket-attributed
     scored star edges), `phash_frontier.parquet` (explicit progress
-    marker — round 10). The batch frontier was originally max(doc_id)
+    marker — round 10, a one-row file committed on the driver with
+    `state.commit_scalar`, so neither its commit nor its read runs a
+    Spark job). The batch frontier was originally max(doc_id)
     IN THE HASH STORE, but a derived frontier is crash-unsafe: a store
     append that dies mid-publish leaves SOME batch rows visible, so the
     derived max can land past rows that never published and the replay
@@ -436,11 +451,6 @@ def update_image_dedup(
     edges_p = _sink(state_dir, "phash_edges")
     frontier_p = _sink(state_dir, "phash_frontier")
 
-    def _commit_frontier(hi) -> None:
-        ST.atomic_overwrite(
-            spark.createDataFrame([(int(hi),)], "frontier long"), frontier_p
-        )
-
     if not os.path.isdir(hashes_p):
         hashes = M.ahash_from_blobs(
             M.synthetic_bmp_blobs(docs)
@@ -453,13 +463,12 @@ def update_image_dedup(
             F.count(F.lit(1)).alias("n"), F.max("doc_id").alias("m")
         ).collect()[0]
         if row["m"] is not None:
-            _commit_frontier(row["m"])  # marker commits LAST
+            ST.commit_scalar(frontier_p, "frontier", row["m"])  # marker LAST
         return {"bootstrap_docs": row["n"], "batch_docs": 0}
 
-    store = spark.read.parquet(hashes_p)
-    if os.path.isdir(frontier_p):
-        frontier = spark.read.parquet(frontier_p).collect()[0]["frontier"]
-    else:
+    store = ST.read_state(spark, hashes_p)
+    frontier = ST.read_scalar(frontier_p, "frontier")
+    if frontier is None:
         # pre-marker state: written by a completed run, so the store max
         # IS the batch boundary — derive once, the marker takes over below
         frontier = store.agg(F.max("doc_id").alias("m")).collect()[0]["m"]
@@ -474,8 +483,8 @@ def update_image_dedup(
     # drop those rows from the refresh's "existing" side so membership
     # stays exact, and let the fenced appends absorb the rest
     store_pre = store.filter(F.col("doc_id") <= F.lit(frontier))
-    chunks = spark.read.parquet(chunks_p)
-    edges = spark.read.parquet(edges_p)
+    chunks = ST.read_state(spark, chunks_p)
+    edges = ST.read_state(spark, edges_p)
     parts: dict = {}
     new_edges = M.refresh_phash_star_edges(
         chunks, store_pre, edges, batch_hashes, _parts=parts
@@ -491,17 +500,15 @@ def update_image_dedup(
         # publishes complete files only; replay safety is unchanged — a
         # replayed batch's delta is EMPTIED by the refresh's edge-level
         # suppression, so nothing is appended twice (the crash-window
-        # test pins this). The snapshot read-view stays a plain
-        # spark.read.parquet(edges_p); P9 compaction owns the file-count
-        # budget (phash_edges is in APPEND_SINKS).
+        # test pins this). The snapshot read-view stays a plain read of
+        # edges_p; P9 compaction owns the file-count budget (phash_edges
+        # is in APPEND_SINKS).
         ST.staged_append(parts["new_scored"], edges_p)
     else:
         # non-monotone ingest (hub displacement): carried ≠ old edges —
-        # full rewrite, exactly the pre-round-12 path
-        ST.atomic_overwrite(
-            new_edges.localCheckpoint(eager=True),  # plan reads edges_p
-            edges_p,
-        )
+        # full rewrite (the plan reads edges_p, which atomic_overwrite
+        # allows), exactly the pre-round-12 path
+        ST.atomic_overwrite(new_edges, edges_p)
     fence = F.col("doc_id") > F.lit(frontier)
     ST.idempotent_append(
         M.phash_chunks(batch_hashes), chunks_p, key="doc_id", fence=fence
@@ -510,7 +517,7 @@ def update_image_dedup(
         batch_hashes, hashes_p, key="doc_id", fence=fence
     )
     hi = batch_hashes.agg(F.max("doc_id").alias("m")).collect()[0]["m"]
-    _commit_frontier(hi)  # AFTER the store append (replay-safe order)
+    ST.commit_scalar(frontier_p, "frontier", hi)  # AFTER the store append
     return {"batch_docs": n_batch, "hashes_appended": appended}
 
 
@@ -531,15 +538,18 @@ def update_embedding_index(
     The bootstrap is one aggregate (count and max vec_id: the fit's
     sample size, the frontier, and the written count, since the write
     emits every row), ivf_fit's one sample collect for its driver-side
-    k-means, the cell-partitioned write (assigned by the same
-    ivf_assign_fixed the daily append runs) and the frontier commit. An
+    k-means and the cell-partitioned write (assigned by the same
+    ivf_assign_fixed the daily append runs): 4 Spark jobs. The frontier
+    commit and, on a daily run, its read are driver-side file I/O
+    (`state.commit_scalar` / `read_scalar`) and run none. An
     empty embeddings table bootstraps nothing and leaves index and
     frontier absent, so the first day with vectors bootstraps.
 
     Crash safety differs from P7 deliberately: a derived frontier
     (max key IN the state) can advance past unpublished rows when an
     append crashes mid-publish, so P8 keeps an EXPLICIT frontier marker
-    (`ivf_frontier.parquet`, watermark-style) committed AFTER the append.
+    (`ivf_frontier.parquet`, watermark-style) committed AFTER the append;
+    an index without one fails loudly rather than guess a frontier.
     A crash between append and marker commit leaves index rows above the
     frontier; the replay's anti-join is fenced on exactly that window
     (`vec_id > frontier` — the idempotent_append fence contract), so the
@@ -561,11 +571,6 @@ def update_embedding_index(
     index_p = _sink(state_dir, "ivf_index")
     frontier_p = _sink(state_dir, "ivf_frontier")
 
-    def _commit_frontier(hi: int) -> None:
-        ST.atomic_overwrite(
-            spark.createDataFrame([(int(hi),)], "frontier long"), frontier_p
-        )
-
     if not os.path.isdir(index_p):
         row = emb.agg(
             F.count(F.lit(1)).alias("n"), F.max("vec_id").alias("m")
@@ -573,10 +578,12 @@ def update_embedding_index(
         if row["n"] == 0:
             return {"bootstrap_vectors": 0, "batch_vectors": 0}
         S.ivf_index_write(emb, index_p, n_cells=n_cells, n_rows=row["n"])
-        _commit_frontier(row["m"])  # frontier commits LAST
+        ST.commit_scalar(frontier_p, "frontier", row["m"])  # frontier LAST
         return {"bootstrap_vectors": row["n"], "batch_vectors": 0}
 
-    frontier = spark.read.parquet(frontier_p).collect()[0]["frontier"]
+    frontier = ST.read_scalar(frontier_p, "frontier")
+    if frontier is None:
+        raise FileNotFoundError(f"{frontier_p}: IVF index without a frontier marker")
     batch = emb.filter(F.col("vec_id") > F.lit(frontier))
     # one cheap agg decides no-op BEFORE any staged write: on a replay the
     # pushed vec_id predicate prunes the source scan to row-group stats
@@ -594,7 +601,7 @@ def update_embedding_index(
         partition_by=["cell"],
         fence=F.col("vec_id") > F.lit(frontier),
     )
-    _commit_frontier(row["m"])  # AFTER the append (replay-safe order)
+    ST.commit_scalar(frontier_p, "frontier", row["m"])  # AFTER the append
     return {"batch_vectors": appended, "frontier_in": frontier}
 
 

@@ -275,7 +275,7 @@ def r_upsert_evolution(spark, sf_dir):
     ADDS a `segment` column and touches only the even keys. The final
     read must show the batch's rows evolved AND the untouched keys
     NULL-padded for the added column — the committed-schema-marker read
-    path (versioned.py _read_schema_marker), not footer-inference luck.
+    path (state.read_schema_marker), not footer-inference luck.
     The table is built at plan time in ONE process-lifetime scratch dir
     (tiny: ≤50 keys), wiped and rebuilt per build so repeated bench/parity
     invocations reuse the slot instead of leaking a temp table per run;

@@ -4,9 +4,9 @@ The reference keeps state in MongoDB: a single-row `lastUpdated` watermark
 (updatescript.py:151-152, read at :223), per-row `find_one` insert guards
 (R14), and `update_one` upserts (R9). On plain Parquet those become:
 
-- `Watermark`: a one-row parquet table, overwritten atomically via
-  write-new-then-swap; committed LAST in the pipeline (the reference commits
-  it before its step 5 — the §3 ordering hazard we deliberately fix).
+- `Watermark`: a one-row `lastUpdated` marker, committed LAST in the
+  pipeline (the reference commits it before its step 5 — the §3 ordering
+  hazard we deliberately fix).
 - `idempotent_append`: left_anti against the sink's existing keys, then a
   staged append audited by one root-level observation (row count plus
   optional `audit` rules) — batch-level exactly-once on re-run, zero
@@ -16,12 +16,32 @@ The reference keeps state in MongoDB: a single-row `lastUpdated` watermark
   Delta/Iceberg runtime the same call sites become MERGE INTO (import-gated,
   not available in this image).
 
-All writers are directory-swap atomic: write to `<path>.tmp-<pid>`, then
-rename over the old directory — a crash mid-write leaves the previous
-committed state intact. These primitives assume the reference's own
-operating model: ONE writer (a daily cron). Within that writer, appends
-to DISJOINT sinks may run from concurrent threads of one session: they
-touch no session conf and take no lock. For concurrent writers use
+The control plane runs no Spark job:
+
+- Schema markers. Every state write (`atomic_overwrite`, both staged
+  appends, `operators.maintenance.compact`'s swap of a flat table) leaves
+  the schema a reader sees in `<table>/_schema.json` (partition columns
+  last, as partition discovery appends them). `read_state` reads with
+  that schema and skips Parquet footer inference, which is a one-task
+  Spark job per read; a table written before the marker existed falls
+  back to inference. The marker is invisible to Spark's file source and
+  to `*.parquet` globs. `versioned.VersionedSnapshot` uses the same
+  marker.
+- Scalar markers (the watermark, the P7/P8 frontiers) are one-row Parquet
+  files written and read on the driver with pyarrow (`commit_scalar`,
+  `read_scalar`), in the layout Spark would write (INT64 micros,
+  UTC-adjusted, for timestamps). A commit writes a hidden temp file in
+  the marker directory and `os.replace`s it onto `part-00000.parquet`, so
+  the marker is never absent once committed and a reader sees the old or
+  the new value.
+
+`atomic_overwrite` writes to a sibling `<path>.tmp-*` dir, then renames
+over the old directory — a crash mid-write leaves the previous committed
+state intact. The plan it writes may read `path` itself: every row is in
+the tmp dir before either rename. These primitives assume the reference's
+own operating model: ONE writer (a daily cron). Within that writer,
+appends to DISJOINT sinks may run from concurrent threads of one session:
+they touch no session conf and take no lock. For concurrent writers use
 `versioned.VersionedSnapshot` — same keep-latest MERGE semantics under
 optimistic concurrency (exclusive-create commit log, conflict-detect,
 retry), the hand-rolled form of what Delta/Iceberg provide.
@@ -30,28 +50,65 @@ retry), the hand-rolled form of what Delta/Iceberg provide.
 from __future__ import annotations
 
 import datetime
+import json
 import os
 import shutil
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, TimestampType
 
 from metrics_database_cron_script_spark.operators.expectations import observe_rules
+
+SCHEMA_MARKER = "_schema.json"
+SCALAR_FILE = "part-00000.parquet"
 
 
 def _exists(path: str) -> bool:
     return os.path.exists(path)
 
 
+def write_schema_marker(data_dir: str, schema: StructType) -> None:
+    """Persist the schema readers of `data_dir` should use, inside it.
+    Underscore-prefixed files are invisible to Spark's file source, and
+    hardlinked carries (`versioned._link_tree`, compaction's swap) move
+    the marker with the data. Under schema evolution it is what makes
+    hardlink carry-forward safe: untouched files keep their old schema,
+    and the explicit-schema read NULL-pads added columns / widens
+    promoted types per file instead of letting footer inference pick a
+    random file's schema."""
+    with open(os.path.join(data_dir, SCHEMA_MARKER), "w") as f:
+        f.write(json.dumps(json.loads(schema.json())))
+
+
+def read_schema_marker(data_dir: str) -> StructType | None:
+    """The marked schema of `data_dir`, or None for data written before
+    the marker (footer inference remains its contract)."""
+    p = os.path.join(data_dir, SCHEMA_MARKER)
+    if not os.path.isfile(p):
+        return None
+    with open(p) as f:
+        return StructType.fromJson(json.load(f))
+
+
+def read_state(spark: SparkSession, path: str) -> DataFrame:
+    """Read a state table with its marked schema: no footer inference, so
+    no Spark job. Unmarked (older) state falls back to inference."""
+    schema = read_schema_marker(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
 def atomic_overwrite(df: DataFrame, path: str) -> None:
-    """Materialize `df` and atomically replace the table directory at `path`
-    (write to a temp dir, rename-swap, drop the old) — the overwrite
-    primitive every snapshot-shaped state table shares. Callers must pass a
-    plan that does not read `path` itself unless it is already materialized
-    (localCheckpoint(eager=True) cuts that lineage)."""
+    """Write `df` and atomically replace the table directory at `path`
+    (write to a temp dir with its schema marker, rename-swap, drop the
+    old) — the overwrite primitive every snapshot-shaped state table
+    shares. `df` may read `path` itself: the write job finishes before
+    either rename, so no eager checkpoint is needed."""
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
     df.write.mode("overwrite").parquet(tmp)
+    write_schema_marker(tmp, df.schema)
     old = f"{path}.old-{uuid.uuid4().hex[:8]}"
     if _exists(path):
         os.rename(path, old)
@@ -64,12 +121,63 @@ def read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """Read a state table, or an empty typed DataFrame if it doesn't exist
     yet (first run bootstrap)."""
     if _exists(path):
-        return spark.read.parquet(path)
+        return read_state(spark, path)
     return spark.createDataFrame([], schema)
 
 
+def commit_scalar(path: str, column: str, value: int | datetime.datetime) -> None:
+    """Commit a one-row marker (`column` = `value`, a long or a timestamp)
+    on the driver: write a hidden temp file inside `path`, `os.replace`
+    it onto `path/part-00000.parquet`, then unlink whatever else the
+    directory holds (part files of the Spark-written layout, a crashed
+    commit's temp file). A crash at any point leaves the old or the new
+    value readable. Timestamps are stored as Spark stores them: INT64
+    micros, UTC-adjusted, converted from the datetime exactly as
+    `createDataFrame` would."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if isinstance(value, datetime.datetime):
+        arr = pa.array([TimestampType().toInternal(value)], pa.int64()).cast(
+            pa.timestamp("us", tz="UTC")
+        )
+    else:
+        arr = pa.array([int(value)], pa.int64())
+    os.makedirs(path, exist_ok=True)
+    tmp = os.path.join(path, f".{SCALAR_FILE}.tmp-{uuid.uuid4().hex[:8]}")
+    pq.write_table(pa.table({column: arr}), tmp)
+    os.replace(tmp, os.path.join(path, SCALAR_FILE))
+    for name in os.listdir(path):
+        p = os.path.join(path, name)
+        if name != SCALAR_FILE and os.path.isfile(p):
+            os.unlink(p)
+
+
+def read_scalar(path: str, column: str) -> int | datetime.datetime | None:
+    """The value of a one-row marker, or None when it was never committed.
+    Reads the canonical file, else the directory (the Spark-written
+    layout of markers committed before `commit_scalar`); a timestamp comes
+    back as the naive datetime `collect()` would return."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if not _exists(path):
+        return None
+    canonical = os.path.join(path, SCALAR_FILE)
+    col = pq.read_table(
+        canonical if _exists(canonical) else path, columns=[column]
+    ).column(column)
+    if len(col) == 0:
+        return None
+    if pa.types.is_timestamp(col.type):
+        # INT96 markers come back as nanoseconds
+        us = col.cast(pa.timestamp("us", col.type.tz), safe=False).cast(pa.int64())
+        return TimestampType().fromInternal(us[0].as_py())
+    return col[0].as_py()
+
+
 class Watermark:
-    """Single-row watermark table (reference `lastUpdated`, R25)."""
+    """Single-row watermark marker (reference `lastUpdated`, R25)."""
 
     EPOCH = datetime.datetime(1970, 1, 1)
 
@@ -78,14 +186,11 @@ class Watermark:
         self.path = os.path.join(state_dir, "watermark.parquet")
 
     def read(self) -> datetime.datetime:
-        if not _exists(self.path):
-            return self.EPOCH
-        row = self.spark.read.parquet(self.path).collect()
-        return row[0]["lastUpdated"] if row else self.EPOCH
+        ts = read_scalar(self.path, "lastUpdated")
+        return self.EPOCH if ts is None else ts
 
     def commit(self, ts: datetime.datetime) -> None:
-        df = self.spark.createDataFrame([(ts,)], "lastUpdated timestamp")
-        atomic_overwrite(df, self.path)
+        commit_scalar(self.path, "lastUpdated", ts)
 
 
 def _publish_parquet_files(stage: str, path: str) -> None:
@@ -97,7 +202,8 @@ def _publish_parquet_files(stage: str, path: str) -> None:
     directories are only created when a file is about to land in them
     (a crash can at worst leave an empty partition subdir, which parquet
     partition discovery ignores). Part-file names carry task UUIDs, so
-    renames never collide with existing sink files."""
+    renames never collide with existing sink files. The stage's schema
+    marker lands last, with `os.replace` over the sink's."""
     if not _exists(path):
         os.rename(stage, path)
         return
@@ -110,6 +216,7 @@ def _publish_parquet_files(stage: str, path: str) -> None:
         os.makedirs(out, exist_ok=True)
         for name in data:
             os.rename(os.path.join(root, name), os.path.join(out, name))
+    os.replace(os.path.join(stage, SCHEMA_MARKER), os.path.join(path, SCHEMA_MARKER))
 
 
 def _stage_audit_publish(
@@ -121,9 +228,10 @@ def _stage_audit_publish(
     """The stage-audit-publish core of both appends: write `df` ONCE to a
     sibling `<path>.stage-*` dir with its row count and the `audit` rules'
     violation counts riding the write as one observation, then rename the
-    staged files into the sink only when every rule held and the count is
-    non-zero. A violated rule drops the stage, leaves the sink untouched
-    and raises AssertionError naming the rule. Returns the count.
+    staged files and the schema marker into the sink only when every rule
+    held and the count is non-zero. A violated rule drops the stage,
+    leaves the sink untouched and raises AssertionError naming the rule.
+    Returns the count.
 
     The observation is the ROOT of the written plan
     (operators.expectations.observe_rules on the final frame). AQE's
@@ -149,6 +257,13 @@ def _stage_audit_publish(
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(stage)
+        # the schema a reader sees: partition discovery appends the
+        # partition columns after the data columns
+        schema = df.schema
+        last = partition_by or []
+        write_schema_marker(stage, StructType(
+            [f for f in schema if f.name not in last] + [schema[c] for c in last]
+        ))
         metrics = resolve()
         n = metrics.pop("rows")
         violated = {rule: v for rule, v in metrics.items() if v}
@@ -215,10 +330,12 @@ def idempotent_append(
     row NOT satisfying `fence` cannot share `key` with any batch row; the
     watermark contract above is the canonical instance."""
     if _exists(path):
-        existing = new.sparkSession.read.parquet(path)
+        existing = read_state(new.sparkSession, path)
         if fence is not None:
             existing = existing.filter(fence)
-        new = new.join(existing.select(key), key, "left_anti")
+        # the USING join moves `key` first; keep the batch's column order,
+        # so every file of the sink and its schema marker share one order
+        new = new.join(existing.select(key), key, "left_anti").select(*new.columns)
     return _stage_audit_publish(new, path, partition_by, audit)
 
 
@@ -249,7 +366,7 @@ def snapshot_overwrite(
     # survivor of an exact orderBy tie.
     tagged_new = new.withColumn("__src", F.lit(1))
     if _exists(path):
-        old = spark.read.parquet(path).withColumn("__src", F.lit(0))
+        old = read_state(spark, path).withColumn("__src", F.lit(0))
         merged = old.unionByName(tagged_new, allowMissingColumns=True)
     else:
         merged = tagged_new
@@ -261,22 +378,5 @@ def snapshot_overwrite(
         .filter(F.col("__rn") == 1)
         .drop("__rn", "__src")
     )
-    # The window result must be materialized before the source directory is
-    # replaced: localCheckpoint cuts the lineage back to the old files.
-    atomic_overwrite(latest.localCheckpoint(eager=True), path)
+    atomic_overwrite(latest, path)
 
-
-def compact(spark: SparkSession, path: str, target_mb: int = 128) -> int:
-    """Small-files compaction: incremental idempotent appends accumulate one
-    file per batch; periodically bin-pack the table back to ~target_mb files
-    (the maintenance job every parquet lake needs — Delta's OPTIMIZE, by
-    hand). Returns the resulting file count. Delegates to
-    operators.maintenance.compact — the INCREMENTAL implementation (only
-    sub-half-target files are rewritten, full-size files carried as
-    hardlinks, partition-aware, crash-recovering staging) — so there is one
-    compaction semantics in the engine, not a whole-history-rewrite twin."""
-    from metrics_database_cron_script_spark.operators.maintenance import (
-        compact as _compact,
-    )
-
-    return _compact(spark, path, target_mb=target_mb)

@@ -272,7 +272,7 @@ def stream_rollup_maintenance(
             .withColumn("epoch", F.lit(epoch_id).cast("long"))
             .withColumn("lineage", F.lit(qid))
         )
-        atomic_overwrite(merged.localCheckpoint(eager=True), state_path)
+        atomic_overwrite(merged, state_path)  # merged reads state_path: allowed
 
     import os
 

@@ -56,12 +56,15 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from metrics_database_cron_script_spark.state import (
+    read_schema_marker,
+    read_state,
+    write_schema_marker,
+)
+
 
 class ConcurrentWriteError(RuntimeError):
     """Another writer committed the version this writer raced for."""
-
-
-SCHEMA_MARKER = "_schema.json"
 
 
 def _can_upcast(spark: SparkSession, from_type, to_type) -> bool:
@@ -102,35 +105,6 @@ def _can_upcast(spark: SparkSession, from_type, to_type) -> bool:
             from_type.simpleString() == "float"
             and to_type.simpleString() == "double"
         )
-
-
-def _write_schema_marker(data_dir: str, schema) -> None:
-    """Persist the version's COMMITTED schema inside its (still-staged)
-    data dir. Underscore-prefixed files are invisible to Spark's file
-    source, and `_link_tree` carries the marker into restore()'s
-    hardlinked stage for free. The marker is what makes hardlink
-    carry-forward safe under schema evolution: untouched partitions keep
-    their old-schema files, and the explicit-schema read NULL-pads added
-    columns / widens promoted types per file instead of letting footer
-    inference pick a random file's schema."""
-    import json as _json
-
-    with open(os.path.join(data_dir, SCHEMA_MARKER), "w") as f:
-        f.write(_json.dumps(_json.loads(schema.json())))
-
-
-def _read_schema_marker(data_dir: str):
-    """The committed schema of a version, or None for pre-evolution
-    versions (footer inference remains their contract)."""
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
-    p = os.path.join(data_dir, SCHEMA_MARKER)
-    if not os.path.isfile(p):
-        return None
-    with open(p) as f:
-        return StructType.fromJson(_json.load(f))
 
 
 def _link_tree(src: str, dst: str) -> None:
@@ -259,12 +233,7 @@ class VersionedSnapshot:
         with — added columns NULL-padded and widened types promoted over
         any hardlink-carried old-schema files; pre-marker versions keep
         footer inference)."""
-        d = self._resolve_data_dir(version)
-        committed = _read_schema_marker(d)
-        reader = self.spark.read
-        if committed is not None:
-            reader = reader.schema(committed)
-        return reader.parquet(d)
+        return read_state(self.spark, self._resolve_data_dir(version))
 
     # --------------------------------------------------------------- writes
 
@@ -318,7 +287,7 @@ class VersionedSnapshot:
         target = observed + 1
         data = self._stage_dir(target)
         df.write.mode("overwrite").parquet(data)
-        _write_schema_marker(data, df.schema)
+        write_schema_marker(data, df.schema)
         self._publish(target, data)
         return target
 
@@ -351,7 +320,7 @@ class VersionedSnapshot:
         target = observed + 1
         data = self._stage_dir(target)
         audited.write.mode("overwrite").parquet(data)
-        _write_schema_marker(data, audited.schema)
+        write_schema_marker(data, audited.schema)
         metrics = resolve()
         violations = sum(v for k, v in metrics.items() if k != "rows")
         if violations > max_violations:
@@ -577,7 +546,7 @@ class VersionedSnapshot:
             # the partition col where the hive write layout puts it on
             # read-back: last); carried-forward old-schema partitions are
             # NULL-padded/widened through this marker at read time
-            _write_schema_marker(
+            write_schema_marker(
                 target_stage,
                 latest.select(
                     *[c for c in latest.columns if c != partition_col],
@@ -650,9 +619,9 @@ class VersionedSnapshot:
                 ]
             stage = self._stage_dir(v + 1)
             os.makedirs(stage, exist_ok=True)
-            old_schema = _read_schema_marker(old_dir)
+            old_schema = read_schema_marker(old_dir)
             if old_schema is not None:
-                _write_schema_marker(stage, old_schema)
+                write_schema_marker(stage, old_schema)
             for name in part_dirs:
                 if name in targets:
                     # per-partition single-file rewrite: the read is pruned
@@ -719,7 +688,7 @@ class VersionedSnapshot:
                     *[c for c in src.columns if c not in part_cols],
                     *part_cols,
                 )
-            _write_schema_marker(stage, src.schema)
+            write_schema_marker(stage, src.schema)
             try:
                 self._publish(v + 1, stage)
                 return v + 1
@@ -806,7 +775,7 @@ class VersionedSnapshot:
             # can mix file schemas (a carried-forward partition rewritten
             # under an older schema), and footer inference would pick one
             # file's layout at random — the marker NULL-pads/widens instead
-            committed = _read_schema_marker(data_dir)
+            committed = read_schema_marker(data_dir)
             reader = self.spark.read
             if committed is not None:
                 reader = reader.schema(committed)
@@ -820,7 +789,7 @@ class VersionedSnapshot:
         new = _side(d_new, m_new)
         if old is None and new is None:
             # identical snapshots (or from == to): empty feed, stable schema
-            schema = _read_schema_marker(d_new) or self.spark.read.parquet(d_new).schema
+            schema = read_state(self.spark, d_new).schema
             empty = self.spark.createDataFrame([], schema)
             old = new = empty
         elif old is None:

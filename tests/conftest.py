@@ -38,6 +38,16 @@ def _release_dead_spark_blocks():
         sc._jvm.System.gc()
 
 
+def spark_job_ids(spark) -> set[int]:
+    """Ids of the jobs in Spark's status store (ids count up from 0), once
+    the listener bus has delivered every submitted job to it."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    conv = getattr(sc._jvm, "scala.jdk.javaapi.CollectionConverters")
+    jobs = conv.asJava(sc._jsc.sc().statusStore().jobsList(None))
+    return {j.jobId() for j in jobs}
+
+
 @contextlib.contextmanager
 def set_confs(spark, **kv):
     """Set SQL confs for a block and restore prior values on exit; `__` in

@@ -7,7 +7,7 @@ import datetime
 
 import pytest
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, spark_job_ids
 
 
 @pytest.fixture()
@@ -571,14 +571,6 @@ def test_embedding_index_incremental_replay_and_probe_equivalence(spark, tmp_pat
     assert idx2.select("vec_id").distinct().count() == total
 
 
-def _job_ids(spark) -> set[int]:
-    """Ids of the jobs in Spark's status store (ids count up from 0)."""
-    sc = spark.sparkContext
-    conv = getattr(sc._jvm, "scala.jdk.javaapi.CollectionConverters")
-    jobs = conv.asJava(sc._jsc.sc().statusStore().jobsList(None))
-    return {j.jobId() for j in jobs}
-
-
 def test_embedding_index_bootstrap_on_empty_embeddings(spark, tmp_path):
     """P8 on an empty embeddings table bootstraps nothing: no index, no
     frontier, no error (a failing fit would stop run_batch before the
@@ -610,17 +602,18 @@ def test_embedding_index_bootstrap_on_empty_embeddings(spark, tmp_path):
 
 def test_embedding_index_bootstrap_job_budget(spark, tmp_path):
     """P8's bootstrap is one aggregate (count and max vec_id), one sample
-    collect for the driver-side fit, the cell-partitioned write and the
-    frontier commit: at most 5 Spark jobs. The MLlib fit it replaced ran
-    18, most of them k-means passes over the sample."""
+    collect for the driver-side fit and the cell-partitioned write; the
+    frontier commit is driver-side file I/O: at most 4 Spark jobs. The
+    MLlib fit it replaced ran 18, most of them k-means passes over the
+    sample."""
     from metrics_database_cron_script_spark.pipelines import update_embedding_index
 
     state = str(tmp_path / "state")
-    before = max(_job_ids(spark), default=-1)
+    before = max(spark_job_ids(spark), default=-1)
     r = update_embedding_index(spark, SF_SMOKE, state)
-    ran = [j for j in _job_ids(spark) if j > before]
+    ran = [j for j in spark_job_ids(spark) if j > before]
     assert r["bootstrap_vectors"] > 0
-    assert len(ran) <= 5, f"P8 bootstrap ran {len(ran)} jobs"
+    assert len(ran) <= 4, f"P8 bootstrap ran {len(ran)} jobs"
 
 
 def test_stats_incremental_matches_full_recompute_and_survives_crash(spark, tmp_path):

@@ -44,7 +44,8 @@ def test_snapshot_overwrite_keeps_latest(spark, tmp_path):
 def test_compact_bin_packs_small_files(spark, tmp_path):
     import glob
 
-    from metrics_database_cron_script_spark.state import compact, idempotent_append
+    from metrics_database_cron_script_spark.operators.maintenance import compact
+    from metrics_database_cron_script_spark.state import idempotent_append
 
     path = str(tmp_path / "frag.parquet")
     # 10 micro-appends → ≥10 part files
