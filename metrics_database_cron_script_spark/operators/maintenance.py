@@ -2,18 +2,22 @@
 
 The idempotent-append sink (state.py) adds files every cron run; after
 months of daily batches a 100 TB table becomes millions of small files and
-scan planning + open() overhead dominates. `compact` rewrites a parquet
-directory to ~`target_mb` files using the same directory-swap the snapshot
-writer uses (readers never see a half-written table; the swap is a rename).
+scan planning + open() overhead dominates. `compact` bin-packs a parquet
+table's small files to ~`target_mb` files.
 
-Sizing: output partition count = ceil(input_bytes / target_mb), from the
+Durable effects go through the state layer (state.py, durable effects):
+the packed leaves are written under a sibling `<table>.__compact-*/tmp`
+dir, and each leaf is put in place by `state._swap`, the two-rename swap
+the snapshot writer uses, with the replaced leaf parked under
+`<table>.__compact-*/old`. Readers never see a half-written leaf. A crash
+leaves that staging dir for `state.recover`, which every compaction runs
+first on its table: a leaf caught between the two renames is moved back,
+everything else is reaped. This module renames nothing itself.
+
+Sizing: output file count = ceil(small-file bytes / target_mb), from the
 actual on-disk footprint. Local paths are sized with os.walk; on a real
 cluster the same arithmetic runs on the FileSystem API (the call site is
-isolated here so the swap-in is one function). `repartition(n)` (round-
-robin) is used rather than `coalesce(n)`: coalesce would skip the shuffle
-but chains upstream partitioning into the write and produces skewed files
-when input files are skewed — for a maintenance rewrite, evenly-sized
-output is the point.
+isolated here so the swap-in is one function).
 """
 
 from __future__ import annotations
@@ -25,16 +29,12 @@ import uuid
 
 from pyspark.sql import SparkSession
 
-from metrics_database_cron_script_spark.state import SCHEMA_MARKER, read_schema_marker
-
-
-def dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
+from metrics_database_cron_script_spark.state import (
+    SCHEMA_MARKER,
+    _swap,
+    read_schema_marker,
+    recover,
+)
 
 
 def parquet_file_count(path: str) -> int:
@@ -52,51 +52,6 @@ def leaf_parquet_dirs(path: str) -> list[str]:
         if any(f.endswith(".parquet") for f in files):
             leaves.append(root)
     return sorted(leaves)
-
-
-def recover_staging(base: str) -> list[str]:
-    """Reap-or-restore leftover `__compact-*` staging from a crashed run.
-
-    The swap protocol per leaf is: (1) write staging/tmp/<rel>, (2) rename
-    leaf → staging/old/<rel>, (3) rename staging/tmp/<rel> → leaf. A crash
-    between (2) and (3) leaves the leaf ABSENT from the table and its only
-    copy under staging/old — so recovery must move such leaves back before
-    anything is deleted. Leaves whose target exists again (crash after (3),
-    before cleanup) are superseded copies and are discarded with the rest
-    of the staging. tmp/ content is always discardable: it was never the
-    only copy. Idempotent and cheap (one listdir when there is no
-    leftover), so the daily driver runs it unconditionally — at the START
-    of the run, before anything reads a sink: healing only at end-of-run
-    would let the batch steps see (and recreate) a missing sink, after
-    which the late heal would discard the restored history as superseded.
-
-    Returns the restored leaf paths (empty when there was nothing to heal)
-    so callers can invalidate Spark's cached FileIndex for the table —
-    a restore changes the file listing without any Spark write."""
-    restored: list[str] = []
-    parent, name = os.path.split(base)
-    for n in os.listdir(parent or "."):
-        if not n.startswith(f"{name}.__compact-"):
-            continue
-        staging = os.path.join(parent, n)
-        old_root = os.path.join(staging, "old")
-        if os.path.isdir(old_root):
-            # materialize the leaf list BEFORE renaming anything — renaming
-            # directories out from under an in-flight os.walk skips subtrees
-            for root in leaf_parquet_dirs(old_root):
-                rel = os.path.relpath(root, old_root)
-                leaf = base if rel == "__root__" else os.path.join(base, rel)
-                if not os.path.isdir(leaf) or not any(
-                    f.endswith(".parquet") for f in os.listdir(leaf)
-                ):
-                    os.makedirs(os.path.dirname(leaf) or "/", exist_ok=True)
-                    if os.path.isdir(leaf):
-                        # empty placeholder dir: replace wholesale
-                        shutil.rmtree(leaf)
-                    os.rename(root, leaf)
-                    restored.append(leaf)
-        shutil.rmtree(staging, ignore_errors=True)
-    return restored
 
 
 def compact(
@@ -133,13 +88,13 @@ def compact(
     # (duplicated rows / conflicting-structure errors for any concurrent
     # reader) and a crashed run's leftovers would look like real leaves to
     # the next compaction. A crashed run's staging is RECOVERED, not just
-    # deleted (recover_staging): a crash between the two swap renames
+    # deleted (state.recover): a crash between the two swap renames
     # leaves the leaf's only copy under staging/old, and a blind reap
     # would destroy it. This op assumes the same single-maintenance-writer
     # window as the rest of state.py; the snapshot-isolated variant is
     # VersionedSnapshot.compact_partitions.
     base = path.rstrip("/")
-    recover_staging(base)
+    recover(base)
     staging = f"{base}.__compact-{uuid.uuid4().hex[:8]}"
     target_bytes = target_mb * 1024 * 1024
 
@@ -260,22 +215,19 @@ def compact(
         # swap each packed leaf: full-size files ride as hardlinks (same
         # bytes, new directory entry, zero copy — same-filesystem sibling
         # staging), and so does a flat table's schema marker, then the
-        # two-rename crash-recoverable swap
+        # state layer's two-rename swap (healed by state.recover)
         for leaf, (small, files, _n_out) in plan.items():
             tmp = os.path.join(tmp_root, _rel(leaf))
             if not os.path.isdir(tmp):
                 # pack produced no output for this leaf (e.g. all-empty
                 # small files): leave the leaf exactly as it is
                 continue
-            old = os.path.join(staging, "old", _rel(leaf))
             carried = [f for f, _sz in files if f not in small]
             if os.path.isfile(os.path.join(leaf, SCHEMA_MARKER)):
                 carried.append(SCHEMA_MARKER)
             for f in carried:
                 os.link(os.path.join(leaf, f), os.path.join(tmp, f))
-            os.makedirs(os.path.dirname(old), exist_ok=True)
-            os.rename(leaf, old)
-            os.rename(tmp, leaf)
+            _swap(tmp, leaf, os.path.join(staging, "old", _rel(leaf)))
     finally:
         shutil.rmtree(staging, ignore_errors=True)
     return parquet_file_count(path)

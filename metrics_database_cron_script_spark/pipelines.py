@@ -8,8 +8,11 @@ Differences from the reference, by design (SURVEY.md §3/§7):
   (the reference duplicates ~100 LoC per chain, R24);
 - the watermark commits LAST, after every sink succeeded (the reference
   commits it before step 5 — a crash there permanently skips data);
-- every sink append is anti-join idempotent, so a crashed run re-runs
-  safely end-to-end.
+- every sink append is anti-join idempotent, and every durable effect is
+  a rename through the state layer (state.py, durable effects) that
+  `run_batch` heals on every table before any step reads, so a run killed
+  at any point replays to the state an uninterrupted run leaves
+  (tests/test_crash_sweep.py).
 
 State layout under `state_dir`: `prices.parquet`, `tx_enriched.parquet`,
 `stats.parquet`, `sink_nominations.parquet`, `sink_amountstaked.parquet`,
@@ -539,7 +542,9 @@ def update_embedding_index(
     sample size, the frontier, and the written count, since the write
     emits every row), ivf_fit's one sample collect for its driver-side
     k-means and the cell-partitioned write (assigned by the same
-    ivf_assign_fixed the daily append runs): 4 Spark jobs. The frontier
+    ivf_assign_fixed the daily append runs): 4 Spark jobs. The index,
+    its centers sidecar and its schema marker are written to a staged
+    copy and swapped in at once (`state.replace_table`). The frontier
     commit and, on a daily run, its read are driver-side file I/O
     (`state.commit_scalar` / `read_scalar`) and run none. An
     empty embeddings table bootstraps nothing and leaves index and
@@ -548,12 +553,14 @@ def update_embedding_index(
     Crash safety differs from P7 deliberately: a derived frontier
     (max key IN the state) can advance past unpublished rows when an
     append crashes mid-publish, so P8 keeps an EXPLICIT frontier marker
-    (`ivf_frontier.parquet`, watermark-style) committed AFTER the append;
-    an index without one fails loudly rather than guess a frontier.
-    A crash between append and marker commit leaves index rows above the
-    frontier; the replay's anti-join is fenced on exactly that window
-    (`vec_id > frontier` — the idempotent_append fence contract), so the
-    replay appends only the missing rows and never rescans the index.
+    (`ivf_frontier.parquet`, watermark-style) committed AFTER the append.
+    The bootstrap runs whenever the index or the marker is absent, so a
+    bootstrap killed between its index swap and its first frontier
+    commit bootstraps again on the replay. A crash between append and
+    marker commit leaves index rows above the frontier; the replay's
+    anti-join is fenced on exactly that window (`vec_id > frontier` —
+    the idempotent_append fence contract), so the replay appends only
+    the missing rows and never rescans the index.
     Probes (similarity.ivf_index_probe) read only probed cell dirs —
     static partition pruning; equivalence with a fresh same-centers probe
     is gated in tests/test_pipelines.py. Single-writer like all P1-P7
@@ -571,19 +578,22 @@ def update_embedding_index(
     index_p = _sink(state_dir, "ivf_index")
     frontier_p = _sink(state_dir, "ivf_frontier")
 
-    if not os.path.isdir(index_p):
+    frontier = ST.read_scalar(frontier_p, "frontier")
+    if frontier is None or not os.path.isdir(index_p):
         row = emb.agg(
             F.count(F.lit(1)).alias("n"), F.max("vec_id").alias("m")
         ).collect()[0]
         if row["n"] == 0:
             return {"bootstrap_vectors": 0, "batch_vectors": 0}
-        S.ivf_index_write(emb, index_p, n_cells=n_cells, n_rows=row["n"])
+
+        def write(tmp: str) -> None:
+            centers = S.ivf_index_write(emb, tmp, n_cells=n_cells, n_rows=row["n"])
+            ST.write_schema_marker(tmp, S.ivf_assign_fixed(emb, centers).schema)
+
+        ST.replace_table(index_p, write)  # index, sidecar and marker at once
         ST.commit_scalar(frontier_p, "frontier", row["m"])  # frontier LAST
         return {"bootstrap_vectors": row["n"], "batch_vectors": 0}
 
-    frontier = ST.read_scalar(frontier_p, "frontier")
-    if frontier is None:
-        raise FileNotFoundError(f"{frontier_p}: IVF index without a frontier marker")
     batch = emb.filter(F.col("vec_id") > F.lit(frontier))
     # one cheap agg decides no-op BEFORE any staged write: on a replay the
     # pushed vec_id predicate prunes the source scan to row-group stats
@@ -613,25 +623,23 @@ def run_batch(
 ) -> dict[str, object]:
     """The cron-equivalent driver (updatescript.py:221-241), re-ordered so the
     watermark commit is the LAST effect. Explicit `run_ts` (reference's
-    datetime.now(), :224) keeps runs replayable."""
+    datetime.now(), :224) keeps runs replayable: a run killed at any
+    point replays, after the heal below, to the state an uninterrupted
+    run leaves (tests/test_crash_sweep.py kills it after each kind of
+    durable effect)."""
     os.makedirs(state_dir, exist_ok=True)
-    # Heal crashed-compaction staging BEFORE any step reads a sink. A crash
-    # between compaction's two swap renames leaves a sink (flat root or
-    # partition leaf) absent with its only copy under staging/old; if P1-P8
-    # ran first they would see a missing sink, recreate it with just the new
-    # batch, and the END-of-run recover_staging would then treat staging/old
-    # as superseded and delete the sink's entire history. Idempotent and one
-    # listdir per sink when there is nothing to heal; the end-of-run call in
-    # run_maintenance stays (it is idempotent too).
-    from metrics_database_cron_script_spark.operators import maintenance as _M
-
-    for _name in APPEND_SINKS:
-        _path = _sink(state_dir, _name)
-        if _M.recover_staging(_path.rstrip("/")):
-            # the heal changed the file listing without a Spark write:
-            # drop any cached FileIndex so this session reads the
-            # restored layout, not a stale (possibly FILE_NOT_EXIST) one
-            spark.catalog.refreshByPath(_path)
+    # Heal every table BEFORE any step reads one (state.recover_tables,
+    # one listdir when nothing crashed). A crash between a swap's two
+    # renames leaves a table (or a compacted partition leaf) absent with
+    # its only copy parked beside it; a step that read first would see a
+    # missing table and rebuild it from scratch — the rollup re-merged
+    # from EPOCH, an append sink recreated with just the new batch and its
+    # parked history then dropped as superseded.
+    if ST.recover_tables(state_dir):
+        # the heal changed listings without a Spark write: drop every
+        # cached FileIndex under state_dir (a stale one throws
+        # FILE_NOT_EXIST)
+        spark.catalog.refreshByPath(state_dir)
     events = load_table(spark, sf_dir, "events")
     wm_store = ST.Watermark(spark, state_dir)
     watermark = wm_store.read()
@@ -709,39 +717,32 @@ def run_maintenance(
     O(files-written-since-last-compaction), not O(history). Content is
     bit-for-bit preserved (rows, not files, carry the idempotency fences
     and frontier markers, so replay semantics are untouched — pinned by
-    tests/test_pipelines.py). Crash-safe via maintenance.recover_staging:
-    a run that died between swap renames is healed before the next
-    compaction, and every compacted path is refreshed in the session
-    catalog (Spark caches file listings per path; a stale FileIndex after
-    an in-place swap throws FILE_NOT_EXIST on the next read)."""
+    tests/test_pipelines.py). Crash-safe through the state layer: a
+    compaction that died between a leaf's two swap renames is healed by
+    `state.recover`, which the next `run_batch` runs on every table before
+    any step reads and `compact` runs again on its own table; every
+    compacted path is refreshed in the session catalog (Spark caches file
+    listings per path; a stale FileIndex after an in-place swap throws
+    FILE_NOT_EXIST on the next read)."""
     from metrics_database_cron_script_spark.operators import maintenance as M
 
     import time as _time
     from concurrent.futures import ThreadPoolExecutor
 
-    # Recovery + trigger gating stay SEQUENTIAL (metadata-only, one
-    # listdir per sink), then the per-sink compact jobs run OVERLAPPED
+    # Trigger gating stays SEQUENTIAL (metadata-only, one walk per sink),
+    # then the per-sink compact jobs run OVERLAPPED
     # from a small thread pool (guide §2.6: Spark happily schedules
     # several jobs at once; these are independent single-job rewrites of
     # DISJOINT sink directories whose walls are mostly scheduling floor +
     # small writes, so the daily P9 wall collapses from the SUM of the
     # per-sink walls to roughly their MAX — measured 9.3 s → ~3 s at
     # SFXL). Each sink's staging dir is its own (uuid-suffixed, sibling
-    # of the sink), so concurrent compactions share no filesystem state,
-    # and the crash-heal protocol is unchanged per sink.
+    # of the sink), so concurrent compactions share no filesystem state.
+    # Each compact heals its own table first (state.recover).
     report: dict[str, dict[str, int]] = {}
     todo: list[tuple[str, str, int]] = []
     for name in APPEND_SINKS:
         path = _sink(state_dir, name)
-        # recover BEFORE the isdir gate: in the crash window a FLAT sink's
-        # root is itself the renamed-away leaf, so the path may not exist
-        # until recover_staging restores it
-        if M.recover_staging(path.rstrip("/")):
-            # restored leaves changed the listing without a Spark write —
-            # refresh even when the sink stays below trigger_files and no
-            # compaction follows (a stale FileIndex throws FILE_NOT_EXIST
-            # on the next same-session read)
-            spark.catalog.refreshByPath(path)
         if not os.path.isdir(path):
             continue
         before = M.parquet_file_count(path)

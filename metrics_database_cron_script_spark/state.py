@@ -31,17 +31,40 @@ The control plane runs no Spark job:
   files written and read on the driver with pyarrow (`commit_scalar`,
   `read_scalar`), in the layout Spark would write (INT64 micros,
   UTC-adjusted, for timestamps). A commit writes a hidden temp file in
-  the marker directory and `os.replace`s it onto `part-00000.parquet`, so
+  the marker directory and renames it onto `part-00000.parquet`, so
   the marker is never absent once committed and a reader sees the old or
-  the new value.
+  the new value; a first commit killed before its rename leaves only the
+  temp file, which reads as never committed, and the next commit reaps
+  it.
 
-`atomic_overwrite` writes to a sibling `<path>.tmp-*` dir, then renames
-over the old directory — a crash mid-write leaves the previous committed
-state intact. The plan it writes may read `path` itself: every row is in
-the tmp dir before either rename. These primitives assume the reference's
-own operating model: ONE writer (a daily cron). Within that writer,
-appends to DISJOINT sinks may run from concurrent threads of one session:
-they touch no session conf and take no lock. For concurrent writers use
+Durable effects. Every rename or replace of state in the package goes
+through `_rename` (`os.replace`), and a crash leaves at most a staged
+sibling of the table it was writing, named `<table>.<kind>-<id>`:
+
+- `.tmp-*`: a new copy, written but not yet swapped in. `replace_table`
+  (which `atomic_overwrite` and P8's index bootstrap use) fills it, then
+  `_swap` moves it in with two renames: the table to `<table>.old-*`, the
+  tmp dir to the table; the old copy is dropped last. Compaction
+  (`operators.maintenance.compact`) swaps each packed leaf with the same
+  `_swap`, staged under `<table>.__compact-*/{tmp,old}/<leaf>`.
+- `.stage-*`: a staged append (`_stage_audit_publish`), whose files are
+  renamed one by one into the table.
+
+`recover(path)` heals one table: an old copy whose target is absent (a
+crash between a swap's two renames) is moved back; any other old copy is
+dropped; the table's `.tmp-*`, `.stage-*` and `.__compact-*` leftovers are
+reaped. Each writer heals its own table before it reads it, and
+`pipelines.run_batch` heals every table of its state dir
+(`recover_tables`) before any step reads. A crash in a swap therefore
+leaves the old or the new table, never none; a crash inside a publish
+leaves some of the batch's files in the table, which the replay's fenced
+anti-join absorbs. The plan `atomic_overwrite` writes may read `path`
+itself: every row is in the tmp dir before either rename.
+
+These primitives assume the reference's own operating model: ONE writer
+(a daily cron). Within that writer, appends to DISJOINT sinks may run
+from concurrent threads of one session: they touch no session conf and
+take no lock. For concurrent writers use
 `versioned.VersionedSnapshot` — same keep-latest MERGE semantics under
 optimistic concurrency (exclusive-create commit log, conflict-detect,
 retry), the hand-rolled form of what Delta/Iceberg provide.
@@ -54,6 +77,7 @@ import json
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -63,10 +87,6 @@ from metrics_database_cron_script_spark.operators.expectations import observe_ru
 
 SCHEMA_MARKER = "_schema.json"
 SCALAR_FILE = "part-00000.parquet"
-
-
-def _exists(path: str) -> bool:
-    return os.path.exists(path)
 
 
 def write_schema_marker(data_dir: str, schema: StructType) -> None:
@@ -100,27 +120,97 @@ def read_state(spark: SparkSession, path: str) -> DataFrame:
     return reader.parquet(path)
 
 
-def atomic_overwrite(df: DataFrame, path: str) -> None:
-    """Write `df` and atomically replace the table directory at `path`
-    (write to a temp dir with its schema marker, rename-swap, drop the
-    old) — the overwrite primitive every snapshot-shaped state table
-    shares. `df` may read `path` itself: the write job finishes before
-    either rename, so no eager checkpoint is needed."""
+def _rename(src: str, dst: str) -> None:
+    """The one rename of durable state in the package; `os.replace`, so a
+    file (or an empty directory) at `dst` is replaced atomically."""
+    os.replace(src, dst)
+
+
+def _swap(tmp: str, path: str, old: str) -> None:
+    """Put the complete directory `tmp` in the place of `path`: rename
+    `path` (when present) to `old`, `tmp` to `path`, then drop `old`. A
+    crash between the two renames leaves `path` absent and its only copy
+    at `old`, which `recover` moves back."""
+    if os.path.exists(path):
+        os.makedirs(os.path.dirname(old), exist_ok=True)
+        _rename(path, old)
+    _rename(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def replace_table(path: str, write: Callable[[str], None]) -> None:
+    """Replace the table directory at `path` with the one `write(tmp)`
+    fills at a sibling `<path>.tmp-*` (data files and markers), through
+    `_swap`. The table is healed first."""
+    recover(path)
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(tmp)
-    write_schema_marker(tmp, df.schema)
-    old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    if _exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    if _exists(old):
-        shutil.rmtree(old)
+    write(tmp)
+    _swap(tmp, path, f"{path}.old-{uuid.uuid4().hex[:8]}")
+
+
+def atomic_overwrite(df: DataFrame, path: str) -> None:
+    """Write `df` with its schema marker and atomically replace the table
+    directory at `path` (`replace_table`) — the overwrite primitive every
+    snapshot-shaped state table shares. `df` may read `path` itself: the
+    write job finishes before either rename, so no eager checkpoint is
+    needed."""
+
+    def write(tmp: str) -> None:
+        df.write.mode("overwrite").parquet(tmp)
+        write_schema_marker(tmp, df.schema)
+
+    replace_table(path, write)
+
+
+_STAGED = (".old-", ".tmp-", ".stage-", ".__compact-")
+
+
+def recover(path: str) -> list[str]:
+    """Heal the table at `path` after a crashed run (module docstring,
+    durable effects): restore an old copy whose target is absent, drop
+    every other old copy, reap the table's `.tmp-*`, `.stage-*` and
+    `.__compact-*` leftovers. Idempotent; one listdir when there is
+    nothing to heal. Returns the restored paths (the table, or its
+    partition leaves): a restore changes the file listing without a
+    Spark write, so a caller holding frames over the table refreshes
+    them (`spark.catalog.refreshByPath`)."""
+    parent, base = os.path.split(path.rstrip("/"))
+    path, parent = os.path.join(parent, base), parent or "."
+    restored: list[str] = []
+    for n in sorted(os.listdir(parent)) if os.path.isdir(parent) else []:
+        if not n.startswith(tuple(base + kind for kind in _STAGED)):
+            continue
+        staged = os.path.join(parent, n)
+        if n.startswith(f"{base}.old-") and not os.path.exists(path):
+            _rename(staged, path)
+            restored.append(path)
+        elif n.startswith(f"{base}.__compact-"):
+            old_root = os.path.join(staged, "old")
+            # list the leaves before renaming any: renaming directories
+            # out from under an os.walk skips subtrees
+            for root, _dirs, files in list(os.walk(old_root)):
+                rel = os.path.relpath(root, old_root)
+                leaf = path if rel == "__root__" else os.path.join(path, rel)
+                if any(f.endswith(".parquet") for f in files) and not os.path.exists(leaf):
+                    _rename(root, leaf)
+                    restored.append(leaf)
+        shutil.rmtree(staged, ignore_errors=True)
+    return restored
+
+
+def recover_tables(state_dir: str) -> list[str]:
+    """`recover` every table of `state_dir` that has leftovers (a table
+    may be present only as its old copy): one listdir on a healthy run.
+    Returns the restored paths."""
+    names = os.listdir(state_dir)
+    tables = sorted({n[: n.rindex(k)] for n in names for k in _STAGED if k in n})
+    return [p for t in tables for p in recover(os.path.join(state_dir, t))]
 
 
 def read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """Read a state table, or an empty typed DataFrame if it doesn't exist
     yet (first run bootstrap)."""
-    if _exists(path):
+    if os.path.exists(path):
         return read_state(spark, path)
     return spark.createDataFrame([], schema)
 
@@ -146,7 +236,7 @@ def commit_scalar(path: str, column: str, value: int | datetime.datetime) -> Non
     os.makedirs(path, exist_ok=True)
     tmp = os.path.join(path, f".{SCALAR_FILE}.tmp-{uuid.uuid4().hex[:8]}")
     pq.write_table(pa.table({column: arr}), tmp)
-    os.replace(tmp, os.path.join(path, SCALAR_FILE))
+    _rename(tmp, os.path.join(path, SCALAR_FILE))
     for name in os.listdir(path):
         p = os.path.join(path, name)
         if name != SCALAR_FILE and os.path.isfile(p):
@@ -154,18 +244,20 @@ def commit_scalar(path: str, column: str, value: int | datetime.datetime) -> Non
 
 
 def read_scalar(path: str, column: str) -> int | datetime.datetime | None:
-    """The value of a one-row marker, or None when it was never committed.
-    Reads the canonical file, else the directory (the Spark-written
-    layout of markers committed before `commit_scalar`); a timestamp comes
-    back as the naive datetime `collect()` would return."""
+    """The value of a one-row marker, or None when it was never committed
+    (no directory, or one holding no part file: a first commit killed
+    before its rename leaves only its hidden temp file). Reads the
+    canonical file, else the directory (the Spark-written layout of
+    markers committed before `commit_scalar`); a timestamp comes back as
+    the naive datetime `collect()` would return."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    if not _exists(path):
+    parts = [n for n in os.listdir(path) if n.startswith("part-")] if os.path.isdir(path) else []
+    if not parts:
         return None
-    canonical = os.path.join(path, SCALAR_FILE)
     col = pq.read_table(
-        canonical if _exists(canonical) else path, columns=[column]
+        os.path.join(path, SCALAR_FILE) if SCALAR_FILE in parts else path, columns=[column]
     ).column(column)
     if len(col) == 0:
         return None
@@ -203,9 +295,9 @@ def _publish_parquet_files(stage: str, path: str) -> None:
     (a crash can at worst leave an empty partition subdir, which parquet
     partition discovery ignores). Part-file names carry task UUIDs, so
     renames never collide with existing sink files. The stage's schema
-    marker lands last, with `os.replace` over the sink's."""
-    if not _exists(path):
-        os.rename(stage, path)
+    marker lands last, replacing the sink's."""
+    if not os.path.exists(path):
+        _rename(stage, path)
         return
     for root, _dirs, files in os.walk(stage):
         rel = os.path.relpath(root, stage)
@@ -215,8 +307,8 @@ def _publish_parquet_files(stage: str, path: str) -> None:
             continue
         os.makedirs(out, exist_ok=True)
         for name in data:
-            os.rename(os.path.join(root, name), os.path.join(out, name))
-    os.replace(os.path.join(stage, SCHEMA_MARKER), os.path.join(path, SCHEMA_MARKER))
+            _rename(os.path.join(root, name), os.path.join(out, name))
+    _rename(os.path.join(stage, SCHEMA_MARKER), os.path.join(path, SCHEMA_MARKER))
 
 
 def _stage_audit_publish(
@@ -241,15 +333,6 @@ def _stage_audit_publish(
     resolves, to 0 on an empty batch. So no caller observation may sit
     below the append's anti-join: express a per-row invariant as an
     `audit` rule instead."""
-    # Reap stage dirs stranded by a previous crashed run (the finally
-    # below can't run under SIGKILL). Single-writer model (module
-    # docstring): any pre-existing stage is dead by definition.
-    parent, base = os.path.split(path.rstrip("/"))
-    parent = parent or "."
-    if os.path.isdir(parent):
-        for n in os.listdir(parent):
-            if n.startswith(f"{base}.stage-"):
-                shutil.rmtree(os.path.join(parent, n), ignore_errors=True)
     observed, resolve = observe_rules(df, audit)
     stage = f"{path}.stage-{uuid.uuid4().hex[:8]}"
     try:
@@ -329,7 +412,8 @@ def idempotent_append(
     history. CORRECTNESS CONTRACT: the caller must guarantee that any sink
     row NOT satisfying `fence` cannot share `key` with any batch row; the
     watermark contract above is the canonical instance."""
-    if _exists(path):
+    recover(path)
+    if os.path.exists(path):
         existing = read_state(new.sparkSession, path)
         if fence is not None:
             existing = existing.filter(fence)
@@ -351,6 +435,7 @@ def staged_append(df: DataFrame, path: str) -> int:
     publishes NOTHING (the stage is dropped — no empty part-file
     accumulation on replays), and the staged files are renamed in, so a
     reader never sees a half-written file. Returns the appended count."""
+    recover(path)
     return _stage_audit_publish(df, path)
 
 
@@ -360,12 +445,13 @@ def snapshot_overwrite(
     """R9 keep-latest snapshot: old ∪ new → row_number()==1 per key by
     `order_cols` desc → atomic rewrite."""
     spark = new.sparkSession
+    recover(path)  # before the read: a swap window leaves `path` absent
     # __src breaks order_cols ties in favor of the INCOMING row: a replay
     # with the same explicit run_ts over changed data must
     # deterministically keep the regenerated stats, not an arbitrary
     # survivor of an exact orderBy tie.
     tagged_new = new.withColumn("__src", F.lit(1))
-    if _exists(path):
+    if os.path.exists(path):
         old = read_state(spark, path).withColumn("__src", F.lit(0))
         merged = old.unionByName(tagged_new, allowMissingColumns=True)
     else:

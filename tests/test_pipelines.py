@@ -736,8 +736,8 @@ def test_run_batch_heals_crashed_compaction_before_reading_sinks(
 ):
     """ADVICE r11 (high): a crash between compaction's two swap renames
     leaves a sink absent with its only copy under staging/old. If the next
-    run's P1-P8 read (and recreate) the sink BEFORE healing, the
-    end-of-run recover_staging treats staging/old as superseded and
+    run's P1-P8 read (and recreate) the sink BEFORE healing, a later
+    heal (state.recover) treats staging/old as superseded and
     deletes the sink's entire history. run_batch must heal at the START."""
     import datetime as _dt
     import os

@@ -340,21 +340,56 @@ def test_idempotent_append_fence_bounds_existing_scan(spark, tmp_path):
     assert "PushedFilters" in plan and "GreaterThan(ts" in plan
 
 
-def test_compact_recovery_restores_leaf_lost_between_renames(spark, tmp_path):
+@pytest.mark.parametrize("window", ["compact", "overwrite_rename_1", "overwrite_rename_2"])
+def test_compact_recovery_restores_leaf_lost_between_renames(
+    spark, tmp_path, monkeypatch, window
+):
     """Crash window hardening (round 10): a run that died BETWEEN the two
     swap renames leaves the leaf's only copy under staging/old. The next
-    recover_staging (run by compact() itself and by the P9 driver step)
-    must move it back — a blind staging reap here would be data loss."""
+    state.recover (run by compact() itself and by run_batch) must move it
+    back — a blind staging reap here would be data loss. The same swap
+    under atomic_overwrite, killed after its first rename or after its
+    second (before the old copy is dropped), recovers to the old or the
+    new table, never to none."""
     import os
     import shutil
 
+    from metrics_database_cron_script_spark import state
     from metrics_database_cron_script_spark.operators.maintenance import (
         compact,
         parquet_file_count,
-        recover_staging,
     )
     from metrics_database_cron_script_spark.sources import load_table
+    from metrics_database_cron_script_spark.state import recover
     from tests.conftest import SF_SMOKE
+
+    if window != "compact":
+        path = str(tmp_path / "snap.parquet")
+        state.atomic_overwrite(spark.range(0, 5), path)
+
+        class Killed(BaseException):
+            pass
+
+        renames = []
+        real = state._rename
+
+        def dying(src, dst):
+            real(src, dst)
+            renames.append(dst)
+            if len(renames) == int(window[-1]):
+                raise Killed
+
+        with monkeypatch.context() as m:
+            m.setattr(state, "_rename", dying)
+            with pytest.raises(Killed):
+                state.atomic_overwrite(spark.range(10, 13), path)
+        assert os.path.exists(path) == (window == "overwrite_rename_2")
+        recover(path)
+        spark.catalog.refreshByPath(path)
+        want = list(range(0, 5)) if window == "overwrite_rename_1" else [10, 11, 12]
+        assert sorted(r["id"] for r in spark.read.parquet(path).collect()) == want
+        assert os.listdir(tmp_path) == ["snap.parquet"]
+        return
 
     path = str(tmp_path / "sink")
     ev = load_table(spark, SF_SMOKE, "events").limit(30).drop("props")
@@ -369,7 +404,7 @@ def test_compact_recovery_restores_leaf_lost_between_renames(spark, tmp_path):
     os.rename(path, os.path.join(staging, "old", "__root__"))
     assert not os.path.exists(path)
 
-    recover_staging(path)
+    recover(path)
     assert not os.path.exists(staging)
     assert sorted(r["event_id"] for r in spark.read.parquet(path).collect()) == orig
 
@@ -379,7 +414,7 @@ def test_compact_recovery_restores_leaf_lost_between_renames(spark, tmp_path):
     os.makedirs(os.path.join(staging, "old"))
     shutil.copytree(path, os.path.join(staging, "old", "__root__"))
     n_before = parquet_file_count(path)
-    recover_staging(path)
+    recover(path)
     assert not os.path.exists(staging)
     assert parquet_file_count(path) == n_before
     assert sorted(r["event_id"] for r in spark.read.parquet(path).collect()) == orig
@@ -398,10 +433,8 @@ def test_compact_recovery_partitioned_leaf(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from metrics_database_cron_script_spark.operators.maintenance import (
-        recover_staging,
-    )
     from metrics_database_cron_script_spark.sources import load_table
+    from metrics_database_cron_script_spark.state import recover
     from tests.conftest import SF_SMOKE
 
     path = str(tmp_path / "chained")
@@ -419,7 +452,7 @@ def test_compact_recovery_partitioned_leaf(spark, tmp_path):
     os.rename(
         os.path.join(path, "chain=dot"), os.path.join(staging, "old", "chain=dot")
     )
-    recover_staging(path)
+    recover(path)
     assert not os.path.exists(staging)
     spark.catalog.refreshByPath(path)
     assert sorted(r["event_id"] for r in spark.read.parquet(path).collect()) == orig
@@ -667,26 +700,24 @@ def test_compact_refuses_partition_value_collision(spark, tmp_path):
 
 
 def test_recover_staging_reports_restored_leaves(spark, tmp_path):
-    """recover_staging returns the restored leaf paths so callers can
+    """state.recover returns the restored leaf paths so callers can
     refresh Spark's cached FileIndex (ADVICE r11, low): a restore changes
     the listing without a Spark write, and skipping the refresh leaves a
     stale index that can throw FILE_NOT_EXIST on the next read."""
     import os
 
-    from metrics_database_cron_script_spark.operators.maintenance import (
-        recover_staging,
-    )
+    from metrics_database_cron_script_spark.state import recover
 
     path = str(tmp_path / "sink")
     spark.range(0, 10).write.parquet(path)
 
     # nothing to heal → empty
-    assert recover_staging(path) == []
+    assert recover(path) == []
 
     staging = path + ".__compact-deadbeef"
     os.makedirs(os.path.join(staging, "old"))
     os.rename(path, os.path.join(staging, "old", "__root__"))
-    assert recover_staging(path) == [path]
+    assert recover(path) == [path]
     assert spark.read.parquet(path).count() == 10
 
     # superseded copy (target exists again) → discarded, nothing restored
@@ -694,4 +725,4 @@ def test_recover_staging_reports_restored_leaves(spark, tmp_path):
 
     os.makedirs(os.path.join(staging, "old"))
     shutil.copytree(path, os.path.join(staging, "old", "__root__"))
-    assert recover_staging(path) == []
+    assert recover(path) == []

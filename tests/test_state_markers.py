@@ -16,39 +16,6 @@ from tests.conftest import SF_SMOKE, spark_job_ids
 SCALARS = {"watermark": "lastUpdated", "phash_frontier": "frontier", "ivf_frontier": "frontier"}
 
 
-@pytest.fixture(scope="module")
-def days(spark, tmp_path_factory):
-    """A bootstrap and a next day at fixture scale. Day 0 holds the events
-    up to a cut and the first ~70 % of documents and embeddings; day 1 is
-    the whole fixture. Returns (day0 source dir, state after day 0, state
-    after day 1); both state dirs are read-only for the tests."""
-    from pyspark.sql import functions as F
-
-    from metrics_database_cron_script_spark.pipelines import run_batch
-    from metrics_database_cron_script_spark.sources import load_table
-
-    root = tmp_path_factory.mktemp("markers")
-    day0 = str(root / "day0")
-    events = load_table(spark, SF_SMOKE, "events")
-    events.filter(F.col("ts") <= F.lit(datetime.datetime(2024, 1, 15))).write.parquet(
-        f"{day0}/events.parquet"
-    )
-    for table, key in (("documents", "doc_id"), ("embeddings", "vec_id")):
-        df = load_table(spark, SF_SMOKE, table)
-        cut = df.agg(F.expr(f"percentile({key}, 0.7)")).collect()[0][0]
-        df.filter(F.col(key) <= F.lit(int(cut))).write.parquet(f"{day0}/{table}.parquet")
-
-    state = str(root / "state")
-    run_batch(spark, day0, state)
-    boot = str(root / "boot")
-    shutil.copytree(state, boot)
-    r = run_batch(spark, SF_SMOKE, state)
-    assert r["tx_appended"] > 0
-    assert r["image_dedup"]["batch_docs"] > 0
-    assert r["embed_index"]["batch_vectors"] > 0
-    return day0, boot, state
-
-
 def _tables(state: str) -> list[str]:
     return sorted(n[: -len(".parquet")] for n in os.listdir(state) if n.endswith(".parquet"))
 
