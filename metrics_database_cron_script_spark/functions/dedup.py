@@ -3,7 +3,9 @@
 The reference's only dedup is the `_id` anti-join (R14); a training-data
 pipeline needs content dedup at corpus scale. Every operator here is a
 composition of built-in DataFrame ops — hashing via `xxhash64` (JVM,
-codegen'd), candidate generation via equi-joins on LSH buckets so the
+codegen'd) or, in the DuckDB-checkable portable family, an md5 prefix
+(`_Family`: each near-dup operator has one body over its hash family),
+candidate generation via equi-joins on LSH buckets so the
 expensive pairwise verification only touches candidate pairs, never the
 full O(n²) cross product. That bucket-join shape is what survives 100 TB:
 shuffle keys are (band, signature) / (chunk, value), both well-distributed
@@ -12,6 +14,7 @@ by construction.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Window
@@ -105,6 +108,99 @@ MINHASH_DEFAULTS = choose_minhash_params()
 _BAND = ["band", "band_sig"]  # the text modality's LSH bucket key
 
 
+# ------------------------------------------------------------ hash families
+
+
+def portable_hash16(col) -> F.Column:
+    """16-hex-char (64-bit) md5-prefix hash, identical in Spark and DuckDB."""
+    return F.substring(F.md5(col), 1, 16)
+
+
+def _hex_digit_value(hex_col: F.Column, pos: int) -> F.Column:
+    """Value 0..15 of the 1-based `pos`-th hex digit — `conv` on the Spark
+    side, `strpos('0123…f', …) - 1` on the DuckDB side; same result."""
+    return F.conv(F.substring(hex_col, pos, 1), 16, 10).cast("int")
+
+
+class _Family(NamedTuple):
+    """What the two near-dup hash families differ in; every MinHash,
+    SimHash and char-gram operator below has one body taking a family.
+
+    `_FAST` is the production path: xxhash64 everywhere, 8-byte shuffle
+    keys, ~2× cheaper to compute. `_PORTABLE` hashes with a prefix of md5's
+    lowercase hex encoding, which Spark (`F.md5`) and DuckDB (`md5`)
+    compute identically — so MinHash minima, LSH band signatures, SimHash
+    bit votes and the char-gram sample are bit-for-bit reproducible in ANSI
+    SQL and the full pipelines get a real value-hash oracle instead of a
+    rows-only check. Ordering note: min() over fixed-length lowercase-hex
+    strings is the same ordering as min() over the underlying 64-bit
+    values, so string minhashes are real minhashes.
+
+    `seed_hash(i)` returns seed i's one-argument hash of a shingle column.
+    It is a factory, not a defaulted `lambda s, i=i`: F.transform (the
+    streaming signature, `streaming/neardup.band_rows`) inspects a lambda's
+    parameter count and would treat the defaulted form as the binary
+    (element, index) lambda, silently replacing the seed with the index."""
+
+    name: str
+    shingle_t: str  # word_shingles' dtype: bigint (hashed) or string (raw)
+    seed_hash: Callable[[int], Callable[[F.Column], F.Column]]
+    prefix: str  # signature columns are <prefix>0 .. <prefix>{n-1}
+    combine: Callable[..., F.Column]  # a band's minhashes → its band_sig
+    store: Callable[[DataFrame], DataFrame]  # shingles → 8-byte store
+    token_hash: Callable[[F.Column], F.Column]  # SimHash per-token hash
+    simhash_bits: int
+    bit: Callable[[F.Column, int], F.Column]  # bit i (0/1) of a token hash
+    gram_key: Callable[[F.Column], F.Column]  # char gram → join key
+    keep: Callable[[F.Column, int], F.Column]  # mod-p sample of a gram key
+    sample_mods: tuple | None  # the moduli `keep` samples exactly
+
+    @property
+    def hashed(self) -> bool:
+        return self.shingle_t == "bigint"
+
+
+_FAST = _Family(
+    name="fast-path",
+    shingle_t="bigint",
+    seed_hash=lambda i: lambda s: F.xxhash64(s, F.lit(i)),
+    prefix="minhash_",
+    combine=F.xxhash64,
+    store=lambda shingles: shingles,
+    token_hash=F.xxhash64,
+    simhash_bits=64,
+    bit=lambda h, i: F.shiftright(h, i).bitwiseAND(F.lit(1)),
+    gram_key=F.xxhash64,
+    keep=lambda g, mod: F.pmod(g, F.lit(mod)) == 0,
+    sample_mods=None,
+)
+_PORTABLE = _Family(
+    name="portable",
+    shingle_t="string",
+    seed_hash=lambda i: lambda s: portable_hash16(
+        F.concat_ws("|", F.lit(str(i)), s)
+    ),
+    prefix="mh_",
+    combine=lambda *mh: F.concat_ws("", *mh),
+    # verification joins the raw shingles' 8-byte xxhash64 image
+    store=lambda shingles: shingles.select(
+        "doc_id", F.xxhash64("shingle").alias("shingle")
+    ),
+    token_hash=F.md5,
+    # bit i of a token's hash is bit (i mod 4) of hex digit (i div 4)
+    simhash_bits=32,
+    bit=lambda hx, i: F.shiftright(
+        _hex_digit_value(hx, i // 4 + 1), i % 4
+    ).bitwiseAND(F.lit(1)),
+    # grams stay raw strings (equality joins only); keep a gram iff
+    # md5(gram)'s last hex digit ≡ 0 (mod p): a DIGIT (0..15), so only
+    # divisors of 16 give the advertised 1/p keep rate
+    gram_key=lambda g: g,
+    keep=lambda g, mod: _hex_digit_value(F.md5(g), 32) % mod == 0,
+    sample_mods=(1, 2, 4, 8, 16),
+)
+
+
 def normalized_text() -> F.Column:
     """Canonical text form for exact dedup: lower, trim, collapse whitespace."""
     return F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
@@ -173,13 +269,31 @@ def quarantine_empty_shingle_docs(docs: DataFrame):
     )
 
 
+def _signatures(
+    fam: _Family, shingles: DataFrame, num_hashes: int | None, with_size: bool
+) -> DataFrame:
+    """doc_id → <prefix>0..<prefix>{n-1} in ONE aggregation pass: each
+    seed's minhash is a separate `min(seed_hash(i)(shingle))` aggregate, so
+    the shingle relation is scanned once and shuffled once — no seed
+    fan-out (a naive seeds×shingles join multiplies the shuffle by
+    num_hashes). `with_size=True` adds `sz`, the doc's distinct-shingle
+    count, as one more aggregate of the SAME pass."""
+    if num_hashes is None:
+        num_hashes = MINHASH_DEFAULTS.num_hashes
+    aggs = [
+        F.min(fam.seed_hash(i)(F.col("shingle"))).alias(f"{fam.prefix}{i}")
+        for i in range(num_hashes)
+    ]
+    if with_size:
+        aggs.append(F.count(F.lit(1)).alias("sz"))
+    return shingles.groupBy("doc_id").agg(*aggs)
+
+
 def minhash_signatures(
     shingles: DataFrame, num_hashes: int = 16, with_size: bool = False
 ) -> DataFrame:
-    """doc_id → minhash_0..minhash_{n-1} in ONE aggregation pass: each seed's
-    minhash is a separate `min(xxhash64(shingle, seed))` aggregate, so the
-    shingle relation is scanned once and shuffled once — no seed fan-out
-    (a naive seeds×shingles join multiplies the shuffle by num_hashes).
+    """doc_id → minhash_0..minhash_{n-1}, each `min(xxhash64(shingle,
+    seed))` over hashed shingles, in one aggregation pass.
 
     `with_size=True` adds `sz` = the doc's distinct-shingle count as one
     more aggregate of the SAME pass — the |A| term of Jaccard. Computing it
@@ -187,13 +301,87 @@ def minhash_signatures(
     verifier skip the per-doc size relation (one aggregation + one
     broadcast build fewer — round-6 job-floor shave): the size rides the
     banding rows into the candidate pairs."""
-    aggs = [
-        F.min(F.xxhash64("shingle", F.lit(i))).alias(f"minhash_{i}")
-        for i in range(num_hashes)
+    return _signatures(_FAST, shingles, num_hashes, with_size)
+
+
+def minhash_signatures_portable(
+    shingles: DataFrame, num_hashes: int | None = None, with_size: bool = False
+) -> DataFrame:
+    """doc_id → mh_0..mh_{n-1} over raw string shingles: seed i's hash of a
+    shingle is md5('<i>|' || shingle)[:16]; the per-seed minimum over hex
+    strings equals the numeric minimum (fixed-length lowercase hex).
+    `with_size` as in `minhash_signatures`."""
+    return _signatures(_PORTABLE, shingles, num_hashes, with_size)
+
+
+def _explode_bands(
+    sigs: DataFrame,
+    fam: _Family,
+    num_hashes: int | None,
+    band_size: int | None,
+    carry: tuple = (),
+) -> DataFrame:
+    """The banding step of both families: split the `<prefix><i>`
+    signature columns into num_hashes/band_size bands and explode one
+    (doc_id, *carry, band, band_sig) row per band, band_sig being the
+    family's `combine` over the band's columns — computed in one
+    projection, then exploded (bands × docs rows, not hashes × docs)."""
+    if num_hashes is None:
+        num_hashes = MINHASH_DEFAULTS.num_hashes
+    if band_size is None:
+        band_size = MINHASH_DEFAULTS.band_size
+    if num_hashes % band_size:
+        raise ValueError(
+            f"num_hashes={num_hashes} not divisible by band_size={band_size}:"
+            " trailing minhashes would be computed but never banded, and"
+            " recall would silently undershoot the (b, r) tuning formula"
+        )
+    band_structs = [
+        F.struct(
+            F.lit(b).alias("band"),
+            fam.combine(
+                *[F.col(f"{fam.prefix}{b * band_size + j}") for j in range(band_size)]
+            ).alias("band_sig"),
+        )
+        for b in range(num_hashes // band_size)
     ]
-    if with_size:
-        aggs.append(F.count(F.lit(1)).alias("sz"))
-    return shingles.groupBy("doc_id").agg(*aggs)
+    return sigs.select(
+        "doc_id", *carry, F.explode(F.array(*band_structs)).alias("bs")
+    ).select("doc_id", *carry, "bs.band", "bs.band_sig")
+
+
+def _bands(
+    fam: _Family,
+    shingles: DataFrame,
+    num_hashes: int | None,
+    band_size: int | None,
+    with_size: bool = False,
+) -> DataFrame:
+    """Shingles → (doc_id, [sz,] band, band_sig) band rows in `fam`."""
+    carry = ("sz",) if with_size else ()
+    sigs = _signatures(fam, shingles, num_hashes, with_size)
+    return _explode_bands(sigs, fam, num_hashes, band_size, carry)
+
+
+def _band_pairs(banded: DataFrame, carry: tuple) -> DataFrame:
+    """The band self-join: docs sharing a (band, band_sig) bucket are
+    candidates, as distinct (doc_a < doc_b) pairs. Each `carry` column `c`
+    lands on the pair as `{c}_a` / `{c}_b`."""
+
+    def side(s: str) -> DataFrame:
+        return banded.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+            *_BAND,
+        )
+
+    return (
+        side("a")
+        .join(side("b"), _BAND)
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b", *[f"{c}_{s}" for s in "ab" for c in carry])
+        .distinct()
+    )
 
 
 def lsh_candidate_pairs(
@@ -202,52 +390,17 @@ def lsh_candidate_pairs(
     num_hashes: int = 16,
     carry: tuple = (),
 ) -> DataFrame:
-    """Band the signature (LSH): docs sharing all minhashes of any band are
-    candidates. Band signature = hash of the band's minhashes (computed in
-    the same projection, then exploded — bands × docs rows, not hashes ×
-    docs); the self-join key (band, band_sig) is the scale-out pivot.
+    """Band the `minhash_signatures` output (LSH): docs sharing all
+    minhashes of any band are candidates. Band signature = xxhash64 of the
+    band's minhashes; the self-join key (band, band_sig) is the scale-out
+    pivot.
 
     `carry` names signature columns to thread through the self-join: each
     column `c` lands on the pair as `{c}_a` / `{c}_b`. Used to ride the
     per-doc shingle count into Jaccard verification so no separate size
     relation (extra aggregation + broadcast build) is ever constructed."""
-    if num_hashes % band_size:
-        raise ValueError(
-            f"num_hashes={num_hashes} not divisible by band_size={band_size}:"
-            " trailing minhashes would be computed but never banded"
-        )
-    n_bands = num_hashes // band_size
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                *[F.col(f"minhash_{b * band_size + j}") for j in range(band_size)]
-            ).alias("band_sig"),
-        )
-        for b in range(n_bands)
-    ]
-    banded = signatures.select(
-        "doc_id", *carry, F.explode(F.array(*band_structs)).alias("bs")
-    ).select("doc_id", *carry, "bs.band", "bs.band_sig")
-    a = banded.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(c).alias(f"{c}_a") for c in carry],
-        "band",
-        "band_sig",
-    )
-    b = banded.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(c).alias(f"{c}_b") for c in carry],
-        "band",
-        "band_sig",
-    )
-    carried = [f"{c}_a" for c in carry] + [f"{c}_b" for c in carry]
-    return (
-        a.join(b, ["band", "band_sig"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", *carried)
-        .distinct()
-    )
+    banded = _explode_bands(signatures, _FAST, num_hashes, band_size, carry)
+    return _band_pairs(banded, carry)
 
 
 def verified_jaccard(shingles: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -321,6 +474,28 @@ def verified_jaccard(shingles: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
+def _near_dups(
+    fam: _Family,
+    docs: DataFrame,
+    num_hashes: int | None,
+    band_size: int | None,
+    shingles: DataFrame | None = None,
+    verify: bool = True,
+) -> DataFrame:
+    """shingle → sign → band → candidate pairs → exact-Jaccard
+    verification, in `fam`. Nothing is persisted: the shingle relation's
+    three consumers (signatures + both sides of the verification join)
+    share its shuffle by exchange reuse, and a persist here could never be
+    released — the caller receives a lazy plan."""
+    if shingles is None:
+        shingles = word_shingles(docs, hashed=fam.hashed)
+    banded = _bands(fam, shingles, num_hashes, band_size, with_size=True)
+    pairs = _band_pairs(banded, ("sz",))
+    if not verify:
+        return pairs.select("doc_a", "doc_b")
+    return verified_jaccard(shingles, pairs)
+
+
 def minhash_near_dups(
     docs: DataFrame, num_hashes: int | None = None, band_size: int | None = None
 ) -> DataFrame:
@@ -328,58 +503,74 @@ def minhash_near_dups(
     pairs → exact-Jaccard verification (verification cost ∝ candidates).
     Banding defaults to the S-curve-chosen `MINHASH_DEFAULTS` (round 5:
     the previous hand-picked 16 hashes in 4 bands of 4 had recall 0.88 at
-    Jaccard 0.8 — the tuner reaches 0.98 with HALF the hashes).
-
-    The shingle relation feeds three consumers (signatures + both sides of
-    the verification join), so it is persisted — one explode+distinct
-    shuffle instead of three recomputations. At cluster scale this is
-    StorageLevel.MEMORY_AND_DISK; the verifier unpersists nothing because
-    the plan materializes in one action."""
-    if num_hashes is None:
-        num_hashes = MINHASH_DEFAULTS.num_hashes
-    if band_size is None:
-        band_size = MINHASH_DEFAULTS.band_size
-    shingles = word_shingles(docs).persist()
-    sigs = minhash_signatures(shingles, num_hashes, with_size=True)
-    pairs = lsh_candidate_pairs(sigs, band_size, num_hashes, carry=("sz",))
-    return verified_jaccard(shingles, pairs)
+    Jaccard 0.8 — the tuner reaches 0.98 with HALF the hashes)."""
+    return _near_dups(_FAST, docs, num_hashes, band_size)
 
 
-def simhash(docs: DataFrame) -> DataFrame:
-    """64-bit SimHash per doc: per-token xxhash64, each bit votes ±count,
-    sign of the vote sets the bit. One explode + one groupBy with 64
-    compiled conditional aggregates — single shuffle, no UDF."""
+def minhash_near_dups_portable(
+    docs: DataFrame,
+    num_hashes: int | None = None,
+    band_size: int | None = None,
+    shingles: DataFrame | None = None,
+    verify: bool = True,
+) -> DataFrame:
+    """`minhash_near_dups` on portable hashes over raw word 3-gram strings:
+    every intermediate is reproducible in DuckDB SQL, so the whole
+    pipeline is value-hash-checked, not rows-only.
+
+    `shingles` lets a caller that already built (and persisted) the
+    word-shingle relation share it instead of paying the tokenize/shingle
+    shuffle twice; `verify=False` stops at the raw candidate pairs
+    (doc_a, doc_b) — what banding-quality measurements like
+    x_minhash_recall consume."""
+    return _near_dups(_PORTABLE, docs, num_hashes, band_size, shingles, verify)
+
+
+def _simhash(fam: _Family, docs: DataFrame, bits: int) -> DataFrame:
+    """`bits`-wide SimHash per doc: each token's hash votes ±count on every
+    bit, the sign of the vote sets the bit. One explode + one groupBy with
+    `bits` compiled conditional aggregates — single shuffle, no UDF."""
     tok_counts = (
         fan_out(docs).select("doc_id", F.explode(tokens_col()).alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("w"))
-        .withColumn("h", F.xxhash64("token"))
+        .withColumn("h", fam.token_hash("token"))
     )
     votes = [
         F.sum(
-            F.when(F.shiftright("h", i).bitwiseAND(F.lit(1)) == 1, F.col("w")).otherwise(
-                -F.col("w")
-            )
+            F.when(fam.bit(F.col("h"), i) == 1, F.col("w")).otherwise(-F.col("w"))
         ).alias(f"v{i}")
-        for i in range(64)
+        for i in range(bits)
     ]
     voted = tok_counts.groupBy("doc_id").agg(*votes)
-    bits = [
+    terms = [
         F.when(F.col(f"v{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
             F.lit(0).cast("long")
         )
-        for i in range(64)
+        for i in range(bits)
     ]
-    out = voted.select("doc_id", sum(bits[1:], bits[0]).alias("simhash"))
-    return out
+    return voted.select("doc_id", sum(terms[1:], terms[0]).alias("simhash"))
 
 
-def simhash_near_dups(docs: DataFrame, max_hamming: int = 16) -> DataFrame:
-    """Hamming-LSH over SimHash: split the 64-bit hash into 4 16-bit chunks;
-    any pair within hamming ≤ 16 of each other that shares a chunk is found
-    (pigeonhole guarantees recall for hamming ≤ 3 with 4 chunks; wider
-    distances are best-effort). Verification = bit_count(xor)."""
-    sh = simhash(docs)
+def simhash(docs: DataFrame) -> DataFrame:
+    """64-bit SimHash per doc over per-token xxhash64."""
+    return _simhash(_FAST, docs, _FAST.simhash_bits)
+
+
+def simhash_portable(docs: DataFrame, bits: int = 32) -> DataFrame:
+    """32-bit SimHash on md5 bits: bit i of a token's hash is bit (i mod 4)
+    of the value of hex digit (i div 4) of md5(token) — a fixed mapping both
+    engines can compute."""
+    return _simhash(_PORTABLE, docs, bits)
+
+
+def _simhash_near_dups(fam: _Family, docs: DataFrame, max_hamming: int) -> DataFrame:
+    """Hamming-LSH over `fam`'s SimHash: split the hash into 4 chunks; any
+    pair that shares a chunk is a candidate (pigeonhole guarantees recall
+    for hamming ≤ 3 with 4 chunks; wider distances are best-effort).
+    Verification = bit_count(xor), the operator DuckDB also exposes."""
+    width = fam.simhash_bits // 4
+    sh = _simhash(fam, docs, fam.simhash_bits)
     chunks = sh.select(
         "doc_id",
         "simhash",
@@ -388,8 +579,8 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 16) -> DataFrame:
                 *[
                     F.struct(
                         F.lit(j).alias("chunk_id"),
-                        F.shiftright("simhash", j * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
+                        F.shiftright("simhash", j * width)
+                        .bitwiseAND(F.lit((1 << width) - 1))
                         .alias("chunk"),
                     )
                     for j in range(4)
@@ -416,32 +607,35 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 16) -> DataFrame:
     ).filter(F.col("hamming") <= max_hamming)
 
 
-def char_ngram_jaccard(
-    docs: DataFrame,
-    n: int = 6,
-    min_jaccard: float = 0.5,
-    max_df: int = 32,
-    sample_mod: int = 8,
-) -> DataFrame:
-    """Char n-gram Jaccard over DISCRIMINATIVE grams: grams with document
-    frequency > max_df inside the `source` block are excluded from numerator
-    and denominator symmetrically — they occur in ~every doc of the block,
-    so they carry no near-dup signal, only O(|block|²) join cost (the
-    inverted-index stop-gram rule; measured 33 s → ~10 s at sf0.1 on
-    shared-vocabulary text). The Jaccard is computed in ONE pass by
-    aggregating the rare-gram posting-list self-join; all join keys are
-    64-bit gram hashes, never strings.
+def simhash_near_dups(docs: DataFrame, max_hamming: int = 16) -> DataFrame:
+    """Hamming-LSH over the 64-bit SimHash: 4 chunks of 16 bits."""
+    return _simhash_near_dups(_FAST, docs, max_hamming)
 
-    `sample_mod` applies Broder's mod-p shingle sampling (keep grams with
-    hash ≡ 0 mod p) immediately after hashing: both docs of any pair keep
-    the SAME gram subset, so the sampled-set Jaccard is an unbiased
-    estimate of the true Jaccard, while every downstream shuffle shrinks
-    ×p and the posting self-join ×p² (measured 2.5 s → 1.1 s at sf0.1
-    with identical output pairs; at 100 TB this is the difference between
-    a feasible and an infeasible join). `sample_mod=1` disables sampling
-    (exact)."""
-    # grams are 64-bit hashes from the start: every downstream shuffle/join
-    # moves (long, long) keys, never strings
+
+def simhash_near_dups_portable(docs: DataFrame, max_hamming: int = 8) -> DataFrame:
+    """Hamming-LSH over the portable 32-bit SimHash: 4 chunks of 8 bits."""
+    return _simhash_near_dups(_PORTABLE, docs, max_hamming)
+
+
+def _char_ngram_jaccard(
+    fam: _Family,
+    docs: DataFrame,
+    n: int,
+    min_jaccard: float,
+    max_df: int,
+    sample_mod: int,
+) -> DataFrame:
+    """Char n-gram Jaccard over discriminative, mod-p-sampled grams in
+    `fam` (see `char_ngram_jaccard`). Nothing is persisted: `grams` and
+    `rare` each feed several consumers, which share their shuffles by
+    exchange reuse; a persist could never be released from a lazy plan."""
+    if fam.sample_mods is not None and sample_mod not in fam.sample_mods:
+        raise ValueError(
+            f"sample_mod={sample_mod}: the {fam.name} sampling rule keeps"
+            f" exactly 1/sample_mod of the grams only for {fam.sample_mods}"
+            " (on md5's last hex digit, 5 would keep 4/16 and 32 would"
+            " silently behave as 16)"
+        )
     exploded = fan_out(docs).select(
         "doc_id",
         "source",
@@ -452,16 +646,16 @@ def char_ngram_jaccard(
             )
         ).alias("gram"),
     )
-    hashed = exploded.select("doc_id", "source", F.xxhash64("gram").alias("gram_h"))
+    keyed = exploded.select("doc_id", "source", fam.gram_key(F.col("gram")).alias("gram"))
     if sample_mod > 1:
-        hashed = hashed.filter(F.pmod("gram_h", F.lit(sample_mod)) == 0)
-    grams = hashed.distinct().persist()
-    df = grams.groupBy("source", "gram_h").agg(F.count(F.lit(1)).alias("df"))
-    rare = grams.join(df.filter(F.col("df") <= max_df), ["source", "gram_h"]).persist()
-    ra = rare.select(F.col("doc_id").alias("doc_a"), "source", "gram_h")
-    rb = rare.select(F.col("doc_id").alias("doc_b"), "source", "gram_h")
+        keyed = keyed.filter(fam.keep(F.col("gram"), sample_mod))
+    grams = keyed.distinct()
+    df = grams.groupBy("source", "gram").agg(F.count(F.lit(1)).alias("df"))
+    rare = grams.join(df.filter(F.col("df") <= max_df), ["source", "gram"])
+    ra = rare.select(F.col("doc_id").alias("doc_a"), "source", "gram")
+    rb = rare.select(F.col("doc_id").alias("doc_b"), "source", "gram")
     inter = (
-        ra.join(rb, ["source", "gram_h"])
+        ra.join(rb, ["source", "gram"])
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("inter"))
@@ -486,17 +680,59 @@ def char_ngram_jaccard(
     )
 
 
-def _gate_exact_neardup(
+def char_ngram_jaccard(
     docs: DataFrame,
-    pairs_fn,
+    n: int = 6,
+    min_jaccard: float = 0.5,
+    max_df: int = 32,
+    sample_mod: int = 8,
+) -> DataFrame:
+    """Char n-gram Jaccard over DISCRIMINATIVE grams: grams with document
+    frequency > max_df inside the `source` block are excluded from numerator
+    and denominator symmetrically — they occur in ~every doc of the block,
+    so they carry no near-dup signal, only O(|block|²) join cost (the
+    inverted-index stop-gram rule; measured 33 s → ~10 s at sf0.1 on
+    shared-vocabulary text). The Jaccard is computed in ONE pass by
+    aggregating the rare-gram posting-list self-join; all join keys are
+    64-bit gram hashes, never strings.
+
+    `sample_mod` applies Broder's mod-p shingle sampling (keep grams with
+    hash ≡ 0 mod p) immediately after hashing: both docs of any pair keep
+    the SAME gram subset, so the sampled-set Jaccard is an unbiased
+    estimate of the true Jaccard, while every downstream shuffle shrinks
+    ×p and the posting self-join ×p² (measured 2.5 s → 1.1 s at sf0.1
+    with identical output pairs; at 100 TB this is the difference between
+    a feasible and an infeasible join). `sample_mod=1` disables sampling
+    (exact)."""
+    return _char_ngram_jaccard(_FAST, docs, n, min_jaccard, max_df, sample_mod)
+
+
+def char_ngram_jaccard_portable(
+    docs: DataFrame,
+    n: int = 6,
+    min_jaccard: float = 0.5,
+    max_df: int = 32,
+    sample_mod: int = 8,
+) -> DataFrame:
+    """`char_ngram_jaccard` with Broder mod-p sampling driven by a portable
+    rule — keep a gram iff the value of md5(gram)'s last hex digit ≡ 0
+    (mod `sample_mod`) — so the sampled gram subset, and therefore the
+    estimated Jaccard, is reproducible in DuckDB. Grams stay raw strings
+    (equality joins only); the df > max_df stop-gram rule is unchanged.
+    `sample_mod` must divide 16."""
+    return _char_ngram_jaccard(_PORTABLE, docs, n, min_jaccard, max_df, sample_mod)
+
+
+def _dedup_pipeline(
+    fam: _Family,
+    docs: DataFrame,
     min_words: int,
     min_alpha_ratio: float,
     max_jaccard: float,
 ) -> DataFrame:
-    """Shared pipeline core (quality gate → exact dedup → near-dup loser
-    drop) parameterized on the pair generator, so the production and
-    portable pipelines cannot drift on gate thresholds or survivor
-    policy."""
+    """Quality gate → exact dedup → near-dup loser drop, the near-dup
+    stage in `fam`: one body, so the families cannot drift on gate
+    thresholds or survivor policy."""
     quality_ok = docs.filter(
         (F.size(tokens_col()) >= min_words)
         & (
@@ -505,7 +741,9 @@ def _gate_exact_neardup(
         )
     )
     exact = exact_dedup(quality_ok)
-    near_pairs = pairs_fn(exact).filter(F.col("jaccard") >= max_jaccard)
+    near_pairs = _near_dups(fam, exact, None, None).filter(
+        F.col("jaccard") >= max_jaccard
+    )
     losers = near_pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     return exact.join(losers, "doc_id", "left_anti")
 
@@ -527,9 +765,18 @@ def dedup_pipeline(
     hash-bucket equi-joins, so the composition inherits the scale posture of
     its parts.
     """
-    return _gate_exact_neardup(
-        docs, minhash_near_dups, min_words, min_alpha_ratio, max_jaccard
-    )
+    return _dedup_pipeline(_FAST, docs, min_words, min_alpha_ratio, max_jaccard)
+
+
+def dedup_pipeline_portable(
+    docs: DataFrame,
+    min_words: int = 10,
+    min_alpha_ratio: float = 0.5,
+    max_jaccard: float = 0.85,
+) -> DataFrame:
+    """`dedup_pipeline` with the near-dup stage on the portable MinHash
+    pipeline, making the full composed survivor set SQL-checkable."""
+    return _dedup_pipeline(_PORTABLE, docs, min_words, min_alpha_ratio, max_jaccard)
 
 
 def _loop_scratch(sess) -> tuple:
@@ -860,15 +1107,29 @@ def connected_components(
     )
 
 
-def dedup_clusters(docs: DataFrame, min_jaccard: float = 0.5) -> DataFrame:
-    """Cluster-level near-dup dedup: MinHash pairs above `min_jaccard` →
-    connected components → one surviving representative (min doc_id) per
-    cluster. Returns (doc_id, component, is_representative)."""
-    pairs = minhash_near_dups(docs).filter(F.col("jaccard") >= min_jaccard)
+def _dedup_clusters(fam: _Family, docs: DataFrame, min_jaccard: float) -> DataFrame:
+    """MinHash pairs in `fam` above `min_jaccard` → connected components →
+    one representative (min doc_id) per cluster."""
+    pairs = _near_dups(fam, docs, None, None).filter(F.col("jaccard") >= min_jaccard)
     comps = connected_components(pairs)
     return comps.withColumn(
         "is_representative", F.col("doc_id") == F.col("component")
     )
+
+
+def dedup_clusters(docs: DataFrame, min_jaccard: float = 0.5) -> DataFrame:
+    """Cluster-level near-dup dedup: MinHash pairs above `min_jaccard` →
+    connected components → one surviving representative (min doc_id) per
+    cluster. Returns (doc_id, component, is_representative)."""
+    return _dedup_clusters(_FAST, docs, min_jaccard)
+
+
+def dedup_clusters_portable(docs: DataFrame, min_jaccard: float = 0.5) -> DataFrame:
+    """`dedup_clusters` on the portable MinHash pipeline. Every stage —
+    including the LSH banding — is reproducible in DuckDB (pairs via the
+    portable md5 minhash, components via a recursive CTE), so the cluster
+    assignment is value-hash-checked end to end."""
+    return _dedup_clusters(_PORTABLE, docs, min_jaccard)
 
 
 def fuzzy_pairs_edit1(df: DataFrame, key: str, text: str) -> DataFrame:
@@ -984,7 +1245,7 @@ def minhash_components_star(
     `choose_minhash_params` when precision matters more than cost)."""
     if shingles is None:
         shingles = word_shingles(docs, hashed=False)
-    banded = _minhash_bands(shingles, True, num_hashes, band_size)[0]
+    banded = _minhash_bands(shingles, _PORTABLE, num_hashes, band_size)[0]
     return connected_components(star_edges(banded, _BAND))
 
 
@@ -1006,7 +1267,7 @@ def minhash_components_star_refresh(
     corpus the signature compute is ~90% of the 734 s full-recompute wall
     — this is the path that makes daily cluster maintenance viable."""
     batch_bands = _minhash_bands(
-        word_shingles(batch_docs, hashed=False), True, num_hashes, band_size
+        word_shingles(batch_docs, hashed=False), _PORTABLE, num_hashes, band_size
     )[0]
     all_bands = index_bands.select("doc_id", "band", "band_sig").unionByName(
         batch_bands
@@ -1042,7 +1303,7 @@ def minhash_components_verified(
     if own_persist:
         shingles = word_shingles(docs, hashed=False).persist()
     try:
-        banded = _minhash_bands(shingles, True, num_hashes, band_size)[0]
+        banded = _minhash_bands(shingles, _PORTABLE, num_hashes, band_size)[0]
         edges = star_edges(banded, _BAND)
         scored = verified_jaccard(shingles, edges)
         good = scored.filter(F.col("jaccard") >= min_jaccard).select(
@@ -1144,64 +1405,99 @@ def lsh_bands(
     num_hashes: int | None = None,
     band_size: int | None = None,
 ) -> DataFrame:
-    """Non-portable twin of `lsh_bands_portable` over `minhash_signatures`
-    output (minhash_i long columns): band_sig = xxhash64 of the band's
+    """`minhash_signatures` output (minhash_i long columns) → (doc_id,
+    band, band_sig) LSH index rows, band_sig = xxhash64 of the band's
     minhashes — an 8-BYTE index key instead of the portable path's
     32-hex-char concatenation. This is the production band-index shape:
     at the 12.8 M-doc decade corpus the 51 M-row index shrinks ~3× and
     every banding join shuffles longs. The portable (md5) path stays the
     oracle-checkable pipeline; this one is for scale runs."""
-    return _explode_bands(sigs, "minhash_", F.xxhash64, num_hashes, band_size)
+    return _explode_bands(sigs, _FAST, num_hashes, band_size)
+
+
+def lsh_bands_portable(
+    sigs: DataFrame,
+    num_hashes: int | None = None,
+    band_size: int | None = None,
+    carry: tuple = (),
+) -> DataFrame:
+    """Signature frame → (doc_id, band, band_sig) LSH index rows: the
+    num_hashes/band_size bands of concatenated minhash hex. This IS the
+    persisted structure an incremental corpus keeps — band rows append per
+    batch and never need recomputation for already-indexed docs. `carry`
+    threads extra signature columns (e.g. `sz`) onto the band rows for
+    callers that consume them in-plan; the persisted-index schema stays
+    (doc_id, band, band_sig) when unset."""
+    return _explode_bands(sigs, _PORTABLE, num_hashes, band_size, carry)
+
+
+def minhash_probe_index_portable(
+    corpus_docs: DataFrame,
+    batch_docs: DataFrame,
+    num_hashes: int | None = None,
+    band_size: int | None = None,
+) -> DataFrame:
+    """Incremental near-dup — the production daily shape: probe the
+    corpus's LSH band index with a NEW batch instead of re-running
+    all-pairs LSH over corpus+batch. Candidates are (corpus doc_a, batch
+    doc_b) band collisions; verification (exact Jaccard) touches only
+    candidates' shingles. The corpus side here is built in-plan from the
+    corpus docs for oracle checkability; a real pipeline reads the
+    persisted band rows (`lsh_bands_portable` output) and per-doc shingle
+    sets from state, so each batch costs O(batch + collisions) — the
+    signature/banding work for already-indexed docs is never repeated.
+    Result ≡ the cross-split subset of the full all-pairs pipeline."""
+    corpus_sh = word_shingles(corpus_docs, hashed=False)
+    batch_sh = word_shingles(batch_docs, hashed=False)
+    index = _bands(_PORTABLE, corpus_sh, num_hashes, band_size)
+    probes = _bands(_PORTABLE, batch_sh, num_hashes, band_size)
+    pairs = (
+        index.select(F.col("doc_id").alias("doc_a"), *_BAND)
+        .join(probes.select(F.col("doc_id").alias("doc_b"), *_BAND), _BAND)
+        # a doc on BOTH sides (batch re-processing already-indexed ids)
+        # band-collides with itself — never a near-dup finding
+        .filter(F.col("doc_a") != F.col("doc_b"))
+        .select("doc_a", "doc_b")
+        .distinct()
+    )
+    return verified_jaccard(corpus_sh.unionByName(batch_sh), pairs)
 
 
 def _minhash_bands(
     shingles: DataFrame,
-    portable: bool,
+    fam: _Family,
     num_hashes: int | None = None,
     band_size: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """The hash-mode decision of the verified star path, made once: band
-    `shingles` in one mode's keyspace and return `(bands, store)`, the
-    store being the 8-byte xxhash64 shingle relation verification joins on.
+    """The banding of the verified star path: band `shingles` in `fam`'s
+    keyspace and return `(bands, store)`, the store being the 8-byte
+    xxhash64 shingle relation verification joins on.
 
     - portable: md5-prefix signatures over RAW string shingles, hex
       band_sigs; the store is the shingles' xxhash64 image.
     - fast: `min(xxhash64(shingle, seed))` over pre-hashed bigint
       shingles, 8-byte band_sigs; the store IS the input relation.
 
-    Shingles of the other mode's dtype would band into a keyspace the
+    Shingles of the other family's dtype would band into a keyspace the
     persisted index never collides with — every cross-batch near-dup
     silently missed — so they are rejected here."""
     shingle_t = dict(shingles.dtypes).get("shingle")
-    if portable:
-        if shingle_t != "string":
-            raise ValueError(
-                "portable index (string band_sig) needs RAW batch shingles "
-                f"(word_shingles(hashed=False)); got {shingle_t} — md5 over "
-                "hash values would band into a disjoint keyspace"
-            )
-        bands = lsh_bands_portable(
-            minhash_signatures_portable(shingles, num_hashes),
-            num_hashes,
-            band_size,
-        )
-        return bands, shingles.select(
-            "doc_id", F.xxhash64("shingle").alias("shingle")
-        )
-    if shingle_t != "bigint":
+    if shingle_t != fam.shingle_t:
         raise ValueError(
-            "fast-path index (bigint band_sig) needs hashed batch shingles "
-            f"(word_shingles(hashed=True)); got {shingle_t}"
+            f"{fam.name} index needs {'hashed' if fam.hashed else 'RAW'} batch"
+            f" shingles (word_shingles(hashed={fam.hashed})); got {shingle_t}"
+            " — its seed hash over the other dtype would band into a"
+            " disjoint keyspace"
         )
-    nh = num_hashes if num_hashes is not None else MINHASH_DEFAULTS.num_hashes
-    return lsh_bands(minhash_signatures(shingles, nh), nh, band_size), shingles
+    return _bands(fam, shingles, num_hashes, band_size), fam.store(shingles)
 
 
-def _index_is_portable(index_bands: DataFrame) -> bool:
-    """The hash mode a persisted band index was built in: a hex (string)
+def _index_family(index_bands: DataFrame) -> _Family:
+    """The hash family a persisted band index was built in: a hex (string)
     band_sig means the portable md5 pipeline, an 8-byte (bigint) one the
     xxhash64 fast path."""
-    return dict(index_bands.dtypes).get("band_sig") == "string"
+    string_sigs = dict(index_bands.dtypes).get("band_sig") == "string"
+    return _PORTABLE if string_sigs else _FAST
 
 
 def verified_star_state(
@@ -1247,9 +1543,10 @@ def verified_star_state(
     all three outputs should persist/round-trip the shingle relation first
     (two consumers in portable mode, signature + verification consumers in
     both)."""
+    fam = _PORTABLE if portable else _FAST
     if shingles is None:
-        shingles = word_shingles(docs, hashed=not portable)
-    bands, store = _minhash_bands(shingles, portable, num_hashes, band_size)
+        shingles = word_shingles(docs, hashed=fam.hashed)
+    bands, store = _minhash_bands(shingles, fam, num_hashes, band_size)
     return bands, store, scored_star_edges(bands, store)
 
 
@@ -1414,19 +1711,20 @@ def refresh_verified_star_edges(
     index cannot double edge rows. `_parts` exposes the base+delta write
     contract (see `_refresh_star_edges`).
 
-    The hash MODE is inferred from the persisted index itself, so the
-    batch's signatures are always computed in the keyspace the index
-    lives in and the two modes cannot be silently mixed (ValueError)."""
-    portable = _index_is_portable(index_bands)
+    The hash family is inferred from the persisted index itself
+    (`_index_family`), so the batch's signatures are always computed in
+    the keyspace the index lives in and the two families cannot be
+    silently mixed (ValueError)."""
+    fam = _index_family(index_bands)
     if batch_shingles is None:
-        batch_shingles = word_shingles(batch_docs, hashed=not portable)
+        batch_shingles = word_shingles(batch_docs, hashed=fam.hashed)
     # batch_bands feeds several plan legs and is deliberately NOT
     # materialized: recomputing the batch signature pipeline per leg costs
     # seconds, while a localCheckpoint's accurate tiny stats cascade into
     # downstream joins with surprising strategy flips (decade corpus,
     # round 10: plain 96 s, checkpoint-only 336 s)
     batch_bands, batch_store = _minhash_bands(
-        batch_shingles, portable, num_hashes, band_size
+        batch_shingles, fam, num_hashes, band_size
     )
     # verification joins in the STORE's keyspace (normally the 8-byte
     # xxhash64 image — the decade-scale join shape)
@@ -1491,10 +1789,10 @@ def minhash_components_verified_refresh(
 
     The batch shingle relation feeds two consumers (signatures and the
     verification side), so it is persisted here and released after
-    `connected_components` materializes its loop state eagerly. Hash mode
-    follows the persisted index (see refresh_verified_star_edges)."""
+    `connected_components` materializes its loop state eagerly. The hash
+    family follows the persisted index (see refresh_verified_star_edges)."""
     batch_sh = word_shingles(
-        batch_docs, hashed=not _index_is_portable(index_bands)
+        batch_docs, hashed=_index_family(index_bands).hashed
     ).persist()
     try:
         edges = refresh_verified_star_edges(
@@ -1523,370 +1821,3 @@ def minhash_components_verified_refresh(
         return connected_components(good)
     finally:
         batch_sh.unpersist()
-
-
-# --------------------------------------------------------------------------
-# Portable-hash variants: every hash below is a prefix of md5's lowercase hex
-# encoding, which Spark (`F.md5`) and DuckDB (`md5`) compute identically —
-# so MinHash minima, LSH band signatures, SimHash bit votes and winnowing
-# window-minima are bit-for-bit reproducible in ANSI SQL and the full
-# pipelines get a real value-hash oracle instead of a rows-only check.
-# xxhash64 stays the production fast path (8-byte shuffle keys, ~2× cheaper
-# to compute); the portable path trades that for end-to-end checkability.
-# Ordering note: min() over fixed-length lowercase-hex strings is the same
-# ordering as min() over the underlying 64-bit values.
-# --------------------------------------------------------------------------
-
-_HEX = "0123456789abcdef"
-
-
-def portable_hash16(col) -> F.Column:
-    """16-hex-char (64-bit) md5-prefix hash, identical in Spark and DuckDB."""
-    return F.substring(F.md5(col), 1, 16)
-
-
-def _hex_digit_value(hex_col: F.Column, pos: int) -> F.Column:
-    """Value 0..15 of the 1-based `pos`-th hex digit — `conv` on the Spark
-    side, `strpos('0123…f', …) - 1` on the DuckDB side; same result."""
-    return F.conv(F.substring(hex_col, pos, 1), 16, 10).cast("int")
-
-
-def minhash_signatures_portable(
-    shingles: DataFrame, num_hashes: int | None = None, with_size: bool = False
-) -> DataFrame:
-    """doc_id → 8 portable minhashes in one aggregation pass: seed i's hash
-    of a shingle is md5('<i>|' || shingle)[:16]; the per-seed minimum over
-    hex strings equals the numeric minimum (fixed-length lowercase hex).
-    `with_size=True` adds `sz` (distinct-shingle count) to the same pass —
-    see `minhash_signatures`."""
-    if num_hashes is None:
-        num_hashes = MINHASH_DEFAULTS.num_hashes
-    aggs = [
-        F.min(portable_hash16(F.concat_ws("|", F.lit(str(i)), "shingle"))).alias(
-            f"mh_{i}"
-        )
-        for i in range(num_hashes)
-    ]
-    if with_size:
-        aggs.append(F.count(F.lit(1)).alias("sz"))
-    return shingles.groupBy("doc_id").agg(*aggs)
-
-
-def lsh_bands_portable(
-    sigs: DataFrame,
-    num_hashes: int | None = None,
-    band_size: int | None = None,
-    carry: tuple = (),
-) -> DataFrame:
-    """Signature frame → (doc_id, band, band_sig) LSH index rows: the
-    num_hashes/band_size bands of concatenated minhash hex. This IS the
-    persisted structure an incremental corpus keeps — band rows append per
-    batch and never need recomputation for already-indexed docs. `carry`
-    threads extra signature columns (e.g. `sz`) onto the band rows for
-    callers that consume them in-plan; the persisted-index schema stays
-    (doc_id, band, band_sig) when unset."""
-    return _explode_bands(
-        sigs,
-        "mh_",
-        lambda *mh: F.concat_ws("", *mh),
-        num_hashes,
-        band_size,
-        carry,
-    )
-
-
-def _explode_bands(
-    sigs: DataFrame,
-    prefix: str,
-    combine,
-    num_hashes: int | None,
-    band_size: int | None,
-    carry: tuple = (),
-) -> DataFrame:
-    """The banding step of both hash modes: split the `<prefix><i>`
-    signature columns into num_hashes/band_size bands and explode one
-    (doc_id, *carry, band, band_sig) row per band, band_sig being
-    `combine` over the band's columns."""
-    if num_hashes is None:
-        num_hashes = MINHASH_DEFAULTS.num_hashes
-    if band_size is None:
-        band_size = MINHASH_DEFAULTS.band_size
-    if num_hashes % band_size:
-        raise ValueError(
-            f"num_hashes={num_hashes} not divisible by band_size={band_size}"
-        )
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            combine(
-                *[F.col(f"{prefix}{b * band_size + j}") for j in range(band_size)]
-            ).alias("band_sig"),
-        )
-        for b in range(num_hashes // band_size)
-    ]
-    return sigs.select(
-        "doc_id", *carry, F.explode(F.array(*band_structs)).alias("bs")
-    ).select("doc_id", *carry, "bs.band", "bs.band_sig")
-
-
-def minhash_probe_index_portable(
-    corpus_docs: DataFrame,
-    batch_docs: DataFrame,
-    num_hashes: int | None = None,
-    band_size: int | None = None,
-) -> DataFrame:
-    """Incremental near-dup — the production daily shape: probe the
-    corpus's LSH band index with a NEW batch instead of re-running
-    all-pairs LSH over corpus+batch. Candidates are (corpus doc_a, batch
-    doc_b) band collisions; verification (exact Jaccard) touches only
-    candidates' shingles. The corpus side here is built in-plan from the
-    corpus docs for oracle checkability; a real pipeline reads the
-    persisted band rows (`lsh_bands_portable` output) and per-doc shingle
-    sets from state, so each batch costs O(batch + collisions) — the
-    signature/banding work for already-indexed docs is never repeated.
-    Result ≡ the cross-split subset of the full all-pairs pipeline."""
-    corpus_sh = word_shingles(corpus_docs, hashed=False).persist()
-    batch_sh = word_shingles(batch_docs, hashed=False).persist()
-    index = lsh_bands_portable(
-        minhash_signatures_portable(corpus_sh, num_hashes), num_hashes, band_size
-    )
-    probes = lsh_bands_portable(
-        minhash_signatures_portable(batch_sh, num_hashes), num_hashes, band_size
-    )
-    pairs = (
-        index.select(F.col("doc_id").alias("doc_a"), "band", "band_sig")
-        .join(
-            probes.select(F.col("doc_id").alias("doc_b"), "band", "band_sig"),
-            ["band", "band_sig"],
-        )
-        # a doc on BOTH sides (batch re-processing already-indexed ids)
-        # band-collides with itself — never a near-dup finding
-        .filter(F.col("doc_a") != F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    return verified_jaccard(corpus_sh.unionByName(batch_sh), pairs)
-
-
-def minhash_near_dups_portable(
-    docs: DataFrame,
-    num_hashes: int | None = None,
-    band_size: int | None = None,
-    shingles: DataFrame | None = None,
-    verify: bool = True,
-) -> DataFrame:
-    """MinHash+LSH near-dup pipeline on portable hashes: shingle (raw word
-    3-gram strings) → 8-hash signature → 4 bands of 2 → candidate pairs →
-    exact Jaccard verification. Same shape as `minhash_near_dups` (one
-    shingle shuffle, bucket equi-joins, verification only on candidates) —
-    but every intermediate is reproducible in DuckDB SQL, so the whole
-    pipeline is value-hash-checked, not rows-only.
-
-    `shingles` lets a caller that already built (and persisted) the
-    word-shingle relation share it instead of paying the tokenize/shingle
-    shuffle twice; `verify=False` stops at the raw candidate pairs
-    (doc_a, doc_b) — what banding-quality measurements like
-    x_minhash_recall consume."""
-    if num_hashes is None:
-        num_hashes = MINHASH_DEFAULTS.num_hashes
-    if band_size is None:
-        band_size = MINHASH_DEFAULTS.band_size
-    if shingles is None:
-        shingles = word_shingles(docs, hashed=False).persist()
-    if num_hashes % band_size:
-        raise ValueError(
-            f"num_hashes={num_hashes} not divisible by band_size={band_size}:"
-            " trailing minhashes would be paid for but never banded, and"
-            " recall would silently undershoot the (b, r) tuning formula"
-        )
-    banded = lsh_bands_portable(
-        minhash_signatures_portable(shingles, num_hashes, with_size=True),
-        num_hashes,
-        band_size,
-        carry=("sz",),
-    )
-    a = banded.select(
-        F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"), "band", "band_sig"
-    )
-    b = banded.select(
-        F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"), "band", "band_sig"
-    )
-    pairs = (
-        a.join(b, ["band", "band_sig"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sz_a", "sz_b")
-        .distinct()
-    )
-    if not verify:
-        return pairs.select("doc_a", "doc_b")
-    return verified_jaccard(shingles, pairs)
-
-
-def simhash_portable(docs: DataFrame, bits: int = 32) -> DataFrame:
-    """32-bit SimHash on md5 bits: bit i of a token's hash is bit (i mod 4)
-    of the value of hex digit (i div 4) of md5(token) — a fixed mapping both
-    engines can compute. One explode + one groupBy with 32 conditional
-    aggregates, single shuffle, no UDF (same plan shape as `simhash`)."""
-    tok_counts = (
-        fan_out(docs)
-        .select("doc_id", F.explode(tokens_col()).alias("token"))
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .withColumn("hx", F.md5("token"))
-    )
-    votes = []
-    for i in range(bits):
-        bit = F.shiftright(_hex_digit_value(F.col("hx"), i // 4 + 1), i % 4).bitwiseAND(
-            F.lit(1)
-        )
-        votes.append(
-            F.sum(F.when(bit == 1, F.col("w")).otherwise(-F.col("w"))).alias(f"v{i}")
-        )
-    voted = tok_counts.groupBy("doc_id").agg(*votes)
-    terms = [
-        F.when(F.col(f"v{i}") > 0, F.lit(1 << i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        for i in range(bits)
-    ]
-    return voted.select("doc_id", sum(terms[1:], terms[0]).alias("simhash"))
-
-
-def simhash_near_dups_portable(docs: DataFrame, max_hamming: int = 8) -> DataFrame:
-    """Hamming-LSH over the portable 32-bit SimHash: 4 chunks of 8 bits;
-    pigeonhole guarantees recall for hamming ≤ 3, wider is best-effort.
-    Verification = bit_count(xor) — same operator DuckDB exposes."""
-    sh = simhash_portable(docs)
-    chunks = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("chunk_id"),
-                        F.shiftright("simhash", j * 8)
-                        .bitwiseAND(F.lit(0xFF))
-                        .alias("chunk"),
-                    )
-                    for j in range(4)
-                ]
-            )
-        ).alias("c"),
-    ).select("doc_id", "simhash", "c.chunk_id", "c.chunk")
-    a = chunks.select(
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a"), "chunk_id", "chunk"
-    )
-    b = chunks.select(
-        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sh_b"), "chunk_id", "chunk"
-    )
-    pairs = (
-        a.join(b, ["chunk_id", "chunk"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sh_a", "sh_b")
-        .distinct()
-    )
-    return (
-        pairs.select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-            .cast("long")
-            .alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-def char_ngram_jaccard_portable(
-    docs: DataFrame,
-    n: int = 6,
-    min_jaccard: float = 0.5,
-    max_df: int = 32,
-    sample_mod: int = 8,
-) -> DataFrame:
-    """`char_ngram_jaccard` with Broder mod-p sampling driven by a portable
-    rule — keep a gram iff the value of md5(gram)'s last hex digit ≡ 0
-    (mod `sample_mod`) — so the sampled gram subset, and therefore the
-    estimated Jaccard, is reproducible in DuckDB. Grams stay raw strings
-    (equality joins only); the df > max_df stop-gram rule is unchanged."""
-    if sample_mod not in (1, 2, 4, 8, 16):
-        raise ValueError(
-            f"sample_mod={sample_mod}: the portable rule samples on md5's"
-            " last hex DIGIT (0..15), so only divisors of 16 give the"
-            " advertised 1/sample_mod keep rate (5 would keep 4/16; 32"
-            " would silently behave as 16)"
-        )
-    exploded = fan_out(docs).select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.greatest(F.length("text") - n, F.lit(0))),
-                lambda i: F.col("text").substr(i + 1, F.lit(n)),
-            )
-        ).alias("gram"),
-    )
-    if sample_mod > 1:
-        keep = (_hex_digit_value(F.md5("gram"), 32) % sample_mod) == 0
-        exploded = exploded.filter(keep)
-    grams = exploded.distinct().persist()
-    dfreq = grams.groupBy("source", "gram").agg(F.count(F.lit(1)).alias("df"))
-    # three consumers (ra, rb, sizes) — persist like the hashed variant
-    rare = grams.join(
-        dfreq.filter(F.col("df") <= max_df), ["source", "gram"]
-    ).persist()
-    ra = rare.select(F.col("doc_id").alias("doc_a"), "source", "gram")
-    rb = rare.select(F.col("doc_id").alias("doc_b"), "source", "gram")
-    inter = (
-        ra.join(rb, ["source", "gram"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sizes = rare.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    # same aliased `sizes` plan on both joins: the second broadcast build
-    # is a ReusedExchange (round-5 job-floor shave), not a re-aggregation
-    za, zb = sizes.alias("za"), sizes.alias("zb")
-    return (
-        inter.join(za, F.col("doc_a") == F.col("za.doc_id"))
-        .join(zb, F.col("doc_b") == F.col("zb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("inter")
-                / (F.col("za.sz") + F.col("zb.sz") - F.col("inter")),
-                6,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
-    )
-
-
-def dedup_clusters_portable(docs: DataFrame, min_jaccard: float = 0.5) -> DataFrame:
-    """`dedup_clusters` on the portable MinHash pipeline: candidate pairs,
-    exact Jaccard, threshold, iterative min-label connected components.
-    Every stage — including the LSH banding — is reproducible in DuckDB
-    (pairs via the portable md5 minhash, components via a recursive CTE),
-    so the cluster assignment is value-hash-checked end to end."""
-    pairs = minhash_near_dups_portable(docs).filter(F.col("jaccard") >= min_jaccard)
-    comps = connected_components(pairs)
-    return comps.withColumn(
-        "is_representative", F.col("doc_id") == F.col("component")
-    )
-
-
-def dedup_pipeline_portable(
-    docs: DataFrame,
-    min_words: int = 10,
-    min_alpha_ratio: float = 0.5,
-    max_jaccard: float = 0.85,
-) -> DataFrame:
-    """`dedup_pipeline` (quality gate → exact dedup → near-dup drop) with the
-    near-dup stage on the portable MinHash pipeline, making the full
-    composed survivor set SQL-checkable."""
-    return _gate_exact_neardup(
-        docs, minhash_near_dups_portable, min_words, min_alpha_ratio,
-        max_jaccard,
-    )

@@ -97,9 +97,32 @@ def write_schema_marker(data_dir: str, schema: StructType) -> None:
     hardlink carry-forward safe: untouched files keep their old schema,
     and the explicit-schema read NULL-pads added columns / widens
     promoted types per file instead of letting footer inference pick a
-    random file's schema."""
+    random file's schema.
+
+    Every field is recorded nullable, at every depth: Spark reads a file
+    source as nullable whatever the marker says, and the writer's
+    nullability is a property of the plan that wrote it (a first snapshot
+    can prove a total non-null that an old ∪ new rewrite cannot), so an
+    exact copy would make the marker depend on the table's write
+    history."""
     with open(os.path.join(data_dir, SCHEMA_MARKER), "w") as f:
-        f.write(json.dumps(json.loads(schema.json())))
+        f.write(json.dumps(_all_nullable(json.loads(schema.json()))))
+
+
+_NULLABILITY = ("nullable", "containsNull", "valueContainsNull")
+
+
+def _all_nullable(schema_json):
+    """A schema's JSON form with every nullability flag set true (field
+    metadata is left as written)."""
+    if isinstance(schema_json, list):
+        return [_all_nullable(v) for v in schema_json]
+    if not isinstance(schema_json, dict):
+        return schema_json
+    return {
+        k: True if k in _NULLABILITY else v if k == "metadata" else _all_nullable(v)
+        for k, v in schema_json.items()
+    }
 
 
 def read_schema_marker(data_dir: str) -> StructType | None:

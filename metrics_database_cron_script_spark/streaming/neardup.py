@@ -58,6 +58,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from metrics_database_cron_script_spark.functions.dedup import (
     MINHASH_DEFAULTS,
+    _PORTABLE,
+    _explode_bands,
     verified_jaccard,
     word_shingles,
 )
@@ -89,43 +91,23 @@ def band_rows(docs: DataFrame, num_hashes: int | None = None,
     """(doc_id, band, band_sig) LSH index rows from per-row expressions
     only — works on a STREAMING frame (no agg, no shuffle). Hash family
     and banding match lsh_bands_portable(minhash_signatures_portable(...))
-    bit-for-bit: seed i's hash of shingle s is md5('<i>|' || s)[:16] and a
-    band's signature is its minhashes' hex concatenated."""
+    bit-for-bit: the same portable seed hash, minimized per seed over the
+    doc's shingle array, and the same banding step."""
     if num_hashes is None:
         num_hashes = MINHASH_DEFAULTS.num_hashes
-    if band_size is None:
-        band_size = MINHASH_DEFAULTS.band_size
-    if num_hashes % band_size:
-        raise ValueError(
-            f"num_hashes={num_hashes} not divisible by band_size={band_size}"
-        )
-    def seed_hash(i: int):
-        # factory, not a defaulted lambda: F.transform inspects the lambda's
-        # parameter count and would treat `lambda s, i=i` as the binary
-        # (element, index) form, silently replacing the seed with the index
-        return lambda s: F.substring(
-            F.md5(F.concat_ws("|", F.lit(str(i)), s)), 1, 16
-        )
-
     sh = shingles_array()
+    # seed_hash(i) is a factory: F.transform inspects the lambda's
+    # parameter count and would treat a defaulted `lambda s, i=i` as the
+    # binary (element, index) form, silently replacing the seed with the
+    # index
     mh = [
-        F.array_min(F.transform(sh, seed_hash(i))).alias(f"mh_{i}")
+        F.array_min(F.transform(sh, _PORTABLE.seed_hash(i))).alias(
+            f"{_PORTABLE.prefix}{i}"
+        )
         for i in range(num_hashes)
     ]
     sigs = docs.filter(F.size(sh) > 0).select("doc_id", *mh)
-    n_bands = num_hashes // band_size
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "", *[F.col(f"mh_{b * band_size + j}") for j in range(band_size)]
-            ).alias("band_sig"),
-        )
-        for b in range(n_bands)
-    ]
-    return sigs.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bs")
-    ).select("doc_id", "bs.band", "bs.band_sig")
+    return _explode_bands(sigs, _PORTABLE, num_hashes, band_size)
 
 
 def _bucket_pairs(

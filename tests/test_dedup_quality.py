@@ -629,3 +629,35 @@ def test_ivf_trained_recall_not_below_fixed(spark):
     r_fixed = recall(ivf_assign_fixed(emb, fixed), fixed)
     r_trained = recall(*ivf_fit(emb, n_cells=16, seed=42))
     assert r_trained >= r_fixed, (r_trained, r_fixed)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "minhash_near_dups",
+        "minhash_near_dups_portable",
+        "minhash_probe_index_portable",
+        "char_ngram_jaccard",
+        "char_ngram_jaccard_portable",
+    ],
+)
+def test_near_dup_operator_leaves_no_cached_rdd(spark, name):
+    """These operators return a lazy plan, so a frame they persisted could
+    never be released by anyone: after the result is collected, Spark's
+    storage holds no RDD it did not hold before. The input is a frame no
+    other test caches (a cached equal plan would hide a new persist)."""
+    from metrics_database_cron_script_spark.functions import dedup as D
+    from metrics_database_cron_script_spark.sources import load_table
+
+    def cached() -> set[int]:
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    docs = load_table(spark, SF_SMOKE, "documents").limit(60)
+    before = cached()
+    if name == "minhash_probe_index_portable":
+        odd = F.col("doc_id") % 2 == 1
+        out = D.minhash_probe_index_portable(docs.filter(~odd), docs.filter(odd))
+    else:
+        out = getattr(D, name)(docs)
+    out.collect()
+    assert cached() - before == set()

@@ -71,3 +71,58 @@ def test_mod_sampling_rate_is_unbiased(mod):
     )
     rate = kept / n
     assert abs(rate - 1 / mod) < 0.05
+
+
+# what hashes like one family: an md5, a portable_hash16 call, or a seeded
+# xxhash64(col, seed) — allowed only where the families are defined
+_FAMILY_DEFS = {"_FAST", "_PORTABLE", "portable_hash16", "_hex_digit_value"}
+
+
+def _family_hashes(source: str) -> list[int]:
+    """Lines of `source` that hash like one family outside `_FAMILY_DEFS`."""
+    import ast
+
+    tree = ast.parse(source)
+    allowed = set()
+    for node in tree.body:
+        names = (
+            {t.id for t in node.targets if isinstance(t, ast.Name)}
+            if isinstance(node, ast.Assign)
+            else {node.name} if isinstance(node, ast.FunctionDef) else set()
+        )
+        if names & _FAMILY_DEFS:
+            allowed |= set(range(node.lineno, node.end_lineno + 1))
+    return sorted(
+        node.lineno
+        for node in ast.walk(tree)
+        if (
+            isinstance(node, ast.Attribute) and node.attr == "md5"
+            or isinstance(node, ast.Call) and (
+                isinstance(node.func, ast.Name) and node.func.id == "portable_hash16"
+                or isinstance(node.func, ast.Attribute)
+                and node.func.attr == "xxhash64" and len(node.args) > 1
+            )
+        )
+        and node.lineno not in allowed
+    )
+
+
+def test_only_the_hash_families_choose_a_hash():
+    """The md5-vs-xxhash64 decision of the near-dup operators lives in the
+    `_Family` instances of functions/dedup.py: no operator body there or
+    in the streaming banding hashes like one family itself, so a fix to
+    an operator cannot reach only one family. Starts no Spark."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).parent.parent / "metrics_database_cron_script_spark"
+    found = {
+        mod: lines
+        for mod in ("functions/dedup.py", "streaming/neardup.py")
+        if (lines := _family_hashes((pkg / mod).read_text()))
+    }
+    assert found == {}
+    assert _family_hashes("x = F.md5('t')\n") == [1]
+    assert _family_hashes("def f(s):\n    return F.xxhash64(s, F.lit(3))\n") == [2]
+    assert _family_hashes("x = portable_hash16(c)\n") == [1]
+    assert _family_hashes("x = F.xxhash64('shingle')\n") == []
+    assert _family_hashes("_PORTABLE = _Family(\n    token_hash=F.md5,\n)\n") == []
