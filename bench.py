@@ -50,8 +50,7 @@ def bench_dir(src_sf_dir: str) -> str:
     """Resolve the directory the bench reads: a presplit multi-file copy of
     the driver fixtures (sources/presplit.py — the realistic many-files
     layout; single-file single-row-group parquet caps every scan at one
-    task). SPARK_GRAFT_PRESPLIT=off pins the raw layout. Both Spark and the
-    DuckDB baseline (bench_compare.py) read the same resolved dir."""
+    task). SPARK_GRAFT_PRESPLIT=off pins the raw layout."""
     if os.environ.get("SPARK_GRAFT_PRESPLIT", "") == "off":
         return src_sf_dir
     from metrics_database_cron_script_spark.sources.presplit import presplit
@@ -136,8 +135,7 @@ def noise_control(spark, sf_dir: str) -> dict:
     +15%), the delta is machine state, not plan drift.
 
     - floor_job_s: median of 15 one-partition count() actions on a
-      prebuilt 1-row range — the per-job scheduler floor (same probe
-      protocol as bench_compare.py).
+      prebuilt 1-row range — the per-job scheduler floor.
     - cpu_canary_s: min of 5 fixed numpy matmul loops — pure CPU/memory
       bandwidth, engine-independent.
     - scan_canary_s: min of 3 full-table sum() scans of the orders

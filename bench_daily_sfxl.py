@@ -90,6 +90,56 @@ def _tree_digest(root: str) -> str:
     return h.hexdigest()
 
 
+def build_fastpath_state(spark, docs, root, provenance):
+    """verified_star_state(portable=False) — the xxhash64 fast path — with
+    parquet round-trips between stages so the shingle relation is computed
+    once. The store (8-byte hashed shingles) doubles as the signature
+    input, so NO raw-string relation is ever materialized: the portable
+    md5 pipeline's min(string) aggregation falls back to sort-based
+    aggregation and sort-spilled this 550 M-row build off a 250 GB disk;
+    min(long) hash-aggregates in place. The sf0.01 oracle checks the
+    portable mode; refresh ≡ full holds per mode. `provenance` is written
+    next to the state as its reuse key. Returns per-stage walls."""
+    from metrics_database_cron_script_spark.functions import dedup as D
+
+    shutil.rmtree(root, ignore_errors=True)
+    walls = {}
+    t0 = time.perf_counter()
+    D.word_shingles(docs, hashed=True).write.parquet(
+        os.path.join(root, "store")
+    )
+    walls["store_s"] = round(time.perf_counter() - t0, 3)
+    store = spark.read.parquet(os.path.join(root, "store"))
+    t0 = time.perf_counter()
+    nh = D.MINHASH_DEFAULTS.num_hashes
+    D.lsh_bands(D.minhash_signatures(store, nh), nh).write.parquet(
+        os.path.join(root, "bands")
+    )
+    walls["bands_s"] = round(time.perf_counter() - t0, 3)
+    bands = spark.read.parquet(os.path.join(root, "bands"))
+    t0 = time.perf_counter()
+    D.scored_star_edges(bands, store).write.parquet(
+        os.path.join(root, "edges")
+    )
+    walls["edges_s"] = round(time.perf_counter() - t0, 3)
+    walls["total_s"] = round(sum(walls.values()), 3)
+    # a later bench run must not silently refresh a batch against state
+    # built from a DIFFERENT corpus (underscore prefix — Spark readers
+    # ignore the file)
+    with open(os.path.join(root, "_provenance.json"), "w") as fh:
+        json.dump(provenance, fh)
+    return walls
+
+
+def state_provenance(root):
+    """The provenance marker written by build_fastpath_state, or None."""
+    p = os.path.join(root, "_provenance.json")
+    if not os.path.exists(p):
+        return None
+    with open(p) as fh:
+        return json.load(fh)
+
+
 def run_streaming_twin(spark, sfxl: str, phase) -> None:
     """Round-7 verdict item 5: the SAME daily work through the STREAMING
     path at SFXL, with sink equality asserted against the batch
@@ -262,7 +312,6 @@ def main() -> None:
     tracer = Tracer()
     layers.install(tracer)
 
-    from bench_neardup_sfxl import build_fastpath_state
     from metrics_database_cron_script_spark import get_spark
     from metrics_database_cron_script_spark.functions import bloom as B
     from metrics_database_cron_script_spark.functions import dedup as D
@@ -402,11 +451,8 @@ def main() -> None:
     batch = ddocs.filter(F.col("doc_id") >= batch_lo)
     n_corpus, n_batch = corpus.count(), batch.count()
 
-    # state: the verified-star state over the corpus (reuse the other
-    # bench's build when present — identical builder) + the seen-hash set
-    # for exact dedup
-    from bench_neardup_sfxl import state_provenance
-
+    # state: the verified-star state over the corpus (reused when its
+    # provenance matches) + the seen-hash set for exact dedup
     vstate = os.path.join(here, ".bench_cache", "decade-vstate")
     provenance = {
         "decade_dir": os.path.realpath(decade_dir),

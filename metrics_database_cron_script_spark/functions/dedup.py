@@ -493,7 +493,7 @@ def _near_dups(
     pairs = _band_pairs(banded, ("sz",))
     if not verify:
         return pairs.select("doc_a", "doc_b")
-    return verified_jaccard(shingles, pairs)
+    return verified_jaccard(fam.store(shingles), pairs)
 
 
 def minhash_near_dups(
@@ -1297,8 +1297,8 @@ def minhash_components_verified(
     so over-merging is gone, but a member whose hub link is a banding
     false positive loses its transitive path through that hub even if it
     has a true near-dup elsewhere in the bucket — cluster recall can dip
-    below the unverified star path. `bench_neardup_sfxl.py` measures both
-    deltas at 12.8 M docs."""
+    below the unverified star path. BENCH_NEARDUP_SFXL.json records both
+    deltas at 12.8 M docs (its script is in git history at ffd3cd8)."""
     own_persist = shingles is None
     if own_persist:
         shingles = word_shingles(docs, hashed=False).persist()

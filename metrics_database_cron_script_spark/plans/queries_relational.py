@@ -507,7 +507,7 @@ def c_topk_per_group(spark, sf_dir):
     # threshold two-pass 14.4 s (pass 1 pays the same window). What DOES
     # close the DuckDB gap is the table LAYOUT: lineitem clustered by
     # l_suppkey (operators/layout.clustered_write; applied to the shared
-    # SFXL copy by bench_sfxl.ensure_clustered_lineitem) lets the window
+    # SFXL copy by bench_sfxl.py, in git history at ffd3cd8) lets the window
     # sort's TimSort collapse on presorted runs — 11.0 s → 4.8 s, at or
     # below the DuckDB wall on the same files, with q1/q9/q21 unchanged or
     # slightly better. The plan here stays layout-agnostic.

@@ -1,12 +1,15 @@
 """Guard for the root-level bench and generator scripts, which no other
-test runs (most need SFXL data): each one imports, and every keyword it
-passes to a public function of the engine's core modules names a real
-parameter of that function. Starts no Spark."""
+test runs (most need SFXL data): each one imports, every import anywhere
+in it (function-local ones too) of a root script or a package module
+resolves, and every keyword it passes to a public function of the
+engine's core modules names a real parameter of that function. Starts no
+Spark."""
 
 from __future__ import annotations
 
 import ast
 import importlib
+import importlib.util
 import inspect
 import pathlib
 
@@ -19,6 +22,43 @@ CHECKED = {
     for m in ("pipelines", "state", "functions.dedup", "functions.bloom", "functions.multimodal")
 }
 SCRIPTS = sorted(p.stem for pat in ("bench_*.py", "gen_*.py") for p in ROOT.glob(pat))
+
+
+def _local(module: str) -> bool:
+    """The module is the repo's own (a root script, the package, a
+    perfbench module), or nothing resolves it: a deleted root script."""
+    spec = importlib.util.find_spec(module.split(".")[0])
+    return spec is None or ROOT in pathlib.Path(spec.origin or "").resolve().parents
+
+
+def _unresolved_imports(source: str, label: str) -> list[str]:
+    """`label:line: ...` for every import in the source, at any depth
+    (function-local ones too), of a repo module that fails, or that names
+    something the module does not have."""
+    bad = []
+    for node in ast.walk(ast.parse(source)):
+        if isinstance(node, ast.ImportFrom) and node.module and not node.level:
+            targets = [(node.module, [a.name for a in node.names])]
+        elif isinstance(node, ast.Import):
+            targets = [(a.name, []) for a in node.names]
+        else:
+            continue
+        for mod, names in targets:
+            if not _local(mod):
+                continue
+            try:
+                m = importlib.import_module(mod)
+            except ImportError:
+                bad.append(f"{label}:{node.lineno}: {mod} does not import")
+                continue
+            for name in names:
+                if hasattr(m, name):
+                    continue
+                try:
+                    importlib.import_module(f"{mod}.{name}")
+                except ImportError:
+                    bad.append(f"{label}:{node.lineno}: {mod}.{name} does not exist")
+    return bad
 
 
 def _stale_keywords(source: str, label: str) -> list[str]:
@@ -68,6 +108,7 @@ def _stale_keywords(source: str, label: str) -> list[str]:
 def test_script_imports_and_passes_real_keywords(script):
     importlib.import_module(script)
     path = ROOT / f"{script}.py"
+    assert _unresolved_imports(path.read_text(), path.name) == []
     assert _stale_keywords(path.read_text(), path.name) == []
 
 
@@ -83,4 +124,21 @@ def test_stale_keyword_is_reported():
         f"x.py:3: {PKG}.pipelines.run_batch(timer=)",
         f"x.py:4: {PKG}.functions.dedup.connected_components(walls=)",
         f"x.py:5: {PKG}.functions.dedup.no_such_function does not exist",
+    ]
+
+
+def test_unresolved_import_is_reported():
+    src = (
+        "import json\n"
+        "def main():\n"
+        "    from bench_no_such_script import helper\n"
+        f"    from {PKG}.functions import dedup as D, no_such_module\n"
+        f"    from {PKG}.functions.dedup import word_shingles, no_such_name\n"
+        f"    import {PKG}.no_such_module\n"
+    )
+    assert _unresolved_imports(src, "x.py") == [
+        "x.py:3: bench_no_such_script does not import",
+        f"x.py:4: {PKG}.functions.no_such_module does not exist",
+        f"x.py:5: {PKG}.functions.dedup.no_such_name does not exist",
+        f"x.py:6: {PKG}.no_such_module does not import",
     ]

@@ -223,3 +223,39 @@ def test_rag_chunks_plan_is_shuffle_free(spark):
 
     plan = _plan(QUERIES["x_rag_chunks"](spark, SF_SMOKE))
     assert "Exchange" not in plan, plan
+
+
+def _seq(seq) -> list:
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def test_portable_near_dups_verify_on_8_byte_shingles(spark):
+    """The verification joins of `minhash_near_dups_portable` (those with
+    an input carrying `shingle`) key and ship the store's 8-byte image of
+    the shingles, never the raw n-word strings."""
+    from metrics_database_cron_script_spark.functions.dedup import (
+        minhash_near_dups_portable,
+    )
+    from metrics_database_cron_script_spark.sources import load_table
+
+    df = minhash_near_dups_portable(load_table(spark, SF_SMOKE, "documents"))
+    plan = df._jdf.queryExecution().executedPlan()
+    checked, stack = 0, [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        kids = _seq(node.children())
+        stack += kids
+        shipped = [
+            a.dataType().simpleString()
+            for k in kids
+            for a in _seq(k.output())
+            if a.name() == "shingle"
+        ]
+        if "Join" in node.nodeName() and shipped:
+            keys = _seq(node.leftKeys()) + _seq(node.rightKeys())
+            key_types = [e.dataType().simpleString() for e in keys]
+            assert "string" not in shipped + key_types, node.toString()
+            checked += 1
+    assert checked == 2, plan.toString()
