@@ -30,7 +30,9 @@ daily batch is the final day of events / the top replica of docs.
 Usage:
     python bench_daily_sfxl.py [sfxl_dir] [--decade DIR]
 
-Writes BENCH_DAILY_SFXL.json (one JSON object, indent=1).
+Writes BENCH_DAILY_SFXL.json (one JSON object, indent=1), merged over the
+committed one, only when the run measured the dataset that file records
+(`write_artifact`); any other run prints its result and writes nothing.
 """
 
 from __future__ import annotations
@@ -138,6 +140,33 @@ def state_provenance(root):
         return None
     with open(p) as fh:
         return json.load(fh)
+
+
+def write_artifact(path: str, out: dict, totals: dict) -> bool:
+    """Merge `out` over the artifact at `path` and write it, only when the
+    artifact records the dataset this run measured: the same `corpus` row
+    totals (`events_total`, `docs_total`) as `totals`. Any other run (a
+    fixture-scale smoke run, say) prints its result and leaves the file
+    alone; to record a new dataset, remove the artifact first. Returns
+    whether the file was written."""
+    merged = dict(out)
+    if os.path.exists(path):
+        with open(path) as fh:
+            prior = json.load(fh)
+        recorded = prior.get("corpus", {})
+        if any(recorded.get(k) != totals[k] for k in ("events_total", "docs_total")):
+            print(json.dumps(out, indent=1, default=str))
+            print(
+                f"{path} records another dataset ({recorded.get('events_total')}"
+                f" events, {recorded.get('docs_total')} docs); not written",
+                file=sys.stderr,
+            )
+            return False
+        merged = {**prior, **out}
+    with open(path, "w") as fh:
+        json.dump(merged, fh, indent=1, default=str)
+    print(json.dumps(merged, indent=1, default=str))
+    return True
 
 
 def run_streaming_twin(spark, sfxl: str, phase) -> None:
@@ -327,19 +356,16 @@ def main() -> None:
         out[key] = obj
         print(json.dumps({key: obj}, default=str), file=sys.stderr, flush=True)
 
+    artifact = os.path.join(here, "BENCH_DAILY_SFXL.json")
     if streaming_only:
-        # merge into the committed artifact: keep every already-measured
-        # batch phase, add/replace only the streaming-twin rows
-        artifact = os.path.join(here, "BENCH_DAILY_SFXL.json")
-        if os.path.exists(artifact):
-            with open(artifact) as fh:
-                prior = json.load(fh)
-            prior.update(out)
-            out.update(prior)
+        # keep every already-measured batch phase, add/replace only the
+        # streaming-twin rows
         run_streaming_twin(spark, sfxl, phase)
-        with open(artifact, "w") as fh:
-            json.dump(out, fh, indent=1, default=str)
-        print(json.dumps(out, indent=1, default=str))
+        totals = {
+            "events_total": load_table(spark, sfxl, "events").count(),
+            "docs_total": load_table(spark, sfxl, "documents").count(),
+        }
+        write_artifact(artifact, out, totals)
         return
 
     scratch = os.path.join(here, ".bench_cache", "daily-sfxl")
@@ -715,17 +741,9 @@ def main() -> None:
     })
 
     out["replay_noop"] = ok
-    # merge-write the artifact like the --streaming-only branch: keep the
-    # streaming-twin rows already measured, replace every batch phase
-    artifact = os.path.join(here, "BENCH_DAILY_SFXL.json")
-    merged: dict = {}
-    if os.path.exists(artifact):
-        with open(artifact) as fh:
-            merged = json.load(fh)
-    merged.update(out)
-    with open(artifact, "w") as fh:
-        json.dump(merged, fh, indent=1, default=str)
-    print(json.dumps(merged, indent=1, default=str))
+    # keep the streaming-twin rows already measured, replace every batch
+    # phase
+    write_artifact(artifact, out, out["corpus"])
     if not ok:
         sys.exit(1)
 

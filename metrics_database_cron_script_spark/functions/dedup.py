@@ -1305,7 +1305,7 @@ def minhash_components_verified(
     try:
         banded = _minhash_bands(shingles, _PORTABLE, num_hashes, band_size)[0]
         edges = star_edges(banded, _BAND)
-        scored = verified_jaccard(shingles, edges)
+        scored = verified_jaccard(_PORTABLE.store(shingles), edges)
         good = scored.filter(F.col("jaccard") >= min_jaccard).select(
             "doc_a", "doc_b"
         )
@@ -1460,7 +1460,7 @@ def minhash_probe_index_portable(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    return verified_jaccard(corpus_sh.unionByName(batch_sh), pairs)
+    return verified_jaccard(_PORTABLE.store(corpus_sh.unionByName(batch_sh)), pairs)
 
 
 def _minhash_bands(

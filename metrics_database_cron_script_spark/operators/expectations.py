@@ -41,9 +41,9 @@ def observe_rules(df: DataFrame, rules: dict[str, Column] | None = None):
     (df_with_observe_node, resolve) where `resolve()` — called after SOME
     action has executed the returned frame — yields
     {'rows': n, <rule>: violations...}; with no rules it counts rows only.
-    The single-pass audit primitive behind `validate`, the versioned
-    table's write-audit-publish and the state appends. Counters are
-    `count`/`count_if`, so an empty frame resolves to zeros, not NULLs."""
+    The single-pass audit primitive behind `validate` and the state
+    appends. Counters are `count`/`count_if`, so an empty frame resolves
+    to zeros, not NULLs."""
     rules = rules or {}
     if "rows" in rules:
         raise ValueError(

@@ -91,8 +91,8 @@ def compact(
     # deleted (state.recover): a crash between the two swap renames
     # leaves the leaf's only copy under staging/old, and a blind reap
     # would destroy it. This op assumes the same single-maintenance-writer
-    # window as the rest of state.py; the snapshot-isolated variant is
-    # VersionedSnapshot.compact_partitions.
+    # window as the rest of state.py (a snapshot-isolated variant on
+    # VersionedSnapshot is in git history at 65b28ee).
     base = path.rstrip("/")
     recover(base)
     staging = f"{base}.__compact-{uuid.uuid4().hex[:8]}"

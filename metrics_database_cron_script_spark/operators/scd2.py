@@ -7,8 +7,9 @@ full validity history: every attribute change closes the current row
 that merge as a single-pass batch operator:
 
 - history rows (``is_current = false``) pass through untouched — at scale
-  they live in closed partitions the merge never rewrites (pair this with
-  ``VersionedSnapshot.merge_keep_latest``'s partition pruning);
+  they live in closed partitions the merge never rewrites (the
+  partition-pruned keep-latest merge that once paired with this is in git
+  history at 65b28ee);
 - the current slice FULL-OUTER-joins the change batch on the business key —
   ONE shuffle by key (or a broadcast when stats say the batch is small; no
   hint pinned, exactly per the de-pinning rule);

@@ -564,9 +564,10 @@ def update_embedding_index(
     Probes (similarity.ivf_index_probe) read only probed cell dirs —
     static partition pruning; equivalence with a fresh same-centers probe
     is gated in tests/test_pipelines.py. Single-writer like all P1-P7
-    state; concurrent writers should wrap the index in
-    versioned.VersionedSnapshot. Skips when the source has no embeddings
-    table."""
+    state: `versioned.VersionedSnapshot` rewrites a whole snapshot per
+    commit, so it does not fit this cell-partitioned index (its
+    partition-pruned merge is in git history at 65b28ee). Skips when the
+    source has no embeddings table."""
     import json as _json
 
     from metrics_database_cron_script_spark.functions import similarity as S

@@ -3174,9 +3174,9 @@ def x_bloom_dedup(spark, sf_dir):
     only sees true duplicates plus an fpp sliver of the batch while the
     result — and therefore the SQL oracle — is identical to the plain
     anti-join. Sketch sizing reads the seen-key count (one aggregate job
-    here; a production cron reads it from snapshot stats, e.g.
-    VersionedSnapshot history). Reference anchor: R14's idempotent insert
-    (updatescript.py:62), scaled."""
+    here; a production cron would keep it with the seen-set state).
+    Reference anchor: R14's idempotent insert (updatescript.py:62),
+    scaled."""
     from metrics_database_cron_script_spark.functions.bloom import (
         bloom_pruned_anti_join,
     )

@@ -25,8 +25,8 @@ The control plane runs no Spark job:
   that schema and skips Parquet footer inference, which is a one-task
   Spark job per read; a table written before the marker existed falls
   back to inference. The marker is invisible to Spark's file source and
-  to `*.parquet` globs. `versioned.VersionedSnapshot` uses the same
-  marker.
+  to `*.parquet` globs. `versioned.VersionedSnapshot` writes the same
+  marker into each version it commits.
 - Scalar markers (the watermark, the P7/P8 frontiers) are one-row Parquet
   files written and read on the driver with pyarrow (`commit_scalar`,
   `read_scalar`), in the layout Spark would write (INT64 micros,
@@ -65,9 +65,12 @@ These primitives assume the reference's own operating model: ONE writer
 (a daily cron). Within that writer, appends to DISJOINT sinks may run
 from concurrent threads of one session: they touch no session conf and
 take no lock. For concurrent writers use
-`versioned.VersionedSnapshot` — same keep-latest MERGE semantics under
-optimistic concurrency (exclusive-create commit log, conflict-detect,
-retry), the hand-rolled form of what Delta/Iceberg provide.
+`versioned.VersionedSnapshot.merge_keep_latest`: the keep-latest MERGE
+under optimistic concurrency (exclusive-create commit log,
+conflict-detect, retry). The two break an order-column tie differently:
+`snapshot_overwrite` keeps the incoming row, `merge_keep_latest` the
+stored one. `VersionedSnapshot`'s time travel, change feed, restore,
+vacuum and partition-pruned merge are in git history at 65b28ee.
 """
 
 from __future__ import annotations
@@ -92,12 +95,11 @@ SCALAR_FILE = "part-00000.parquet"
 def write_schema_marker(data_dir: str, schema: StructType) -> None:
     """Persist the schema readers of `data_dir` should use, inside it.
     Underscore-prefixed files are invisible to Spark's file source, and
-    hardlinked carries (`versioned._link_tree`, compaction's swap) move
-    the marker with the data. Under schema evolution it is what makes
-    hardlink carry-forward safe: untouched files keep their old schema,
-    and the explicit-schema read NULL-pads added columns / widens
-    promoted types per file instead of letting footer inference pick a
-    random file's schema.
+    compaction's swap moves the marker with the data. Under schema
+    evolution it is what makes a table of mixed-schema files safe to
+    read: untouched files keep their old schema, and the explicit-schema
+    read NULL-pads added columns / widens promoted types per file instead
+    of letting footer inference pick a random file's schema.
 
     Every field is recorded nullable, at every depth: Spark reads a file
     source as nullable whatever the marker says, and the writer's

@@ -220,6 +220,6 @@ def run_streaming_neardup(
         # the memory sink is already materialized; the staging dir is
         # deleted on return, so verification must not re-read it
         shingles = word_shingles(docs, hashed=False)
-        return verified_jaccard(shingles, pairs)
+        return verified_jaccard(_PORTABLE.store(shingles), pairs)
     finally:
         shutil.rmtree(staging, ignore_errors=True)

@@ -1,11 +1,17 @@
-"""Streaming → idempotent parquet sink via foreachBatch.
+"""Streaming sinks into the engine's state layer via foreachBatch.
 
-Connects Structured Streaming to the engine's state layer: each micro-batch
-lands through `state.idempotent_append`, so the sink is exactly-once at the
-row level even across stream restarts and replayed batches (the checkpoint
-gives at-least-once delivery; the anti-join turns it into exactly-once —
-the same guarantee the reference fakes with per-row `find_one` probes,
-updatescript.py:62)."""
+- `stream_to_idempotent_sink`: each micro-batch lands through
+  `state.idempotent_append`, so the sink is exactly-once at the row level
+  even across stream restarts and replayed batches (the checkpoint gives
+  at-least-once delivery; the anti-join turns it into exactly-once — the
+  same guarantee the reference fakes with per-row `find_one` probes,
+  updatescript.py:62).
+- `stream_rollup_maintenance`: an epoch-guarded aggregate merge into the
+  daily rollup.
+
+The keep-latest streaming sink into a `versioned.VersionedSnapshot`, with
+its hash-bucketed partition-pruned merge, had no caller in the package; it
+is in git history at 65b28ee."""
 
 from __future__ import annotations
 
@@ -50,90 +56,6 @@ def stream_to_idempotent_sink(
     return (
         spark.read.parquet(sink_path).count() if os.path.exists(sink_path) else 0
     )
-
-
-def stream_to_versioned_snapshot(
-    spark: SparkSession,
-    sf_dir: str,
-    state_path: str,
-    checkpoint_dir: str,
-    key: str = "user_id",
-    order_cols: list[str] | None = None,
-    query_name: str = "stream_versioned",
-    n_buckets: int | None = None,
-):
-    """Drain the events stream into a `versioned.VersionedSnapshot` via
-    keep-latest MERGE per micro-batch (R9 upsert on the streaming surface).
-
-    `n_buckets` switches the store to HASH-BUCKET partitioning
-    (`__bucket = pmod(xxhash64(key), n_buckets)` — functionally dependent
-    on the key, as the partitioned MERGE requires) and each micro-batch
-    commit to `merge_keep_latest_partitioned`: only buckets containing
-    batch keys are re-deduped and rewritten, the rest carry forward by
-    hardlink. At 100 TB this is the difference between a micro-batch
-    commit costing O(snapshot) and O(batch-touched shards) — the same
-    sharded-dimension-store layout a keyed state backend uses.
-
-    Exactly-once here needs NO epoch guard: keep-latest merge is IDEMPOTENT
-    (re-merging a replayed batch's rows reproduces the same winners), and
-    the OCC commit protocol makes each merge atomic — a foreachBatch retry
-    after a mid-merge crash simply re-runs the read-modify-write. Unlike
-    `stream_rollup_maintenance` (an aggregate merge, NOT idempotent, hence
-    its epoch/lineage machinery), this sink survives checkpoint wipes and
-    concurrent maintenance writers by construction.
-
-    Returns the final snapshot DataFrame (engine timestamp contract: the
-    snapshot stores and returns `ts` as TIMESTAMP_NTZ, like the batch
-    catalog — the stream carries LTZ only because `withWatermark` requires
-    it, and the two are wall-clock-identical under the pinned UTC session
-    timezone)."""
-    from pyspark.sql import functions as F
-
-    from metrics_database_cron_script_spark.sources.tables import TABLES
-    from metrics_database_cron_script_spark.versioned import VersionedSnapshot
-
-    cols = order_cols or ["ts", "event_id"]
-    table = VersionedSnapshot(spark, state_path)
-    # single source of truth for the snapshot schema: the catalog's declared
-    # events schema (sources/tables.py), not a second hand-written DDL
-    declared = TABLES["events"]
-
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        normalized = batch_df.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in declared.fields]
-        )
-        if n_buckets:
-            bucket_expr = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))
-            bucketed = normalized.withColumn("__bucket", bucket_expr)
-            table.merge_keep_latest_partitioned(
-                bucketed,
-                key=key,
-                order_cols=cols,
-                partition_col="__bucket",
-                # lets an existing UNpartitioned snapshot upgrade in place:
-                # the same derivation assigns old rows their bucket
-                derive=bucket_expr,
-            )
-        else:
-            table.merge_keep_latest(normalized, key=key, order_cols=cols)
-
-    events = read_events_stream(spark, sf_dir)
-    q = (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # drop unconditionally (no-op when absent): a previously BUCKETED state
-    # read back by an unbucketed run would otherwise leak the internal
-    # __bucket partition column into the declared-schema return contract
-    return table.read(declared).drop("__bucket")
 
 
 def stream_rollup_maintenance(

@@ -142,3 +142,30 @@ def test_unresolved_import_is_reported():
         f"x.py:5: {PKG}.functions.dedup.no_such_name does not exist",
         f"x.py:6: {PKG}.no_such_module does not import",
     ]
+
+
+def test_daily_bench_writes_only_the_dataset_its_artifact_records(tmp_path):
+    """bench_daily_sfxl.write_artifact merges a run over the artifact only
+    when the run's corpus totals are the ones the artifact records; a run
+    on any other dataset (a fixture-scale smoke run) leaves the file as it
+    was. With no artifact yet, the run is written."""
+    import json
+
+    from bench_daily_sfxl import write_artifact
+
+    path = tmp_path / "BENCH_DAILY_SFXL.json"
+    recorded = {"events_total": 25_600_000, "docs_total": 1_280_000}
+    committed = {"corpus": recorded, "replay_noop": True, "streaming_rollup": {"ok": 1}}
+    path.write_text(json.dumps(committed))
+
+    smoke = {"corpus": {"events_total": 100, "docs_total": 10}, "replay_noop": False}
+    assert not write_artifact(str(path), smoke, smoke["corpus"])
+    assert json.loads(path.read_text()) == committed
+
+    rerun = {"corpus": dict(recorded), "replay_noop": False}
+    assert write_artifact(str(path), rerun, recorded)
+    assert json.loads(path.read_text()) == {**committed, **rerun}
+
+    fresh = tmp_path / "fresh.json"
+    assert write_artifact(str(fresh), smoke, smoke["corpus"])
+    assert json.loads(fresh.read_text()) == smoke

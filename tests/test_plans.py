@@ -3,6 +3,9 @@ must be visible in `explain` output, not just hoped for (SURVEY.md §4.2)."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.sql import functions as F
+
 from tests.conftest import SF_SMOKE
 
 
@@ -259,3 +262,50 @@ def test_portable_near_dups_verify_on_8_byte_shingles(spark):
             assert "string" not in shipped + key_types, node.toString()
             checked += 1
     assert checked == 2, plan.toString()
+
+
+@pytest.mark.parametrize(
+    "site",
+    [
+        "minhash_components_verified",
+        "minhash_probe_index_portable",
+        "run_streaming_neardup",
+    ],
+)
+def test_portable_verification_sites_pass_8_byte_shingles(spark, monkeypatch, site):
+    """Each portable caller of `verified_jaccard` hands it the store's
+    8-byte image of the shingles (`shingle` bigint), never the raw n-word
+    strings. The wrapper records the type and stops the call there; the
+    stream drain is stubbed, only its verification step is under test."""
+    from metrics_database_cron_script_spark.functions import dedup as D
+    from metrics_database_cron_script_spark.sources import load_table
+    from metrics_database_cron_script_spark.streaming import neardup as N
+
+    class Seen(Exception):
+        pass
+
+    seen = []
+
+    def spy(shingles, pairs):
+        seen.append(shingles.schema["shingle"].dataType.simpleString())
+        raise Seen
+
+    monkeypatch.setattr(D, "verified_jaccard", spy)
+    monkeypatch.setattr(N, "verified_jaccard", spy)
+    monkeypatch.setattr(
+        N,
+        "run_streaming_neardup_on_dir",
+        lambda spark, *a: spark.createDataFrame(
+            [], "doc_a long, doc_b long, __n_batches long"
+        ),
+    )
+    docs = load_table(spark, SF_SMOKE, "documents")
+    odd = F.col("doc_id") % 2 == 1
+    with pytest.raises(Seen):
+        if site == "minhash_components_verified":
+            D.minhash_components_verified(docs)
+        elif site == "minhash_probe_index_portable":
+            D.minhash_probe_index_portable(docs.filter(~odd), docs.filter(odd))
+        else:
+            N.run_streaming_neardup(spark, SF_SMOKE)
+    assert seen == ["bigint"]

@@ -95,29 +95,6 @@ def test_merge_keep_latest_tie_keeps_stored_row(spark, tmp_path):
     assert t.read().collect()[0]["v"] == "newer"
 
 
-def test_merge_keep_latest_partitioned_tie_keeps_stored_row(spark, tmp_path):
-    from metrics_database_cron_script_spark.versioned import VersionedSnapshot
-
-    t = VersionedSnapshot(spark, str(tmp_path / "psnap"))
-    t.merge_keep_latest_partitioned(
-        spark.createDataFrame(
-            [(1, 5, "d1", "stored")], "k int, ts int, day string, v string"
-        ),
-        key="k",
-        order_cols=["ts"],
-        partition_col="day",
-    )
-    t.merge_keep_latest_partitioned(
-        spark.createDataFrame(
-            [(1, 5, "d1", "batch")], "k int, ts int, day string, v string"
-        ),
-        key="k",
-        order_cols=["ts"],
-        partition_col="day",
-    )
-    assert [r["v"] for r in t.read().collect()] == ["stored"]
-
-
 def test_score_partitions_guard_on_nonlocal_paths(tmp_path):
     """Plan construction must not FileNotFoundError for non-local sf_dirs
     (hdfs://, s3a://): sizing falls back to scan-width parallelism."""

@@ -192,73 +192,6 @@ def test_stream_rollup_accepts_legacy_path_lineage_once(spark, tmp_path):
     assert "lineage" in str(ei.value) or "query id" in str(ei.value)
 
 
-def test_stream_to_versioned_snapshot_keep_latest_and_replay_safe(spark, tmp_path):
-    """The OCC keep-latest streaming sink must (a) converge to the batch
-    upsert_snapshot result, and (b) be replay-safe WITHOUT epoch guards: a
-    full re-stream under a FRESH checkpoint (everything re-delivered) leaves
-    the snapshot unchanged — merge idempotence, not bookkeeping."""
-    from metrics_database_cron_script_spark.operators.reference_ops import (
-        upsert_snapshot,
-    )
-    from metrics_database_cron_script_spark.sources import load_table
-    from metrics_database_cron_script_spark.streaming.sink import (
-        stream_to_versioned_snapshot,
-    )
-    from metrics_database_cron_script_spark.versioned import VersionedSnapshot
-
-    state = str(tmp_path / "snap")
-    got = stream_to_versioned_snapshot(
-        spark, SF_SMOKE, state, str(tmp_path / "ck1"), query_name="t_vsnap1"
-    )
-
-    def canon(df):
-        return sorted(map(tuple, df.select("user_id", "event_id").collect()))
-
-    want = canon(upsert_snapshot(load_table(spark, SF_SMOKE, "events")))
-    assert canon(got) == want
-
-    v_before = VersionedSnapshot(spark, state).version()
-    again = stream_to_versioned_snapshot(
-        spark, SF_SMOKE, state, str(tmp_path / "ck2"), query_name="t_vsnap2"
-    )
-    assert canon(again) == want  # replay merged, nothing duplicated/lost
-    assert VersionedSnapshot(spark, state).version() > v_before  # new commits, same content
-
-
-def test_stream_to_versioned_snapshot_bucketed_is_o_delta(spark, tmp_path):
-    """n_buckets switches the snapshot to hash-bucket partitioning: same
-    keep-latest result, key-bucket FD by construction, and the store is
-    physically bucket-partitioned so a small batch's commit rewrites only
-    its buckets (carry-forward mechanics proven in test_versioned)."""
-    import os
-
-    from metrics_database_cron_script_spark.operators.reference_ops import (
-        upsert_snapshot,
-    )
-    from metrics_database_cron_script_spark.sources import load_table
-    from metrics_database_cron_script_spark.streaming.sink import (
-        stream_to_versioned_snapshot,
-    )
-    from metrics_database_cron_script_spark.versioned import VersionedSnapshot
-
-    state = str(tmp_path / "bsnap")
-    got = stream_to_versioned_snapshot(
-        spark, SF_SMOKE, state, str(tmp_path / "bck"),
-        query_name="t_vsnap_b", n_buckets=8,
-    )
-
-    def canon(df):
-        return sorted(map(tuple, df.select("user_id", "event_id").collect()))
-
-    want = canon(upsert_snapshot(load_table(spark, SF_SMOKE, "events")))
-    assert canon(got) == want
-    assert "__bucket" not in got.columns  # partition col is an internal detail
-    t = VersionedSnapshot(spark, state)
-    d = t._resolve_data_dir(t.version())
-    buckets = {n for n in os.listdir(d) if n.startswith("__bucket=")}
-    assert len(buckets) > 1  # physically bucket-partitioned store
-
-
 def test_stream_to_idempotent_sink_empty_stream_returns_zero(spark, tmp_path):
     """Regression: an all-empty stream publishes nothing (staged append
     drops empty batches), so the sink never exists — the drain must
